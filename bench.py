@@ -7,8 +7,10 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 The headline set covers every engine subsystem: scan/filter/agg (the
 reference's lineage), joins/windows/top-k (relational closure), streaming
 windows, and the LLM-data ops. Deliberately EXCLUDED: embedded-Derby sinks
-(stream_upsert, stream_cdc_deletes — they measure Derby's single-threaded
-MERGE, not the engine), the quadratic exact verifiers (dedup_ngram,
+(stream_upsert, stream_cdc_deletes — they time a Derby target; with the
+replica's key index they take ~16 s and ~6 s at sf0.1 on 4 vCPUs, the
+first including a cold session, and perfbench's cdc_apply workload times
+that path), the quadratic exact verifiers (dedup_ngram,
 text_containment — ground truth for the banded/blocked paths, not a
 production shape), and the Python-UDF API demos (udf_* — they measure the
 Arrow transfer lane the docstrings already cost out). Each query is fully materialized via a

@@ -180,7 +180,8 @@ def ddl_for(
         return "mediumblob" if mysql else "blob"
     if isinstance(dt, T.DateType):
         return "date"
-    if isinstance(dt, T.TimestampType):
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        # the reference's TIMESTAMP column is zone-less, as TIMESTAMP_NTZ is
         return "datetime" if mysql else "timestamp"
     raise ValueError(f"no DDL mapping for {dt}")
 

@@ -210,6 +210,25 @@ def _execute_jdbc(spark: SparkSession, url: str, statements: list[str]) -> None:
         conn.close()
 
 
+def _recreate_table(spark: SparkSession, url: str, qtable: str, ddl: str) -> None:
+    """DROP TABLE (ignoring failure: the table may be absent — the
+    reference ignores that too) then CREATE on one connection.
+    Connectivity/auth errors propagate from getConnection; if a DROP
+    failure was real (e.g. lock timeout), the CREATE raises the accurate
+    'already exists' loudly."""
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+    try:
+        stmt = conn.createStatement()
+        try:
+            stmt.execute(f"DROP TABLE {qtable}")
+        except Exception:
+            pass
+        stmt.execute(ddl)
+        stmt.close()
+    finally:
+        conn.close()
+
+
 def jdbc_sync_table(
     spark: SparkSession,
     df: DataFrame,
@@ -260,22 +279,7 @@ def jdbc_sync_table(
     ddl = create_table_ddl(
         table, out.schema, varchar_lengths, flavor=flavor, quote=quote
     )
-    # One connection for drop+create: connectivity/auth errors propagate
-    # from getConnection; only the DROP statement itself is allowed to
-    # fail (table absent — the reference ignores that too). If a DROP
-    # failure was real (e.g. lock timeout), the CREATE right after raises
-    # the accurate 'already exists' loudly.
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(f"DROP TABLE {qtable}")
-        except Exception:
-            pass
-        stmt.execute(ddl)
-        stmt.close()
-    finally:
-        conn.close()
+    _recreate_table(spark, url, qtable, ddl)
     # NULL-string binding: Spark's Derby dialect types every NULL string
     # as CLOB (setNull(Types.CLOB)), which Derby rejects against the
     # VARCHAR columns the reference DDL declares (ERROR 22005) — one null
@@ -329,17 +333,7 @@ def jdbc_sync_table(
         else quote_identifier(c, quote)
         for c in out.columns
     )
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(f"DROP TABLE {qshadow}")
-        except Exception:
-            pass
-        stmt.execute(shadow_ddl)
-        stmt.close()
-    finally:
-        conn.close()
+    _recreate_table(spark, url, qshadow, shadow_ddl)
     jdbc_writer(out, url, qshadow, props=props, mode="append")
     _execute_jdbc(
         spark,
@@ -370,51 +364,10 @@ def upsert_statement(table: str, columns: list[str], quote: str = "`") -> str:
 
 
 def merge_statement(
-    target: str,
-    source: str,
-    columns: list[str],
-    key_columns: list[str],
-    quote: str = '"',
+    target: str, source: str, columns: list[str], key_columns: list[str], quote: str = '"'
 ) -> str:
-    """ANSI MERGE from a staging table — the portable upsert for targets
-    without MySQL's ON DUPLICATE KEY UPDATE (Derby/H2/Oracle-class).
-
-    Derby rejects VALUES-derived MERGE sources ("must be a base table or
-    table function"), which forces the shape that is *right at scale
-    anyway*: land the batch in a staging table with the distributed JDBC
-    writer, then issue one set-based MERGE — the data path stays on
-    executors, the driver sends a single statement. Key columns are
-    excluded from the UPDATE SET list. Source rows must be unique per key
-    (ANSI MERGE raises on duplicate matches).
-    """
-    from cpt_database_sync_spark.sources.identifiers import quote_identifier
-
-    qt = quote_identifier(target, quote)
-    qs = quote_identifier(source, quote)
-    qcols = {c: quote_identifier(c, quote) for c in columns}
-    # null-safe key match: plain equality never matches NULL keys, so a
-    # NULL-keyed group (e.g. a groupBy key that can be NULL upstream)
-    # would INSERT a fresh duplicate row every micro-batch instead of
-    # updating its one serving row (r8 review)
-    on = " AND ".join(
-        f"(T.{qcols[k]} = S.{qcols[k]}"
-        f" OR (T.{qcols[k]} IS NULL AND S.{qcols[k]} IS NULL))"
-        for k in key_columns
-    )
-    non_keys = [c for c in columns if c not in key_columns]
-    ins_cols = ", ".join(qcols[c] for c in columns)
-    ins_vals = ", ".join(f"S.{qcols[c]}" for c in columns)
-    # all-key tables (pure membership sets) have nothing to UPDATE —
-    # emitting 'UPDATE SET' with an empty list would be a syntax error
-    matched = ""
-    if non_keys:
-        sets = ", ".join(f"{qcols[c]} = S.{qcols[c]}" for c in non_keys)
-        matched = f"WHEN MATCHED THEN UPDATE SET {sets} "
-    return (
-        f"MERGE INTO {qt} AS T USING {qs} AS S ON {on} "
-        f"{matched}"
-        f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-    )
+    """Plain keyed upsert: ``merge_cdc_statement`` without an op column."""
+    return merge_cdc_statement(target, source, columns, key_columns, quote=quote)
 
 
 def merge_cdc_statement(
@@ -422,59 +375,102 @@ def merge_cdc_statement(
     source: str,
     columns: list[str],
     key_columns: list[str],
-    op_column: str,
+    op_column: str | None = None,
     delete_op: str = "D",
     quote: str = '"',
+    null_safe: bool = True,
 ) -> str:
-    """ANSI MERGE applying a full CDC batch — upserts AND tombstones — in
-    one set-based statement. ``op_column`` lives only in the staging
-    source; refined match clauses route each row:
+    """ANSI MERGE from a staging table — the portable upsert for targets
+    without MySQL's ON DUPLICATE KEY UPDATE (Derby/H2/Oracle-class; Derby
+    rejects VALUES-derived MERGE sources, so the batch is staged). Key
+    columns are left out of UPDATE SET; source rows must be unique per
+    key (ANSI MERGE raises on duplicate matches).
 
-        WHEN MATCHED AND S.op = 'D'  THEN DELETE
-        WHEN MATCHED                 THEN UPDATE SET …
-        WHEN NOT MATCHED AND op <> 'D' THEN INSERT …
+    With ``op_column`` (present only in the staging source) the MERGE
+    applies a full CDC batch: ``WHEN MATCHED AND S.op = 'D' THEN DELETE``
+    precedes the UPDATE arm, and the INSERT arm skips tombstones, so a
+    tombstone for a row the target never had is a no-op. This is the
+    delete arm the reference's ON DUPLICATE KEY UPDATE loop cannot
+    express (`sync/JdbcPageSink.java:81-104`).
 
-    (first matching clause wins, so the unrefined UPDATE only sees
-    non-tombstones; a tombstone for a row the target never had is a
-    correct no-op — no clause fires). This is the delete arm the
-    reference's ON DUPLICATE KEY UPDATE loop cannot express at all
-    (`sync/JdbcPageSink.java:81-104` — its CDC story silently resurrects
-    deleted rows on the next full copy).
+    ``null_safe`` matches NULL keys to each other: plain equality never
+    matches NULL, so a NULL-keyed group would INSERT a duplicate every
+    micro-batch. Its OR defeats index lookups, so a caller that has
+    proven the staged keys NULL-free passes ``null_safe=False``.
     """
     from cpt_database_sync_spark.sources.identifiers import quote_identifier
 
-    # delete_op is a VALUE (not an identifier), interpolated into the
-    # statement as a string literal — escape embedded quotes the SQL way
-    # so a caller-supplied marker can neither break the statement nor
-    # inject (ADVICE r7, sync.py:312).
-    delete_op = delete_op.replace("'", "''")
-    qt = quote_identifier(target, quote)
-    qs = quote_identifier(source, quote)
-    data_cols = [c for c in columns if c != op_column]
     qcols = {c: quote_identifier(c, quote) for c in columns}
-    qop = quote_identifier(op_column, quote)
     on = " AND ".join(
-        f"(T.{qcols[k]} = S.{qcols[k]}"
-        f" OR (T.{qcols[k]} IS NULL AND S.{qcols[k]} IS NULL))"
-        for k in key_columns
+        f"(T.{q} = S.{q} OR (T.{q} IS NULL AND S.{q} IS NULL))" if null_safe
+        else f"T.{q} = S.{q}"
+        for q in (qcols[k] for k in key_columns)
     )
+    data_cols = [c for c in columns if c != op_column]
     non_keys = [c for c in data_cols if c not in key_columns]
-    ins_cols = ", ".join(qcols[c] for c in data_cols)
-    ins_vals = ", ".join(f"S.{qcols[c]}" for c in data_cols)
-    update = ""
-    if non_keys:
+    delete = insert_guard = update = ""
+    if op_column is not None:
+        # delete_op is a VALUE interpolated as a string literal: escape
+        # embedded quotes so a caller's marker cannot break or inject
+        op = delete_op.replace("'", "''")
+        qop = quote_identifier(op_column, quote)
+        delete = f"WHEN MATCHED AND S.{qop} = '{op}' THEN DELETE "
+        # a NULL op reads as upsert: `<>` alone is NULL for a NULL marker,
+        # which would drop the INSERT arm while the UPDATE arm applied it
+        insert_guard = f" AND (S.{qop} <> '{op}' OR S.{qop} IS NULL)"
+    if non_keys:  # an all-key table (a membership set) has nothing to UPDATE
         sets = ", ".join(f"{qcols[c]} = S.{qcols[c]}" for c in non_keys)
         update = f"WHEN MATCHED THEN UPDATE SET {sets} "
+    ins_cols = ", ".join(qcols[c] for c in data_cols)
+    ins_vals = ", ".join(f"S.{qcols[c]}" for c in data_cols)
     return (
-        f"MERGE INTO {qt} AS T USING {qs} AS S ON {on} "
-        f"WHEN MATCHED AND S.{qop} = '{delete_op}' THEN DELETE "
-        f"{update}"
-        # op IS NULL reads as upsert: <> alone evaluates to NULL for a
-        # NULL marker, silently discarding the row's INSERT arm while
-        # the UPDATE arm (no op guard) still applied it (r8 review)
-        f"WHEN NOT MATCHED AND (S.{qop} <> '{delete_op}' OR S.{qop} IS NULL) "
-        f"THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
+        f"MERGE INTO {quote_identifier(target, quote)} AS T "
+        f"USING {quote_identifier(source, quote)} AS S ON {on} {delete}{update}"
+        f"WHEN NOT MATCHED{insert_guard} THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
     )
+
+
+def ensure_key_index(conn, table: str, key_columns: list[str]) -> None:
+    """Give ``table`` an index led by ``key_columns`` unless it has one,
+    so a keyed MERGE looks each staged row up instead of scanning the
+    table, as MySQL's ON DUPLICATE KEY UPDATE does through the declared
+    key (`sync/JdbcPageSink.java:81-104`). ``getIndexInfo`` also lists
+    the index behind a PRIMARY KEY or UNIQUE constraint. The index is
+    named ``<table>_KEY_IDX``; a target that refuses the CREATE gets a
+    warning and stays unindexed (its MERGEs are correct, only slower)."""
+    import warnings  # noqa: PLC0415
+
+    from cpt_database_sync_spark.sources.identifiers import quote_identifier
+
+    indexes: dict[str, dict[int, str]] = {}
+    rs = conn.getMetaData().getIndexInfo(
+        conn.getCatalog(), conn.getSchema(), table, False, True
+    )
+    try:
+        while rs.next():
+            name, col = rs.getString("INDEX_NAME"), rs.getString("COLUMN_NAME")
+            if name is not None and col is not None:  # not a table-statistics row
+                indexes.setdefault(name, {})[rs.getInt("ORDINAL_POSITION")] = col
+    finally:
+        rs.close()
+    for cols in indexes.values():
+        if {cols[p] for p in sorted(cols)[: len(key_columns)]} == set(key_columns):
+            return
+    name = table + ("_KEY_IDX" if table.isupper() else "_key_idx")
+    keys = ", ".join(quote_identifier(k) for k in key_columns)
+    stmt = conn.createStatement()
+    try:
+        stmt.execute(
+            f"CREATE INDEX {quote_identifier(name)} ON {quote_identifier(table)} ({keys})"
+        )
+    except Exception as exc:  # noqa: BLE001 - an unindexed MERGE is still correct
+        warnings.warn(
+            f"could not index {table} on {key_columns}; its MERGEs scan the "
+            f"whole table: {str(exc)[:300]}",
+            stacklevel=3,
+        )
+    finally:
+        stmt.close()
 
 
 def jdbc_cdc_batch(
@@ -483,18 +479,25 @@ def jdbc_cdc_batch(
     url: str,
     table: str,
     key_columns: list[str],
-    op_column: str = "op",
+    op_column: str | None = "op",
     props: dict | None = None,
     varchar_lengths: dict[str, int] | None = None,
     flavor: str = "ansi",
     fold: bool | None = None,
 ) -> None:
-    """Apply one CDC (micro-)batch — upserts + deletes — to a JDBC
-    target: distributed append into a staging table (op column included),
-    ONE set-based merge_cdc_statement, drop staging. Same scale shape as
-    jdbc_upsert_batch: executors move the data, the driver sends exactly
-    one statement per batch; ``fold`` lets per-batch callers probe the
-    target's identifier folding once per stream."""
+    """Apply one CDC (micro-)batch — upserts + deletes, or upserts only
+    when ``op_column`` is None — to a JDBC target. Executors append the
+    batch to a staging table; then one driver connection runs
+    ``ensure_key_index``, a NULL-key probe of the staging table (at most
+    one row read, no Spark job), one ``merge_cdc_statement`` and DROP of
+    the staging table. ``fold`` lets per-batch callers probe the
+    target's identifier folding once per stream.
+
+    Side effect: the first batch indexes the target's key columns unless
+    an index, PRIMARY KEY or UNIQUE constraint already leads with them.
+    A batch with no NULL key merges on plain ``T.k = S.k``, which that
+    index serves; one with a NULL key falls back to the null-safe match,
+    so a NULL-keyed row still updates or deletes its one target row."""
     from cpt_database_sync_spark.sources.identifiers import (
         fold_case,
         quote_identifier,
@@ -503,20 +506,33 @@ def jdbc_cdc_batch(
 
     if fold is None:
         fold = stores_upper_case(spark, url)
-    staging = f"{table}_stage"
+    staging = fold_case(f"{table}_stage", fold)
     jdbc_sync_table(
         spark, batch_df, url, staging, props=props,
         varchar_lengths=varchar_lengths, flavor=flavor, fold=fold,
     )
     cols = [fold_case(c, fold) for c in batch_df.columns]
     keys = [fold_case(k, fold) for k in key_columns]
-    sql = merge_cdc_statement(
-        fold_case(table, fold), fold_case(staging, fold), cols, keys,
-        fold_case(op_column, fold),
-    )
-    _execute_jdbc(
-        spark, url, [sql, f"DROP TABLE {quote_identifier(fold_case(staging, fold))}"]
-    )
+    target = fold_case(table, fold)
+    op = None if op_column is None else fold_case(op_column, fold)
+    any_null = " OR ".join(f"{quote_identifier(k)} IS NULL" for k in keys)
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+    try:
+        ensure_key_index(conn, target, keys)
+        stmt = conn.createStatement()
+        rs = stmt.executeQuery(
+            f"SELECT 1 FROM {quote_identifier(staging)} WHERE {any_null} "
+            "FETCH FIRST 1 ROWS ONLY"
+        )
+        null_keys = rs.next()
+        rs.close()
+        stmt.execute(
+            merge_cdc_statement(target, staging, cols, keys, op, null_safe=null_keys)
+        )
+        stmt.execute(f"DROP TABLE {quote_identifier(staging)}")
+        stmt.close()
+    finally:
+        conn.close()
 
 
 def jdbc_upsert_batch(
@@ -530,36 +546,16 @@ def jdbc_upsert_batch(
     flavor: str = "ansi",
     fold: bool | None = None,
 ) -> None:
-    """Upsert one (micro-)batch into a JDBC target: distributed append
-    into a staging table, one set-based MERGE, drop staging.
-
-    This is the production shape of the reference's per-row
-    INSERT … ON DUPLICATE KEY UPDATE loop (`sync/JdbcPageSink.java:81-104`)
-    at cluster scale: executors write the staging rows in parallel
-    (batchsize-batched), and the target's engine applies the merge
-    set-wise instead of row-at-a-time through the driver. ``fold`` lets
-    a per-batch caller (serve_keyed_stream) probe the target's
-    identifier folding ONCE instead of opening a metadata connection
-    every micro-batch.
-    """
-    from cpt_database_sync_spark.sources.identifiers import (
-        fold_case,
-        quote_identifier,
-        stores_upper_case,
-    )
-
-    if fold is None:
-        fold = stores_upper_case(spark, url)
-    staging = f"{table}_stage"
-    jdbc_sync_table(
-        spark, batch_df, url, staging, props=props,
-        varchar_lengths=varchar_lengths, flavor=flavor, fold=fold,
-    )
-    cols = [fold_case(c, fold) for c in batch_df.columns]
-    keys = [fold_case(k, fold) for k in key_columns]
-    sql = merge_statement(fold_case(table, fold), fold_case(staging, fold), cols, keys)
-    _execute_jdbc(
-        spark, url, [sql, f"DROP TABLE {quote_identifier(fold_case(staging, fold))}"]
+    """Upsert one (micro-)batch into a JDBC target: ``jdbc_cdc_batch``
+    without an op column, so with the same side effect (a key index on
+    the target) and NULL-key fallback (null-safe match). This is the
+    reference's per-row INSERT … ON DUPLICATE KEY UPDATE loop
+    (`sync/JdbcPageSink.java:81-104`) at cluster scale: executors stage
+    the rows in parallel, the target merges them set-wise through its
+    key index."""
+    jdbc_cdc_batch(
+        spark, batch_df, url, table, key_columns, None,
+        props, varchar_lengths, flavor, fold,
     )
 
 

@@ -301,11 +301,13 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep replays idempotent (re-deleting is a no-op, re-upserting
     converges).
 
-    Bench note: like stream_upsert, this op is deliberately NOT a
-    headline bench query — the embedded Derby target applies the MERGE
-    row-at-a-time single-threaded (~9 min for ~90k merged rows at
-    sf0.1), which measures Derby, not the engine; the distributed side
-    (staged write, one statement per batch) is the part that scales.
+    Cost: each batch's MERGE resolves its rows through the replica's key
+    index (``jdbc_cdc_batch``), so the whole run takes ~6 s at sf0.1
+    (~86k rows read back; 4 vCPUs) and ~3.4 s at sf0.01, where the
+    null-safe match over an unindexed replica took ~25 s at sf0.01.
+    Like stream_upsert it is not a headline bench query: it times an
+    embedded Derby sink; perfbench's ``cdc_apply`` workload times this
+    path instead.
     """
     from cpt_database_sync_spark.sources.sync import (  # noqa: PLC0415
         jdbc_cdc_batch,

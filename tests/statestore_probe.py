@@ -40,17 +40,25 @@ ROCKS = (
 
 
 def main() -> None:
+    from cpt_database_sync_spark.plans.registry import all_specs  # noqa: PLC0415
+
     sf_dir = sys.argv[1]
     provider = sys.argv[2]
     keys = sys.argv[3:] or KEYS  # optional subset for focused re-probes
+    # check the keys before the session starts: a typo should cost
+    # nothing and name what would have been accepted
+    specs = all_specs()
+    unknown = [k for k in keys if k not in specs]
+    if unknown:
+        sys.exit(
+            f"unknown key(s): {', '.join(unknown)}\n"
+            f"valid keys: {', '.join(sorted(specs))}"
+        )
     spark = get_spark(app_name=f"statestore-{provider}")
     if provider == "rocksdb":
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", ROCKS
         )
-    from cpt_database_sync_spark.plans.registry import all_specs  # noqa: PLC0415
-
-    specs = all_specs()
     out = {}
     for k in keys:
         fn = specs[k].fn

@@ -163,3 +163,22 @@ def test_null_strings_into_varchar_columns(spark, derby_url):
     )
     back2 = jdbc_reader(spark, derby_url, "null_vc_direct", props=DERBY_PROPS)
     assert back2.count() == 1
+
+
+def test_timestamp_ntz_round_trip(spark, derby_url):
+    """Zone-less timestamps (TIMESTAMP_NTZ, as parquet-sourced tables and
+    zone-less change feeds arrive) sync into a TIMESTAMP column and read
+    back as the same wall-clock values, NULL included."""
+    import datetime
+
+    df = spark.createDataFrame(
+        [(1, datetime.datetime(2024, 1, 2, 3, 4, 5)), (2, None)],
+        "id int, ts timestamp_ntz",
+    )
+    jdbc_sync_table(spark, df, derby_url, "ntz_sync", flavor="ansi")
+    back = jdbc_reader(spark, derby_url, "ntz_sync", props=DERBY_PROPS)
+    rows = {
+        r["ID"]: r["TS"]
+        for r in back.selectExpr("ID", "CAST(TS AS TIMESTAMP_NTZ) AS TS").collect()
+    }
+    assert rows == {1: datetime.datetime(2024, 1, 2, 3, 4, 5), 2: None}

@@ -280,3 +280,101 @@ def test_jdbc_cdc_null_op_row_inserts(spark):
     back = {r[0]: r[1] for r in jdbc_reader(spark, url, "T").collect()}
     # NULL-op rows upsert on both arms; 'D' deletes
     assert back == {1: 11.0, 2: 20.0}, back
+
+
+def _fresh_derby(spark, prefix: str) -> str:
+    """URL of an empty embedded Derby database under the scratch dir."""
+    import os
+
+    from cpt_database_sync_spark.sources.sync import sweep_scratch
+
+    sweep_scratch(prefix, spark)
+    workdir = os.path.join(scratch_dir(), f"{prefix}db")
+    shutil.rmtree(workdir, ignore_errors=True)
+    return f"jdbc:derby:{workdir}/db;create=true"
+
+
+def _indexes(spark, url: str, table: str) -> dict[str, list[str]]:
+    """Index name → its columns in order, from DatabaseMetaData."""
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.getMetaData().getIndexInfo(None, "APP", table, False, True)
+        out: dict[str, list[str]] = {}
+        while rs.next():
+            out.setdefault(rs.getString("INDEX_NAME"), []).append(
+                rs.getString("COLUMN_NAME")
+            )
+        rs.close()
+        return out
+    finally:
+        conn.close()
+
+
+def _replica(spark, url: str) -> list[tuple]:
+    from cpt_database_sync_spark.sources.sync import jdbc_reader
+
+    return sorted(
+        (tuple(r) for r in jdbc_reader(spark, url, "replica").collect()),
+        key=repr,
+    )
+
+
+def test_jdbc_cdc_null_key_updates_then_deletes_one_row(spark):
+    """A CDC batch carrying a NULL key takes the null-safe match: it
+    updates the one NULL-keyed replica row instead of inserting a second,
+    and a later tombstone deletes that row."""
+    from cpt_database_sync_spark.sources.sync import jdbc_cdc_batch, jdbc_sync_table
+
+    url = _fresh_derby(spark, "cdcnullkey_")
+    seed = spark.createDataFrame([(None, 1.0), (7, 2.0)], "k INT, v DOUBLE")
+    jdbc_sync_table(spark, seed, url, "replica", flavor="ansi")
+    schema, lengths = "k INT, v DOUBLE, op STRING", {"op": 1}
+    batch = spark.createDataFrame([(None, 5.0, "U"), (8, 3.0, "U")], schema)
+    jdbc_cdc_batch(spark, batch, url, "replica", ["k"], varchar_lengths=lengths)
+    assert _replica(spark, url) == [(7, 2.0), (8, 3.0), (None, 5.0)]
+    batch = spark.createDataFrame([(None, 0.0, "D")], schema)
+    jdbc_cdc_batch(spark, batch, url, "replica", ["k"], varchar_lengths=lengths)
+    assert _replica(spark, url) == [(7, 2.0), (8, 3.0)]
+
+
+def test_jdbc_merge_keeps_one_key_index(spark):
+    """Repeated batches, null-free and NULL-keyed, index the target's key
+    once and reuse that index."""
+    from cpt_database_sync_spark.sources.sync import (
+        jdbc_cdc_batch,
+        jdbc_sync_table,
+        jdbc_upsert_batch,
+    )
+
+    url = _fresh_derby(spark, "keyindex_")
+    seed = spark.createDataFrame([(1, 1.0)], "k INT, v DOUBLE")
+    jdbc_sync_table(spark, seed, url, "replica", flavor="ansi")
+    for i in range(3):
+        batch = spark.createDataFrame([(1, float(i)), (i + 2, 0.0)], "k INT, v DOUBLE")
+        jdbc_upsert_batch(spark, batch, url, "replica", ["k"])
+    batch = spark.createDataFrame([(None, 9.0, "U")], "k INT, v DOUBLE, op STRING")
+    jdbc_cdc_batch(spark, batch, url, "replica", ["k"], varchar_lengths={"op": 1})
+    assert _indexes(spark, url, "REPLICA") == {"REPLICA_KEY_IDX": ["K"]}
+    assert _replica(spark, url) == [
+        (1, 2.0), (2, 0.0), (3, 0.0), (4, 0.0), (None, 9.0)
+    ]
+
+
+def test_jdbc_merge_reuses_primary_key_index(spark):
+    """A target whose key is its PRIMARY KEY already has a key index:
+    the upsert adds none."""
+    from cpt_database_sync_spark.sources.sync import _execute_jdbc, jdbc_upsert_batch
+
+    url = _fresh_derby(spark, "pkindex_")
+    _execute_jdbc(spark, url, [
+        'CREATE TABLE "REPLICA" ("K" INT NOT NULL, "J" INT NOT NULL, '
+        '"V" DOUBLE, PRIMARY KEY ("J", "K"))'
+    ])
+    before = _indexes(spark, url, "REPLICA")
+    assert list(before.values()) == [["J", "K"]]
+    schema = "k INT, j INT, v DOUBLE"
+    for rows in ([(1, 1, 1.0), (2, 1, 2.0)], [(1, 1, 3.0)]):
+        batch = spark.createDataFrame(rows, schema)
+        jdbc_upsert_batch(spark, batch, url, "replica", ["k", "j"])
+    assert _indexes(spark, url, "REPLICA") == before
+    assert _replica(spark, url) == [(1, 1, 3.0), (2, 1, 2.0)]
