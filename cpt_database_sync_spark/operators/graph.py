@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import session_checkpoint
+from cpt_database_sync_spark.session import bounded_cache
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 # Minimum absolute support for a reported co-occurrence pair.
@@ -120,7 +120,7 @@ def _flows_literal(flows: DataFrame):
     """Collected (src, dst, w) triples of the aggregated trade-edge
     relation when it fits under ``GRAPH_DRIVER_EDGE_CEILING``; None when
     it doesn't (the distributed loop lane must run). Memoized on the
-    frame's identity — ``_trade_flows``'s session_checkpoint memo hands
+    frame's identity — ``_trade_flows``'s checkpoint memo entry hands
     every consumer the SAME checkpointed frame, so the probe job runs
     once per session, not once per operator call."""
     if _FLOWS_ROWS_MEMO and _FLOWS_ROWS_MEMO[0] is flows:
@@ -339,11 +339,12 @@ def _pair_sets(li: DataFrame) -> DataFrame:
     ``frequent_pairs``/``assoc_rules`` — before the memo each consumer
     re-scanned lineitem and re-paid the distinct exchange, every call.
     """
-    return session_checkpoint(
+    return bounded_cache(
         "graph.pair_sets",
         li.filter(F.col("l_orderkey").isNotNull())
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct(),
+        checkpoint=True,
     )
 
 
@@ -379,12 +380,13 @@ def _cooccur_pairs(li: DataFrame) -> DataFrame:
             ),
         )
     )
-    return session_checkpoint(
+    return bounded_cache(
         "graph.cooccur_pairs",
         sets.select(F.explode(pairs).alias("pr"))
         .select(F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb"))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("cnt")),
+        checkpoint=True,
     )
 
 
@@ -532,7 +534,7 @@ def _trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     supp = load(spark, sf_dir, "supplier")
     cust = load(spark, sf_dir, "customer")
-    return session_checkpoint(
+    return bounded_cache(
         "graph.trade_flows",
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -541,6 +543,7 @@ def _trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).alias("w")),
+        checkpoint=True,
     )
 
 

@@ -31,10 +31,7 @@ from cpt_database_sync_spark.plans.golden import (
 )
 from cpt_database_sync_spark.functions.textnorm import norm_ws, sql_norm_ws
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import (
-    bounded_cache,
-    unpersist_checkpoint as _unpersist_quietly,
-)
+from cpt_database_sync_spark.session import bounded_cache, release
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 SHINGLE_K = 3
@@ -550,13 +547,13 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         # instead of leaving them to ContextCleaner GC (r14 block-
         # pressure discipline, VERDICT r13 next #1)
         result = _cc_driver(probe, edges)
-        _unpersist_quietly(edges)
+        release(edges, checkpoint=True)
         return result
     sym = edges.select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
     ).union(edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
     sym = sym.localCheckpoint(eager=True)  # one symmetric edge relation
-    _unpersist_quietly(edges)  # sym is self-contained once materialized
+    release(edges, checkpoint=True)  # sym is self-contained once materialized
     labels = (
         sym.select("u").distinct().select(F.col("u").alias("node"))
         .withColumn("component", F.col("node"))
@@ -584,12 +581,12 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         changed = new_labels.filter("chg").count()
-        _unpersist_quietly(prev_ck)  # superseded round's label blocks
+        release(prev_ck, checkpoint=True)  # superseded round's label blocks
         prev_ck = new_labels
         labels = new_labels.drop("chg")
         if changed == 0:
             break
-    _unpersist_quietly(sym)  # the returned labels checkpoint is
+    release(sym, checkpoint=True)  # the returned labels checkpoint is
     # self-contained; the symmetric edge relation is loop-only
     return labels
 

@@ -15,6 +15,7 @@ Pins the configuration that correctness and scale depend on:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -87,19 +88,18 @@ def get_spark(
     return spark
 
 
-# One live cached frame per key: repeated invocations of a query in a
-# long-lived session (driver correctness sweep, bench loops, pytest) must
-# not stack cached blocks — the previous run's cache is unpersisted when
-# the next run registers its replacement. The current run's cache stays
-# alive because the returned lazy plan still reads it. ACROSS keys the
-# pool is LRU-capped (VERDICT r7: the per-key bound let ~20 different
-# keys' caches accumulate over a 100-query single-session sweep):
-# beyond _CACHE_CAP entries the least-recently-used cache is unpersisted
-# — evicting a frame some in-flight plan still reads is safe in Spark
-# (it recomputes), just slower, and 16 comfortably covers every
-# harness's working set.
-_BOUNDED_CACHES: dict = {}  # insertion/recency-ordered (dict is ordered)
-_CACHE_CAP = max(1, int(os.environ.get("SPARK_GRAFT_CACHE_CAP", "16")))
+# The session memo: one recency-ordered dict, key -> (input frame,
+# memoized frame, checkpoint flag), for cached and checkpointed frames
+# alike. Bounds (constants, not knobs):
+_MEMO: dict = {}
+_MEMO_CAP = 24  # entries
+_MEMO_BYTES = 1 << 30  # block-manager bytes, all persisted RDDs
+#: Most recent entries the byte bound never releases: the most entries
+#: one registry key's construction touches before its plan runs (4, by
+#: ``pipeline_e2e``, constructing every key at sf0.01 and sf0.1). A
+#: released checkpoint cannot recompute, and a key's checkpoints may be
+#: touched before its cached frames.
+_MEMO_FLOOR = 4
 
 
 def _same_plan(a, b) -> bool:
@@ -117,170 +117,76 @@ def _same_plan(a, b) -> bool:
         return False
 
 
-_CHECKPOINT_MEMO: dict = {}  # key -> (source_df, checkpointed_df, jrdd)
-_CHECKPOINT_CAP = max(1, int(os.environ.get("SPARK_GRAFT_CKPT_CAP", "8")))
-#: Byte bound on the memo's live checkpoint blocks (VERDICT r13 next #1:
-#: the r13 memo capped FRAMES, not bytes, and eviction relied on lazy
-#: ContextCleaner GC — with a 32g driver heap a full GC may never run
-#: inside a bench shard, so evicted/stale checkpoint blocks could sit in
-#: the block manager for the whole session). 1 GiB default: ~50x the
-#: sf0.1 working set, and on a production driver a deliberate fraction
-#: of storage memory.
-_CHECKPOINT_MB = max(64, int(os.environ.get("SPARK_GRAFT_CKPT_MB", "1024")))
-
-
-def _ckpt_rdd(ck):
-    """The persisted JVM RDD behind an eager localCheckpoint frame (the
-    LogicalRDD's ``rdd`` field) — the handle ``unpersist`` needs. None
-    when the plan shape is unexpected (then eviction falls back to the
-    old GC-reclaim behavior for that entry)."""
-    try:
-        return ck._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        return None
-
-
 def _memo_bytes(spark) -> int:
-    """Total block-manager bytes (mem+disk) held by the memo's live
-    checkpoint RDDs, read from the JVM's own storage accounting."""
-    ids = set()
-    for _, _, jrdd in _CHECKPOINT_MEMO.values():
-        if jrdd is not None:
-            try:
-                ids.add(jrdd.id())
-            except Exception:
-                pass
-    total = 0
+    """Bytes (memory + disk) the block manager holds for every persisted
+    RDD — the totals the byte bound reads, so no insert has to resolve a
+    cached frame's RDD. Warns and returns 0 (no byte eviction this time)
+    when the totals cannot be read."""
     try:
-        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
-            if info.id() in ids:
-                total += info.memSize() + info.diskSize()
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(i.memSize() + i.diskSize() for i in infos)
+    except Exception as exc:
+        warnings.warn(
+            f"session memo: block-manager totals unreadable ({exc!r}); "
+            "the byte bound is skipped",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return 0
+
+
+def release(frame, checkpoint: bool) -> None:
+    """Free the blocks of a cached (``checkpoint=False``) or
+    ``localCheckpoint`` frame now, blocking until the block manager has
+    dropped them. The caller guarantees no still-to-run plan reads a
+    released checkpoint: it cannot recompute. A handle from a stopped
+    session holds no blocks, so failures are ignored."""
+    try:
+        if checkpoint:
+            frame._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        else:
+            frame.unpersist(blocking=True)
     except Exception:
-        return 0  # accounting unavailable: byte bound becomes a no-op
-    return total
+        pass
 
 
-def unpersist_checkpoint(ck) -> None:
-    """Explicitly free the blocks of a non-memoized ``localCheckpoint``
-    frame the caller has finished with (r14: relying on ContextCleaner GC
-    leaves blocks in the block manager for the whole session under a big,
-    rarely-collected driver heap). Safe only when no still-to-run plan
-    reads ``ck`` — a localCheckpoint cannot recompute. Never raises."""
-    jrdd = _ckpt_rdd(ck)
-    if jrdd is not None:
-        try:
-            jrdd.unpersist(True)  # blocking: the byte bound
-            # recomputes right after eviction and must see the change
-        except Exception:
-            pass
+def _evict_lru() -> None:
+    _, frame, checkpoint = _MEMO.pop(next(iter(_MEMO)))
+    release(frame, checkpoint)
 
 
-def _evict_checkpoint(memo_key) -> None:
-    """Drop one memo entry and EXPLICITLY unpersist its blocks (r14:
-    eviction used to rely on ContextCleaner GC, which is driven by JVM
-    GC pressure and can lag the whole session)."""
-    _, _, jrdd = _CHECKPOINT_MEMO.pop(memo_key)
-    if jrdd is not None:
-        try:
-            jrdd.unpersist(True)  # blocking, so the byte accounting and
-            # the block manager agree immediately
-        except Exception:
-            pass  # a handle from a stopped session evicts silently
+def bounded_cache(key: str, df, checkpoint: bool = False):
+    """Memoize ``df`` under ``key`` for the session and return the
+    memoized frame: ``df.cache()``, or with ``checkpoint=True`` an eager
+    ``localCheckpoint`` (a lineage cut that is built once and never
+    recomputes).
 
+    Reuse: a later call with the same key returns the memoized frame when
+    ``df`` comes from the same live session and has the same analyzed plan
+    result as the memoized input (``_same_plan``). Otherwise the entry is
+    stale: it is released and ``df`` memoized in its place.
 
-def session_checkpoint(key: str, df):
-    """``localCheckpoint(eager=True)`` with ``bounded_cache``'s reuse
-    contract: re-invoking the same logical plan in the same live session
-    returns the SAME materialized checkpoint instead of re-running the
-    build (guide §2.4 — remove repeated work outright).
+    Bounds, the same for both kinds: at most ``_MEMO_CAP`` entries and
+    ``_MEMO_BYTES`` of block-manager storage (all persisted RDDs count).
+    Past either bound the least recently used entry is released. The byte
+    bound keeps the ``_MEMO_FLOOR`` most recent entries, which covers every
+    entry one key's construction uses before its plan runs.
 
-    Rationale (r13 optimization round): the graph family's shared edge
-    relations (``_trade_flows``, the co-order pair counts) were
-    checkpoint-materialized PER CALL — a fresh eager 4-way fact join for
-    every one of the 7 trade-graph operators and every bench trial,
-    because a checkpoint's LogicalRDD plan can never compare equal to
-    anything. Keying the memo on the INPUT plan (``sameResult``, exactly
-    as ``bounded_cache``) gives cross-invocation and cross-operator reuse
-    while keeping what ``localCheckpoint`` was chosen for: the lineage
-    cut (iterative consumers), the ExistingRDD execution barrier (no
-    re-derivation per consumer), and immunity to cache eviction.
-
-    Bounds (r14, VERDICT r13 next #1): the memo is capped by FRAMES
-    (``_CHECKPOINT_CAP``) and by BYTES (``_CHECKPOINT_MB``, block-manager
-    accounting), and eviction/replacement EXPLICITLY unpersists the
-    evicted checkpoint's blocks instead of waiting for ContextCleaner GC.
-    Unpersisting a checkpoint that an in-flight plan still reads would
-    break that plan (a localCheckpoint cannot recompute), so the byte
-    bound always keeps the 2 most-recent entries: callers build at most
-    two session checkpoints before executing (flows + pair counts), and
-    anything older has already been executed by the harness's
-    build-then-run discipline.
-
-    Same immutability assumption as ``bounded_cache``: fixture files are
-    never rewritten in place mid-session.
+    Input files must not change within a session: a parquet rewritten in
+    place at the same path leaves the plan equal, so the memo keeps
+    serving the old rows (as Spark's own ``cache()`` does).
     """
-    prev = _CHECKPOINT_MEMO.get(key)
+    prev = _MEMO.pop(key, None)
     if prev is not None:
-        src, ck, _ = prev
+        src, frame, was_checkpoint = prev
         if src.sparkSession is df.sparkSession and _same_plan(src, df):
-            _CHECKPOINT_MEMO.pop(key)  # refresh recency
-            _CHECKPOINT_MEMO[key] = prev
-            return ck
-        _evict_checkpoint(key)  # stale plan: free the blocks NOW
-    while len(_CHECKPOINT_MEMO) >= _CHECKPOINT_CAP:
-        _evict_checkpoint(next(iter(_CHECKPOINT_MEMO)))
-    ck = df.localCheckpoint(eager=True)
-    _CHECKPOINT_MEMO[key] = (df, ck, _ckpt_rdd(ck))
-    while (
-        len(_CHECKPOINT_MEMO) > 2
-        and _memo_bytes(df.sparkSession) > _CHECKPOINT_MB * 1024 * 1024
-    ):
-        _evict_checkpoint(next(iter(_CHECKPOINT_MEMO)))
-    return ck
-
-
-def bounded_cache(key: str, df):
-    """Cache ``df`` under ``key``.
-
-    A repeated invocation of the same query on the same inputs (driver
-    sweep, bench trials, pytest) builds the same analyzed plan — in that
-    case the warm cache is returned as-is instead of being dropped and
-    repopulated, so trial N costs the same as trial 2. Only when the plan
-    actually changed (different sf_dir, changed upstream) is the stale
-    cache unpersisted and replaced.
-
-    Assumption (deliberate): input files are immutable within a session.
-    If a fixture parquet is regenerated IN PLACE at the same path mid-
-    session, the analyzed plan still compares equal and the warm cache
-    would serve pre-regeneration data. That is Spark's own contract for
-    cached relations (a plain ``.cache()`` has the identical behavior);
-    a long-lived service that rewrites inputs must call
-    ``spark.catalog.refreshByPath(path)`` / clearCache, which also drops
-    these entries. The driver/bench/pytest harnesses all regenerate
-    fixtures only between processes, never mid-session.
-    """
-    prev = _BOUNDED_CACHES.get(key)
-    if prev is not None:
-        # Reuse requires the SAME live session: sameResult() is a pure
-        # plan-tree compare that succeeds even on a handle from a stopped
-        # session, so gate on session identity first (a restart within
-        # one process must fall through to re-cache, as pre-r6 code did).
-        if prev.sparkSession is df.sparkSession and _same_plan(prev, df):
-            _BOUNDED_CACHES.pop(key)  # refresh recency
-            _BOUNDED_CACHES[key] = prev
-            return prev
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # a stale handle from a stopped session is not an error
-        _BOUNDED_CACHES.pop(key, None)
-    while len(_BOUNDED_CACHES) >= _CACHE_CAP:
-        lru_key = next(iter(_BOUNDED_CACHES))
-        lru = _BOUNDED_CACHES.pop(lru_key)
-        try:
-            lru.unpersist()
-        except Exception:
-            pass  # stopped-session handles evict silently
-    cached = df.cache()
-    _BOUNDED_CACHES[key] = cached
-    return cached
+            _MEMO[key] = prev  # re-inserted as the most recent
+            return frame
+        release(frame, was_checkpoint)
+    while len(_MEMO) >= _MEMO_CAP:
+        _evict_lru()
+    frame = df.localCheckpoint(eager=True) if checkpoint else df.cache()
+    _MEMO[key] = (df, frame, checkpoint)
+    while len(_MEMO) > _MEMO_FLOOR and _memo_bytes(df.sparkSession) > _MEMO_BYTES:
+        _evict_lru()
+    return frame

@@ -9,6 +9,9 @@ handles partition discovery + pruning declaratively.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
@@ -30,45 +33,73 @@ ALL_TABLES = (
 # at sf1000 `region` is still 5 rows and `nation` 25.
 BROADCAST_DIMS = ("region", "nation")
 
-# Footer-probe memo: fixture files are immutable within a session, and
-# size-dispatch sites probe at every operator call.
-_ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}
+
+def file_stamp(path: str) -> tuple[int, int]:
+    """``(size, mtime_ns)`` of a file or directory (a directory's mtime
+    moves when a file in it is added, removed or renamed). Raises
+    ``OSError`` when ``path`` is not local."""
+    st = os.stat(path)
+    return st.st_size, st.st_mtime_ns
+
+
+@functools.lru_cache(maxsize=128)
+def _stamped(read, path, stamp, *args):
+    return read(path, *args)
+
+
+def file_meta(read, path: str, *args):
+    """``read(path, *args)`` through the file-metadata memo.
+
+    Key: ``(read, path, *args)`` and the path's ``file_stamp``. Reuse: the
+    memoized value is returned while the stamp is unchanged. Unlike the
+    frame memo (``session.bounded_cache``) this memo does not rely on
+    files staying unchanged within a session: a file rewritten in place is
+    read again, unless the rewrite keeps its size and lands within one
+    filesystem timestamp tick. Bound and eviction: the 128 most recently
+    used entries are kept, older ones dropped (they hold no blocks). A
+    path that cannot be stamped (not local) is read on every call.
+    """
+    try:
+        stamp = file_stamp(path)
+    except OSError:
+        return read(path, *args)
+    return _stamped(read, path, stamp, *args)
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    try:
+        if os.path.isdir(path):
+            return sum(
+                pq.read_metadata(os.path.join(root, f)).num_rows
+                for root, _, files in os.walk(path)
+                for f in files
+                if f.endswith(".parquet")
+            )
+        return pq.read_metadata(path).num_rows
+    except (OSError, ValueError):
+        return 0
+
+
+def parquet_schema(path: str, spark: SparkSession) -> StructType:
+    return spark.read.parquet(path).schema
 
 
 def table_rowcount(sf_dir: str, name: str) -> int:
     """Exact row count of one fixture table from parquet FOOTER metadata —
     the catalog statistics probe the size dispatches run when the caller
-    supplies no hint (VERDICT r12 next #3: "derive the hint from data").
+    supplies no hint.
 
     Metadata-only: reads the footer (and, for a partitioned directory,
     each part file's footer), never row groups — O(files) driver-side
     I/O, no Spark job, no scan. This is exactly the statistic a real
     catalog (Hive/Iceberg/Delta) serves from its manifest at 100 TB; on
-    raw parquet the footers ARE that manifest. Returns 0 when the probe
-    cannot answer (exotic layout), which callers treat as "unknown —
-    keep the caller-visible default lane".
+    raw parquet the footers ARE that manifest. Memoized by ``file_meta``.
+    Returns 0 when the probe cannot answer (exotic layout), which callers
+    treat as "unknown — keep the caller-visible default lane".
     """
-    key = (sf_dir, name)
-    if key not in _ROWCOUNT_CACHE:
-        import os  # noqa: PLC0415
-
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        path = f"{sf_dir}/{name}.parquet"
-        try:
-            if os.path.isdir(path):
-                n = sum(
-                    pq.read_metadata(os.path.join(root, f)).num_rows
-                    for root, _, files in os.walk(path)
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-            else:
-                n = pq.read_metadata(path).num_rows
-        except (OSError, ValueError):
-            n = 0
-        _ROWCOUNT_CACHE[key] = n
-    return _ROWCOUNT_CACHE[key]
+    return file_meta(_footer_rows, f"{sf_dir}/{name}.parquet")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -91,24 +122,14 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
 
 
-# Physical schema of events.parquet, memoized per sf_dir: the probe is
-# metadata-only but readStream construction calls it per query — once per
-# fixture dir is enough (fixture schemas don't change mid-session).
-_EVENTS_SCHEMA_CACHE: dict[str, StructType] = {}
-
-
 def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """Pre-normalization schema of ``events.parquet`` (``ts`` as int64
-    nanos or TIMESTAMP_NTZ micros, see ``normalize_events_ts``)."""
-    # conf is per-SESSION but the memo is per-process: set it on every
-    # call so a later session hitting the cache can still scan the
-    # nanos-encoded file at micro-batch time.
+    nanos or TIMESTAMP_NTZ micros, see ``normalize_events_ts``), memoized
+    per session by ``file_meta``."""
+    # Set on every call, memo hit or not: the micro-batch scans that
+    # follow need it to read a nanos-encoded file.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if sf_dir not in _EVENTS_SCHEMA_CACHE:
-        _EVENTS_SCHEMA_CACHE[sf_dir] = spark.read.parquet(
-            f"{sf_dir}/events.parquet"
-        ).schema
-    return _EVENTS_SCHEMA_CACHE[sf_dir]
+    return file_meta(parquet_schema, f"{sf_dir}/events.parquet", spark)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -134,8 +155,8 @@ def register_views(spark: SparkSession, sf_dir: str, names=ALL_TABLES) -> None:
 
 
 def materialize_stamped(src_path: str, out_dir: str, build_fn) -> str:
-    """Run ``build_fn(out_dir)`` only when the source's (mtime, size)
-    stamp changed — the shared freshness gate for derived on-disk
+    """Run ``build_fn(out_dir)`` only when the source's ``file_stamp``
+    changed — the shared freshness gate for derived on-disk
     artifacts (IVF cell indexes, MinHash signature indexes). Plan-only
     callers (explain / plan gates) and repeated bench trials reuse the
     artifact instead of paying a corpus-scale rebuild per call, which is
@@ -143,10 +164,7 @@ def materialize_stamped(src_path: str, out_dir: str, build_fn) -> str:
     fixture changes the stamp and forces a rebuild, so oracles always
     see fresh derivations. The ``_``-prefixed marker is invisible to
     Spark directory scans. Returns ``out_dir``."""
-    import os  # noqa: PLC0415
-
-    st = os.stat(src_path)
-    stamp = f"{st.st_mtime_ns}:{st.st_size}"
+    stamp = "%d:%d" % file_stamp(src_path)
     marker = os.path.join(out_dir, "_SRC_STAMP")
     try:
         with open(marker) as fh:

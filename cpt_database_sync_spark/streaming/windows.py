@@ -28,7 +28,9 @@ from cpt_database_sync_spark.functions.numeric import sql_dsum
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.sources.tables import (
     events_raw_schema,
+    file_meta,
     normalize_events_ts,
+    parquet_schema,
 )
 
 
@@ -38,8 +40,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     source; only the format/options line changes.
 
     readStream needs an explicit schema — ``events_raw_schema`` probes it
-    once per sf_dir (memoized); ts-encoding dispatch is shared with the
-    batch loader via ``normalize_events_ts``."""
+    (memoized while the file is unchanged); ts-encoding dispatch is shared
+    with the batch loader via ``normalize_events_ts``."""
     schema = events_raw_schema(spark, sf_dir)
     # the file source wants a directory: stream the fixture dir, filtered
     # to the events file (a real deployment points at a landing directory)
@@ -932,19 +934,13 @@ def cusum_daily_stream(ev: DataFrame) -> DataFrame:
 
 # --- Streaming Benford audit -------------------------------------------------
 
-_ORDERS_SCHEMA_CACHE: dict[str, object] = {}
-
-
 def orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders as an unbounded source (the `events_stream` shape over the
     orders fixture file; a deployment points at the landing directory of
-    the order feed). Schema probed once per sf_dir and memoized."""
-    schema = _ORDERS_SCHEMA_CACHE.get(sf_dir)
-    if schema is None:
-        schema = spark.read.parquet(
-            os.path.join(sf_dir, "orders.parquet")
-        ).schema
-        _ORDERS_SCHEMA_CACHE[sf_dir] = schema
+    the order feed). The schema probe is memoized by ``file_meta``."""
+    schema = file_meta(
+        parquet_schema, os.path.join(sf_dir, "orders.parquet"), spark
+    )
     return (
         spark.readStream.schema(schema)
         .format("parquet")

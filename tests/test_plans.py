@@ -2210,9 +2210,17 @@ def test_r11g_pmi_iqr_plan_physics(spark, sf_dir):
         transition_pmi,
     )
 
+    from cpt_database_sync_spark import session as S
+
     def plan(op):
         return plan_string(op(spark, sf_dir), "simple")
 
+    # An earlier test's run of transition_entropy leaves these same
+    # transition counts cached in the session memo; Spark substitutes
+    # that relation here, and its printed final AQE plan repeats the
+    # scan. Plan against an empty memo.
+    while S._MEMO:
+        S._evict_lru()
     # PMI: one user-keyed window pass + one pair rollup; the margin
     # windows run on the |types|^2 relation; no join anywhere
     p = plan(transition_pmi)

@@ -649,13 +649,13 @@ class TestEventsTsDispatch:
     branches must produce identical session-TZ timestamps (judge r5 ask
     #8 — the fix previously rode only on the driver's fixtures)."""
 
-    def _write_events(self, tmp_path, unit: str) -> str:
+    def _write_events(self, tmp_path, unit: str, name: str = "") -> str:
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        d = tmp_path / unit
-        d.mkdir()
+        d = tmp_path / (name or unit)
+        d.mkdir(exist_ok=True)
         ts = pd.to_datetime(
             ["2024-01-01 00:00:00.123456", "2024-01-02 12:34:56.654321"]
         )
@@ -699,6 +699,35 @@ class TestEventsTsDispatch:
         d = self._write_events(tmp_path, "us")
         first = events_raw_schema(spark, d)
         assert events_raw_schema(spark, d) is first
+
+    def test_schema_follows_in_place_reencode(self, spark, tmp_path):
+        """events.ts re-encoded from nanos to micros in the same directory:
+        the memoized probe must see the new encoding."""
+        from pyspark.sql.types import LongType, TimestampNTZType
+
+        from cpt_database_sync_spark.sources.tables import events_raw_schema
+
+        d = self._write_events(tmp_path, "ns", name="ev")
+        assert isinstance(events_raw_schema(spark, d)["ts"].dataType, LongType)
+        self._write_events(tmp_path, "us", name="ev")
+        assert isinstance(
+            events_raw_schema(spark, d)["ts"].dataType, TimestampNTZType
+        )
+
+
+def test_table_rowcount_follows_in_place_rewrite(tmp_path):
+    """A parquet rewritten in place (10 -> 25 rows) must not be served
+    from a stale footer memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cpt_database_sync_spark.sources.tables import table_rowcount
+
+    path = str(tmp_path / "nation.parquet")
+    pq.write_table(pa.table({"n_nationkey": list(range(10))}), path)
+    assert table_rowcount(str(tmp_path), "nation") == 10
+    pq.write_table(pa.table({"n_nationkey": list(range(25))}), path)
+    assert table_rowcount(str(tmp_path), "nation") == 25
 
 
 class TestImageDecode:
@@ -1874,86 +1903,69 @@ class TestDecodeRegressionPins:
         assert tuple(px[1, 1]) == (2, 2, 2), "frame pixels use the local table"
 
 
-def test_bounded_cache_global_lru_cap(spark):
-    """The cache pool is LRU-capped ACROSS keys (VERDICT r7: per-key
-    bounding let ~20 keys' caches accumulate over a long sweep): insert
-    cap+2 distinct keys, the two oldest evict; a reused key refreshes
-    its recency instead of evicting."""
-    from cpt_database_sync_spark import session as S
-
-    S._BOUNDED_CACHES.clear()
-    old_cap = S._CACHE_CAP
-    S._CACHE_CAP = 4
-    try:
-        frames = {}
-        for i in range(4):
-            frames[i] = S.bounded_cache(f"lru.k{i}", spark.range(i, i + 10))
-        # touch k0 so k1 becomes LRU
-        assert S.bounded_cache("lru.k0", spark.range(0, 10)) is frames[0]
-        S.bounded_cache("lru.k4", spark.range(100, 110))
-        assert "lru.k1" not in S._BOUNDED_CACHES, "LRU key should evict"
-        assert "lru.k0" in S._BOUNDED_CACHES, "recently-touched key survives"
-        assert len(S._BOUNDED_CACHES) == 4
-        assert not frames[1].storageLevel.useMemory, "evicted frame unpersisted"
-        assert frames[0].storageLevel.useMemory
-    finally:
-        S._CACHE_CAP = old_cap
-        for k in [k for k in S._BOUNDED_CACHES if k.startswith("lru.")]:
-            try:
-                S._BOUNDED_CACHES.pop(k).unpersist()
-            except Exception:
-                pass
-
-
-def test_session_checkpoint_evict_unpersists_blocks(spark):
-    """r14 (VERDICT r13 next #1): checkpoint-memo eviction must free the
-    evicted checkpoint's block-manager blocks EXPLICITLY (the r13 memo
-    relied on ContextCleaner GC, which can lag a whole bench shard under
-    a big rarely-collected heap), and the memo is additionally bounded
-    by BYTES with a keep-2-most-recent guard for in-flight callers."""
+@pytest.mark.parametrize("checkpoint", [False, True])
+def test_session_memo_reuse_and_eviction(spark, monkeypatch, checkpoint):
+    """One memo serves cached and checkpointed frames with one policy: a
+    hit returns the same frame and refreshes its recency; cap eviction
+    and stale replacement free the released entry's blocks at once; the
+    byte bound releases least-recent entries but keeps the floor."""
     from cpt_database_sync_spark import session as S
 
     def live_ids():
-        return {
-            i.id()
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
-    S._CHECKPOINT_MEMO.clear()
-    old_cap, old_mb = S._CHECKPOINT_CAP, S._CHECKPOINT_MB
-    S._CHECKPOINT_CAP = 2
+    def put(key, lo):
+        """Memoize spark.range(lo, lo + 1000) under key and run it; returns
+        the frame and the ids of the RDDs that now hold its blocks."""
+        before = live_ids()
+        frame = S.bounded_cache(
+            f"memo.{key}", spark.range(lo, lo + 1000), checkpoint=checkpoint
+        )
+        assert frame.count() == 1000
+        return frame, live_ids() - before
+
+    monkeypatch.setattr(S, "_MEMO", {})
+    monkeypatch.setattr(S, "_MEMO_CAP", 3)
     try:
-        ck0 = S.session_checkpoint("ck.a", spark.range(0, 1000))
-        rid0 = S._ckpt_rdd(ck0).id()
-        assert rid0 in live_ids(), "eager checkpoint must hold blocks"
-        # same plan -> memo hit, same frame, blocks still live
-        assert S.session_checkpoint("ck.a", spark.range(0, 1000)) is ck0
-        S.session_checkpoint("ck.b", spark.range(1, 1001))
-        S.session_checkpoint("ck.c", spark.range(2, 1002))  # evicts ck.a
-        assert "ck.a" not in S._CHECKPOINT_MEMO
-        assert rid0 not in live_ids(), (
-            "evicted checkpoint must unpersist its blocks, not wait for GC"
-        )
-        # stale replacement (same key, different plan) frees the old blocks
-        ckb = S._CHECKPOINT_MEMO["ck.b"][1]
-        ridb = S._ckpt_rdd(ckb).id()
-        S.session_checkpoint("ck.b", spark.range(500, 1500))
-        assert ridb not in live_ids(), "stale replacement must unpersist"
-        # byte bound: a tiny cap evicts down to the 2 most recent, never
-        # below (in-flight callers build at most two before executing)
-        S._CHECKPOINT_MB = 0  # forces the bound for any non-empty blocks
-        S._CHECKPOINT_CAP = 8
-        S.session_checkpoint("ck.d", spark.range(3, 1003))
-        S.session_checkpoint("ck.e", spark.range(4, 1004))
-        assert len(S._CHECKPOINT_MEMO) == 2, (
-            f"byte bound must keep exactly the 2 most recent, "
-            f"got {list(S._CHECKPOINT_MEMO)}"
-        )
-        assert list(S._CHECKPOINT_MEMO) == ["ck.d", "ck.e"]
+        a, a_ids = put("a", 0)
+        assert a_ids, "a memoized frame holds blocks once run"
+        hit, hit_ids = put("a", 0)
+        assert hit is a and not hit_ids, "a hit returns the same frame"
+        _, b_ids = put("b", 1)
+        put("c", 2)
+        put("a", 0)  # hit: a becomes the most recent, b the least
+        assert list(S._MEMO) == ["memo.b", "memo.c", "memo.a"]
+        put("d", 3)  # the cap evicts b, not a
+        assert list(S._MEMO) == ["memo.c", "memo.a", "memo.d"]
+        assert not b_ids & live_ids(), "cap eviction must free the blocks"
+        assert a_ids <= live_ids(), "the refreshed entry keeps its blocks"
+        a_new, _ = put("a", 500)  # same key, different plan
+        assert a_new is not a
+        assert not a_ids & live_ids(), "stale replacement must free the blocks"
+        # byte bound: a zero budget releases down to the floor, never below
+        monkeypatch.setattr(S, "_MEMO_BYTES", 0)
+        monkeypatch.setattr(S, "_MEMO_CAP", 24)
+        keys = [f"memo.n{i}" for i in range(S._MEMO_FLOOR + 2)]
+        for i in range(len(keys)):
+            put(f"n{i}", 10 + i)
+        assert list(S._MEMO) == keys[-S._MEMO_FLOOR:]
     finally:
-        S._CHECKPOINT_CAP, S._CHECKPOINT_MB = old_cap, old_mb
-        for k in list(S._CHECKPOINT_MEMO):
-            S._evict_checkpoint(k)
+        for _, frame, ck in S._MEMO.values():
+            S.release(frame, ck)
+
+
+def test_memo_bytes_warns_when_storage_unreadable(spark, monkeypatch):
+    """An unreadable block-manager total must not switch the byte bound
+    off silently."""
+    from cpt_database_sync_spark import session as S
+
+    class _BrokenJsc:
+        def sc(self):
+            raise RuntimeError("storage read failed")
+
+    monkeypatch.setattr(spark.sparkContext, "_jsc", _BrokenJsc())
+    with pytest.warns(RuntimeWarning, match="byte bound is skipped"):
+        assert S._memo_bytes(spark) == 0
 
 
 def test_bench_headline_line_fits_driver_tail():

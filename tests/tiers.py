@@ -6,11 +6,12 @@ sweeps x326) outgrew the driver's pytest time cap: r13's fully-green
 tests_ok=false for a suite with zero failures. Default tier: every key
 whose physical plan was rewritten in r13/r14 (the oracle-evidence gap
 VERDICT r13 #3 names, plus every r14-touched key) and a deterministic
-one-in-five name-hash breadth sample — ~100/326 keys, pinned across
-rounds because the hash is of the NAME. (Was one-in-three/145 keys; a
-timed end-of-round run under host steal projected past the driver's
-~24 min cap, so the breadth modulus dropped to 5 for margin — the
-CORE_ALWAYS list is untouched.) `SPARK_GRAFT_TEST_TIER=full`
+one-in-five name-hash breadth sample — ~100/326 keys. The sample depends
+only on the key NAME and the modulus, so it is stable while the modulus
+is. Changing the modulus rotates it: the sample was one-in-three (145
+keys) until the modulus became 5, and md5 % 5 == 0 is not a subset of
+md5 % 3 == 0, so keys left the sample that had been in it and others
+joined. `SPARK_GRAFT_TEST_TIER=full`
 runs the complete sweeps (the CI / release lane; used for the committed
 green-run evidence in OPTIMIZATION_r14.md).
 """
