@@ -102,17 +102,37 @@ def _host_identity() -> str:
     return f"{platform.node()}|{boot}"
 
 
+# SQLStates Derby answers a shutdown request with when nothing went
+# wrong: the database shut down, it was not booted (or is missing), or
+# the whole engine shut down.
+_DERBY_SHUTDOWN_OK = frozenset({"08006", "XJ004", "XJ015"})
+
+
 def derby_shutdown(spark: SparkSession, db_path: str) -> None:
     """Shut down one embedded Derby database so its handles and page
     cache are released before the directory is removed. Derby signals a
-    successful single-database shutdown WITH an SQLException (SQLState
-    08006) — the expected exception is swallowed."""
+    successful shutdown WITH an SQLException, so the SQLStates in
+    ``_DERBY_SHUTDOWN_OK`` count as success; any other failure is
+    reported as a warning naming its SQLState."""
+    import warnings  # noqa: PLC0415
+
+    from py4j.protocol import Py4JError  # noqa: PLC0415
+
     try:
         spark._jvm.java.sql.DriverManager.getConnection(
             f"jdbc:derby:{db_path};shutdown=true"
         )
-    except Exception:
-        pass
+    except Exception as exc:  # noqa: BLE001 - a cleanup step: report, never raise
+        try:
+            state = exc.java_exception.getSQLState()
+        except (AttributeError, Py4JError):  # no Java exception, or not an SQLException
+            state = None
+        if state not in _DERBY_SHUTDOWN_OK:
+            warnings.warn(
+                f"Derby shutdown of {db_path} failed (SQLState {state}): "
+                f"{str(exc)[:300]}",
+                stacklevel=2,
+            )
 
 
 def sweep_scratch(prefix: str, spark: SparkSession | None = None) -> None:
@@ -291,12 +311,13 @@ def jdbc_sync_table(
     # and setString are valid there), then one server-side
     # INSERT … SELECT CAST(col AS VARCHAR(n)) lands the rows in the real
     # table. The detour costs one extra server-side copy, only on the
-    # batches that need it. The probe projects ONLY the varchar string
-    # columns (column-pruned scan) and early-stops at the first null;
-    # proving a batch null-FREE does read those columns once more — the
-    # price of never catching a mid-append Derby failure, which would
-    # leave partially-committed rows behind (stock JDBC appends are not
-    # transactional across partitions, so try-then-retry is unsafe).
+    # batches that need it. The probe is one shuffle-free job (isEmpty is
+    # a CollectLimit) over ONLY the varchar string columns, whose tasks
+    # each stop at their first null; proving a batch null-FREE does read
+    # those columns once more. That is the price of never catching a
+    # mid-append Derby failure, which would leave partially-committed
+    # rows behind (stock JDBC appends are not transactional across
+    # partitions, so try-then-retry is unsafe).
     vc = {
         c: n
         for c, n in (varchar_lengths or {}).items()
@@ -313,9 +334,7 @@ def jdbc_sync_table(
         any_null = functools.reduce(
             operator.or_, [F.col(c).isNull() for c in vc]
         )
-        has_null_vc = bool(
-            out.select(*vc).filter(any_null).limit(1).count()
-        )
+        has_null_vc = not out.select(*vc).filter(any_null).isEmpty()
     if not has_null_vc:
         jdbc_writer(out, url, qtable, props=props, mode="append")
         return

@@ -18,7 +18,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="cpt-sync-tests", master="local[8]", shuffle_partitions=8)
+    # master: local[SPARK_GRAFT_CPUS], get_spark's host-sized default
+    spark = get_spark(app_name="cpt-sync-tests", shuffle_partitions=8)
     yield spark
     # End-of-session scratch sweep: shut the whole embedded Derby engine
     # down (releases every booted database), then clear the scratch tree.

@@ -121,6 +121,16 @@ def test_partitioned_parallel_read(spark, sf_dir, derby_url):
     assert back.count() == hi
 
 
+def _type_name(spark, url: str, table: str, column: str) -> str | None:
+    """Declared type of ``table.column`` on the target, from JDBC metadata."""
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+    try:
+        rs = conn.getMetaData().getColumns(None, None, table, column)
+        return rs.getString("TYPE_NAME") if rs.next() else None
+    finally:
+        conn.close()
+
+
 def test_null_strings_into_varchar_columns(spark, derby_url):
     """NULL strings must survive the sync into varchar-declared columns.
 
@@ -146,14 +156,7 @@ def test_null_strings_into_varchar_columns(spark, derby_url):
     rows = {r["ID"]: (r["NAME"], r["NOTE"]) for r in back.collect()}
     assert rows == {1: ("alpha", None), 2: (None, None), 3: ("gamma", None)}
     # the declared type survived the detour (VARCHAR, not CLOB)
-    jmeta = spark._sc._jvm.java.sql.DriverManager.getConnection(  # noqa: SLF001
-        derby_url
-    )
-    try:
-        rs = jmeta.getMetaData().getColumns(None, None, "NULL_VC", "NAME")
-        assert rs.next() and rs.getString("TYPE_NAME") == "VARCHAR"
-    finally:
-        jmeta.close()
+    assert _type_name(spark, derby_url, "NULL_VC", "NAME") == "VARCHAR"
 
     # a null-free batch must keep the direct fast path (no shadow left)
     df2 = spark.createDataFrame([(9, "z", "ok")], "id int, name string, note string")
@@ -182,3 +185,50 @@ def test_timestamp_ntz_round_trip(spark, derby_url):
         for r in back.selectExpr("ID", "CAST(TS AS TIMESTAMP_NTZ) AS TS").collect()
     }
     assert rows == {1: datetime.datetime(2024, 1, 2, 3, 4, 5), 2: None}
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sync_null_free_batch_runs_two_jobs(spark, sf_dir, derby_url):
+    """A null-free batch costs two Spark jobs: the NULL-string probe and
+    the write. The probe is one shuffle-free job that stops at the first
+    NULL (a limit-then-count probe plans a shuffle and runs two).
+    NATION is one parquet file: a single partition, 25 NULL-free rows."""
+    df = load(spark, sf_dir, "nation")
+    assert df.rdd.getNumPartitions() == 1
+    n = _jobs_in(spark, "sync-null-free", lambda: jdbc_sync_table(
+        spark, df, derby_url, "probe_jobs",
+        varchar_lengths={"n_name": 25}, flavor="ansi",
+    ))
+    assert n == 2, f"jdbc_sync_table ran {n} jobs; want the probe and the write"
+    back = jdbc_reader(spark, derby_url, "probe_jobs")
+    assert sorted(tuple(r) for r in back.collect()) == sorted(
+        tuple(r) for r in df.collect()
+    )
+
+
+def test_sync_finds_null_in_last_partition(spark, derby_url):
+    """The probe sees a NULL that sits only in the last of 4 partitions:
+    the batch takes the shadow detour, every value lands intact and the
+    column stays VARCHAR."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 400, numPartitions=4).select(
+        "id", F.when(F.col("id") != 399, F.col("id").cast("string")).alias("name")
+    )
+    jdbc_sync_table(
+        spark, df, derby_url, "null_last",
+        varchar_lengths={"name": 20}, flavor="ansi",
+    )
+    back = {r["ID"]: r["NAME"] for r in jdbc_reader(spark, derby_url, "null_last").collect()}
+    assert back == {i: (None if i == 399 else str(i)) for i in range(400)}
+    assert _type_name(spark, derby_url, "NULL_LAST", "NAME") == "VARCHAR"

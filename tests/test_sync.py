@@ -253,9 +253,10 @@ def test_jdbc_cdc_null_op_row_inserts(spark):
     """NULL op marker reads as upsert on BOTH arms (r8 review): the
     INSERT arm's `op <> 'D'` alone evaluates to NULL for a NULL marker,
     silently discarding new-key rows while existing keys still updated.
-    Drives merge_cdc_statement directly over SQL (Spark's JDBC writer
-    cannot ship NULL strings into Derby VARCHAR, which is a writer
-    limitation, not a MERGE one)."""
+    Drives merge_cdc_statement directly over SQL, so the MERGE is tested
+    apart from the staging write (that write lands NULL strings in Derby
+    VARCHAR through jdbc_sync_table's CLOB shadow table, covered end to
+    end by test_jdbc_cdc_null_strings_through_shadow)."""
     import os
 
     from cpt_database_sync_spark.sources.sync import (
@@ -337,6 +338,42 @@ def test_jdbc_cdc_null_key_updates_then_deletes_one_row(spark):
     assert _replica(spark, url) == [(7, 2.0), (8, 3.0)]
 
 
+def test_jdbc_cdc_null_strings_through_shadow(spark):
+    """A CDC batch with NULLs in its VARCHAR columns stages through the
+    CLOB shadow table (a direct append is rejected by Derby): a tombstone
+    whose event_type and props are NULL deletes its row, and an upsert
+    that sets props to NULL stores the NULL."""
+    from cpt_database_sync_spark.sources.sync import jdbc_cdc_batch, jdbc_sync_table
+
+    url = _fresh_derby(spark, "cdcnullstr_")
+    lengths = {"event_type": 40, "props": 400}
+    cols = "event_id BIGINT, event_type STRING, props STRING, value DOUBLE"
+    seed = spark.createDataFrame(
+        [(1, "click", "a=1", 1.0), (2, "view", "b=2", 2.0), (3, "buy", "c=3", 3.0)],
+        cols,
+    )
+    jdbc_sync_table(spark, seed, url, "replica", varchar_lengths=lengths, flavor="ansi")
+    batch = spark.createDataFrame(
+        [(1, None, None, None, "D"), (2, "view", None, 2.5, "U")],
+        cols + ", op STRING",
+    )
+    jdbc_cdc_batch(
+        spark, batch, url, "replica", ["event_id"],
+        varchar_lengths={**lengths, "op": 1},
+    )
+    assert _replica(spark, url) == [(2, "view", None, 2.5), (3, "buy", "c=3", 3.0)]
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.getMetaData().getTables(None, "APP", None, None)
+        tables = []
+        while rs.next():
+            tables.append(rs.getString("TABLE_NAME"))
+        rs.close()
+    finally:
+        conn.close()
+    assert tables == ["REPLICA"], "staging and shadow tables must be dropped"
+
+
 def test_jdbc_merge_keeps_one_key_index(spark):
     """Repeated batches, null-free and NULL-keyed, index the target's key
     once and reuse that index."""
@@ -378,3 +415,42 @@ def test_jdbc_merge_reuses_primary_key_index(spark):
         jdbc_upsert_batch(spark, batch, url, "replica", ["k", "j"])
     assert _indexes(spark, url, "REPLICA") == before
     assert _replica(spark, url) == [(1, 1, 3.0), (2, 1, 2.0)]
+
+
+def test_derby_shutdown_warns_only_on_real_failures():
+    """Derby answers a shutdown with an SQLException. 08006 (database
+    shut down), XJ004 (not booted or missing) and XJ015 (engine shut
+    down) mean success and stay silent; any other SQLState, or an error
+    with none, is reported as a warning naming it."""
+    import types
+    import warnings
+
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from cpt_database_sync_spark.sources.sync import derby_shutdown
+
+    class FakeSQLError(Py4JJavaError):
+        def __init__(self, state):
+            self.java_exception = types.SimpleNamespace(getSQLState=lambda: state)
+
+        def __str__(self):
+            return "java.sql.SQLException: fake"
+
+    def fake_spark(error):
+        def get_connection(url):
+            raise error
+
+        manager = types.SimpleNamespace(getConnection=get_connection)
+        return types.SimpleNamespace(_jvm=types.SimpleNamespace(
+            java=types.SimpleNamespace(sql=types.SimpleNamespace(DriverManager=manager))
+        ))
+
+    for state in ("08006", "XJ004", "XJ015"):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            derby_shutdown(fake_spark(FakeSQLError(state)), "/no/db")
+    with pytest.warns(UserWarning, match="SQLState XSDB6"):
+        derby_shutdown(fake_spark(FakeSQLError("XSDB6")), "/no/db")
+    with pytest.warns(UserWarning, match="SQLState None"):
+        derby_shutdown(fake_spark(RuntimeError("gateway closed")), "/no/db")
