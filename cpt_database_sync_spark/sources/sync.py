@@ -216,37 +216,68 @@ def jdbc_writer(df: DataFrame, url: str, table: str, props: dict | None = None,
     return writer.save()
 
 
-def _execute_jdbc(spark: SparkSession, url: str, statements: list[str]) -> None:
-    """Run DDL statements on the target over a driver-side JDBC connection
-    (py4j → java.sql.DriverManager; the driver class is auto-loaded from
-    Spark's classpath, as Spark's own JDBC source does)."""
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+def _connect(spark: SparkSession, url: str):
+    """One driver-side JDBC connection (py4j → java.sql.DriverManager; the
+    driver class is auto-loaded from Spark's classpath, as Spark's own
+    JDBC source does)."""
+    return spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+
+
+def _execute(conn, statements: list[str]) -> None:
+    """Run SQL statements, in order, on an open connection."""
+    stmt = conn.createStatement()
     try:
-        stmt = conn.createStatement()
         for sql in statements:
             stmt.execute(sql)
-        stmt.close()
     finally:
-        conn.close()
+        stmt.close()
 
 
-def _recreate_table(spark: SparkSession, url: str, qtable: str, ddl: str) -> None:
-    """DROP TABLE (ignoring failure: the table may be absent — the
-    reference ignores that too) then CREATE on one connection.
-    Connectivity/auth errors propagate from getConnection; if a DROP
-    failure was real (e.g. lock timeout), the CREATE raises the accurate
-    'already exists' loudly."""
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+def _table_exists(conn, table: str) -> bool:
+    """Whether the connection's current schema holds ``table`` (a name as
+    stored, unquoted). The metadata lookup escapes ``_`` and ``%`` with
+    the driver's search-string escape; a driver without one (Derby
+    reports "") lists wildcard matches too, so only a row naming the
+    schema and table exactly counts."""
+    from cpt_database_sync_spark.sources.identifiers import escape_name_pattern
+
+    md = conn.getMetaData()
+    esc = md.getSearchStringEscape()
+    schema = conn.getSchema()
+    rs = md.getTables(
+        conn.getCatalog(),
+        escape_name_pattern(schema, esc),
+        escape_name_pattern(table, esc),
+        None,
+    )
     try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(f"DROP TABLE {qtable}")
-        except Exception:
-            pass
-        stmt.execute(ddl)
-        stmt.close()
+        while rs.next():
+            if rs.getString("TABLE_NAME") == table and schema in (
+                None, rs.getString("TABLE_SCHEM")
+            ):
+                return True
+        return False
     finally:
-        conn.close()
+        rs.close()
+
+
+def _recreate_table(conn, table: str, quote: str, ddl: str) -> None:
+    """DROP ``table`` if the target lists it, then CREATE it from ``ddl``.
+    An absent table is ignored, as the reference ignores it, but no DROP
+    is sent for it: a failed statement costs a Java exception through
+    py4j, and a CDC batch's staging table is absent on every batch. A
+    DROP that fails on a listed table (e.g. a lock timeout) raises."""
+    from cpt_database_sync_spark.sources.identifiers import quote_identifier
+
+    qtable = quote_identifier(table, quote)
+    drop = [f"DROP TABLE {qtable}"] if _table_exists(conn, table) else []
+    _execute(conn, [*drop, ddl])
+
+
+def _stores_upper(conn) -> bool:
+    """The target's identifier folding, read from the connection's
+    DatabaseMetaData (`sync/M2H2SchemaConverter.java:56`)."""
+    return bool(conn.getMetaData().storesUpperCaseIdentifiers())
 
 
 def jdbc_sync_table(
@@ -260,9 +291,11 @@ def jdbc_sync_table(
     quote: str | None = None,
     fold: bool | None = None,
 ) -> None:
-    """The reference's full table sync with *its* DDL: DROP TABLE (ignore
-    absent) → CREATE TABLE from the reference type matrix → batched insert
+    """The reference's full table sync with *its* DDL: DROP TABLE when the
+    target lists it (an absent table is ignored without a DROP) → CREATE
+    TABLE from the reference type matrix → batched insert
     (`handler/Handler.java:42-55` + `sync/M2H2SchemaConverter.java:48-118`).
+    A DROP that fails on a listed table raises.
 
     Spark's ``mode("overwrite")`` would instead derive DDL from the JDBC
     dialect's defaults, and ``createTableColumnTypes`` only accepts Spark-
@@ -273,12 +306,34 @@ def jdbc_sync_table(
     ``fold=None`` probes the target: when it stores upper-case identifiers
     (H2/Derby-class), table and column names are upper-folded before
     quoting (`sync/M2H2SchemaConverter.java:56-60,83-87`) so the created
-    objects stay reachable to ordinary unquoted SQL on that target."""
+    objects stay reachable to ordinary unquoted SQL on that target.
+
+    The driver side (fold probe, DDL, the NULL-string shadow's
+    ``INSERT … SELECT``) runs on one driver connection; the executors'
+    append opens its own."""
+    conn = _connect(spark, url)
+    try:
+        _sync_table(conn, df, url, table, props, varchar_lengths, flavor, quote, fold)
+    finally:
+        conn.close()
+
+
+def _sync_table(
+    conn,
+    df: DataFrame,
+    url: str,
+    table: str,
+    props: dict | None,
+    varchar_lengths: dict[str, int] | None,
+    flavor: str,
+    quote: str | None,
+    fold: bool | None,
+) -> None:
+    """``jdbc_sync_table`` on the caller's open driver connection."""
     from cpt_database_sync_spark.functions.typelattice import create_table_ddl
     from cpt_database_sync_spark.sources.identifiers import (
         fold_case,
         quote_identifier,
-        stores_upper_case,
     )
 
     if quote is None:
@@ -287,7 +342,7 @@ def jdbc_sync_table(
         # speaks the standard double quote
         quote = "`" if flavor == "mysql" else '"'
     if fold is None:
-        fold = stores_upper_case(spark, url)
+        fold = _stores_upper(conn)
     table = fold_case(table, fold)
     out = df
     if fold:
@@ -299,7 +354,7 @@ def jdbc_sync_table(
     ddl = create_table_ddl(
         table, out.schema, varchar_lengths, flavor=flavor, quote=quote
     )
-    _recreate_table(spark, url, qtable, ddl)
+    _recreate_table(conn, table, quote, ddl)
     # NULL-string binding: Spark's Derby dialect types every NULL string
     # as CLOB (setNull(Types.CLOB)), which Derby rejects against the
     # VARCHAR columns the reference DDL declares (ERROR 22005) — one null
@@ -352,16 +407,12 @@ def jdbc_sync_table(
         else quote_identifier(c, quote)
         for c in out.columns
     )
-    _recreate_table(spark, url, qshadow, shadow_ddl)
+    _recreate_table(conn, shadow, quote, shadow_ddl)
     jdbc_writer(out, url, qshadow, props=props, mode="append")
-    _execute_jdbc(
-        spark,
-        url,
-        [
-            f"INSERT INTO {qtable} SELECT {sel_cols} FROM {qshadow}",
-            f"DROP TABLE {qshadow}",
-        ],
-    )
+    _execute(conn, [
+        f"INSERT INTO {qtable} SELECT {sel_cols} FROM {qshadow}",
+        f"DROP TABLE {qshadow}",
+    ])
 
 
 def upsert_statement(table: str, columns: list[str], quote: str = "`") -> str:
@@ -505,12 +556,14 @@ def jdbc_cdc_batch(
     fold: bool | None = None,
 ) -> None:
     """Apply one CDC (micro-)batch — upserts + deletes, or upserts only
-    when ``op_column`` is None — to a JDBC target. Executors append the
-    batch to a staging table; then one driver connection runs
+    when ``op_column`` is None — to a JDBC target, over one driver
+    connection. On it: the fold probe (when ``fold`` is None), the staging
+    table's recreate (and the NULL-string shadow's ``INSERT … SELECT``),
     ``ensure_key_index``, a NULL-key probe of the staging table (at most
     one row read, no Spark job), one ``merge_cdc_statement`` and DROP of
-    the staging table. ``fold`` lets per-batch callers probe the
-    target's identifier folding once per stream.
+    the staging table. The executors' staging append opens its own
+    connections. ``fold`` lets per-batch callers probe the target's
+    identifier folding once per stream.
 
     Side effect: the first batch indexes the target's key columns unless
     an index, PRIMARY KEY or UNIQUE constraint already leads with them.
@@ -520,23 +573,21 @@ def jdbc_cdc_batch(
     from cpt_database_sync_spark.sources.identifiers import (
         fold_case,
         quote_identifier,
-        stores_upper_case,
     )
 
-    if fold is None:
-        fold = stores_upper_case(spark, url)
-    staging = fold_case(f"{table}_stage", fold)
-    jdbc_sync_table(
-        spark, batch_df, url, staging, props=props,
-        varchar_lengths=varchar_lengths, flavor=flavor, fold=fold,
-    )
-    cols = [fold_case(c, fold) for c in batch_df.columns]
-    keys = [fold_case(k, fold) for k in key_columns]
-    target = fold_case(table, fold)
-    op = None if op_column is None else fold_case(op_column, fold)
-    any_null = " OR ".join(f"{quote_identifier(k)} IS NULL" for k in keys)
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)  # noqa: SLF001
+    conn = _connect(spark, url)
     try:
+        if fold is None:
+            fold = _stores_upper(conn)
+        staging = fold_case(f"{table}_stage", fold)
+        _sync_table(
+            conn, batch_df, url, staging, props, varchar_lengths, flavor, None, fold
+        )
+        cols = [fold_case(c, fold) for c in batch_df.columns]
+        keys = [fold_case(k, fold) for k in key_columns]
+        target = fold_case(table, fold)
+        op = None if op_column is None else fold_case(op_column, fold)
+        any_null = " OR ".join(f"{quote_identifier(k)} IS NULL" for k in keys)
         ensure_key_index(conn, target, keys)
         stmt = conn.createStatement()
         rs = stmt.executeQuery(

@@ -4,6 +4,7 @@ spot value equality."""
 from __future__ import annotations
 
 import shutil
+import types
 
 from cpt_database_sync_spark.sources.sync import scratch_dir, sync_database
 from cpt_database_sync_spark.sources.tables import ALL_TABLES, load
@@ -215,6 +216,32 @@ def test_stream_checkpoint_processes_only_new_files(spark, sf_dir):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def test_stream_checkpoints_use_filesystem_manager(spark):
+    """get_spark's sessions rename checkpoint and state-store files
+    through the FileSystem API: the manager Spark builds for a checkpoint
+    path is FileSystemBasedCheckpointFileManager. Spark's default,
+    FileContextBasedCheckpointFileManager, starts a `readlink` process per
+    rename on a local path. Built the way Spark builds it, so a Spark
+    upgrade that moves or renames the class fails here."""
+    jvm = spark._jvm
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing"
+    factory = getattr(getattr(jvm, f"{pkg}.CheckpointFileManager$"), "MODULE$")
+    path = jvm.org.apache.hadoop.fs.Path(f"{scratch_dir()}/ckpt_manager")
+    manager = factory.create(path, spark._jsparkSession.sessionState().newHadoopConf())
+    assert manager.getClass().getName() == f"{pkg}.FileSystemBasedCheckpointFileManager"
+
+
+def _execute_jdbc(spark, url: str, statements: list[str]) -> None:
+    """Run SQL statements on the target over a new driver connection."""
+    from cpt_database_sync_spark.sources.sync import _connect, _execute
+
+    conn = _connect(spark, url)
+    try:
+        _execute(conn, statements)
+    finally:
+        conn.close()
+
+
 def test_jdbc_merge_null_key_upserts_one_row(spark):
     """NULL-safe MERGE keys (r8 review): a NULL-keyed group must hold
     exactly ONE serving row across repeated upsert batches — plain
@@ -260,7 +287,6 @@ def test_jdbc_cdc_null_op_row_inserts(spark):
     import os
 
     from cpt_database_sync_spark.sources.sync import (
-        _execute_jdbc,
         jdbc_reader,
         merge_cdc_statement,
         sweep_scratch,
@@ -362,16 +388,7 @@ def test_jdbc_cdc_null_strings_through_shadow(spark):
         varchar_lengths={**lengths, "op": 1},
     )
     assert _replica(spark, url) == [(2, "view", None, 2.5), (3, "buy", "c=3", 3.0)]
-    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)
-    try:
-        rs = conn.getMetaData().getTables(None, "APP", None, None)
-        tables = []
-        while rs.next():
-            tables.append(rs.getString("TABLE_NAME"))
-        rs.close()
-    finally:
-        conn.close()
-    assert tables == ["REPLICA"], "staging and shadow tables must be dropped"
+    assert _tables(spark, url) == ["REPLICA"], "staging and shadow tables must be dropped"
 
 
 def test_jdbc_merge_keeps_one_key_index(spark):
@@ -400,7 +417,7 @@ def test_jdbc_merge_keeps_one_key_index(spark):
 def test_jdbc_merge_reuses_primary_key_index(spark):
     """A target whose key is its PRIMARY KEY already has a key index:
     the upsert adds none."""
-    from cpt_database_sync_spark.sources.sync import _execute_jdbc, jdbc_upsert_batch
+    from cpt_database_sync_spark.sources.sync import jdbc_upsert_batch
 
     url = _fresh_derby(spark, "pkindex_")
     _execute_jdbc(spark, url, [
@@ -415,6 +432,139 @@ def test_jdbc_merge_reuses_primary_key_index(spark):
         jdbc_upsert_batch(spark, batch, url, "replica", ["k", "j"])
     assert _indexes(spark, url, "REPLICA") == before
     assert _replica(spark, url) == [(1, 1, 3.0), (2, 1, 2.0)]
+
+
+def _tables(spark, url: str) -> list[str]:
+    """Names of the tables and views in the APP schema, sorted."""
+    conn = spark._sc._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.getMetaData().getTables(None, "APP", None, None)
+        tables = []
+        while rs.next():
+            tables.append(rs.getString("TABLE_NAME"))
+        rs.close()
+        return sorted(tables)
+    finally:
+        conn.close()
+
+
+class _RecordingConnection:
+    """A JDBC connection that records the SQL its statements execute."""
+
+    def __init__(self, conn):
+        self._conn, self.sql = conn, []
+
+    def createStatement(self):
+        stmt, log = self._conn.createStatement(), self.sql
+
+        def execute(sql):
+            log.append(sql)
+            return stmt.execute(sql)
+
+        return types.SimpleNamespace(execute=execute, close=stmt.close)
+
+    def __getattr__(self, name):
+        return getattr(self._conn, name)
+
+
+def test_recreate_table_drops_only_a_listed_table(spark):
+    """No DROP is sent for an absent table, and nothing raises; a present
+    table is dropped and created again. A DROP that fails on a present
+    table (here a view depends on it) raises that DROP's error."""
+    import pytest
+
+    from cpt_database_sync_spark.sources.sync import _connect, _execute, _recreate_table
+
+    url = _fresh_derby(spark, "recreate_")
+    ddl = 'CREATE TABLE "T" ("K" INT)'
+    conn = _RecordingConnection(_connect(spark, url))
+    try:
+        _recreate_table(conn, "T", '"', ddl)
+        assert conn.sql == [ddl]
+        _recreate_table(conn, "T", '"', ddl)
+        assert conn.sql == [ddl, 'DROP TABLE "T"', ddl]
+        _execute(conn, ['CREATE VIEW "V" AS SELECT * FROM "T"'])
+        with pytest.raises(Exception, match="DROP TABLE"):
+            _recreate_table(conn, "T", '"', ddl)
+    finally:
+        conn.close()
+    assert _tables(spark, url) == ["T", "V"]
+
+
+def test_sync_table_lookup_escapes_name_pattern(spark):
+    """The existence lookup escapes the `_` wildcard: with a table AXB
+    present, syncing A_B neither drops nor trips over AXB. A_B is
+    created, then dropped and created again by a second sync, and AXB
+    keeps its row."""
+    from cpt_database_sync_spark.sources.sync import jdbc_reader, jdbc_sync_table
+
+    url = _fresh_derby(spark, "wildcard_")
+    _execute_jdbc(spark, url, [
+        'CREATE TABLE "AXB" ("K" INT)', 'INSERT INTO "AXB" VALUES (7)'
+    ])
+    df = spark.createDataFrame([(1,), (2,)], "k INT")
+    for _ in range(2):
+        jdbc_sync_table(spark, df, url, "a_b", flavor="ansi")
+    assert _tables(spark, url) == ["AXB", "A_B"]
+    assert [tuple(r) for r in jdbc_reader(spark, url, "AXB").collect()] == [(7,)]
+    assert sorted(tuple(r) for r in jdbc_reader(spark, url, "A_B").collect()) == [
+        (1,), (2,)
+    ]
+
+
+def test_jdbc_cdc_batch_replaces_leftover_staging_table(spark):
+    """A staging table left behind by a failed batch (here with another
+    schema and a stale row) is dropped and recreated by the next batch,
+    and the replica ends exact."""
+    from cpt_database_sync_spark.sources.sync import jdbc_cdc_batch, jdbc_sync_table
+
+    url = _fresh_derby(spark, "leftover_")
+    seed = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k INT, v DOUBLE")
+    jdbc_sync_table(spark, seed, url, "replica", flavor="ansi")
+    _execute_jdbc(spark, url, [
+        'CREATE TABLE "REPLICA_STAGE" ("X" VARCHAR(5))',
+        "INSERT INTO \"REPLICA_STAGE\" VALUES ('stale')",
+    ])
+    batch = spark.createDataFrame(
+        [(1, 5.0, "U"), (2, 0.0, "D"), (3, 3.0, "U")], "k INT, v DOUBLE, op STRING"
+    )
+    jdbc_cdc_batch(spark, batch, url, "replica", ["k"], varchar_lengths={"op": 1})
+    assert _replica(spark, url) == [(1, 5.0), (3, 3.0)]
+    assert _tables(spark, url) == ["REPLICA"]
+
+
+def test_sync_and_cdc_batch_open_one_driver_connection(spark, monkeypatch):
+    """jdbc_sync_table and jdbc_cdc_batch each run all their driver-side
+    SQL, fold probe and NULL-string shadow included, on one driver
+    connection. The executors' appends open their own connections, which
+    this does not count."""
+    from cpt_database_sync_spark.sources import sync
+
+    url = _fresh_derby(spark, "oneconn_")
+    opened = []
+    connect = sync._connect
+
+    def counting_connect(spark_, url_):
+        opened.append(url_)
+        return connect(spark_, url_)
+
+    monkeypatch.setattr(sync, "_connect", counting_connect)
+    lengths = {"event_type": 40}
+    cols = "event_id BIGINT, event_type STRING"
+    seed = spark.createDataFrame([(1, "a"), (2, None)], cols)
+    sync.jdbc_sync_table(
+        spark, seed, url, "replica", varchar_lengths=lengths, flavor="ansi"
+    )
+    assert len(opened) == 1
+    batch = spark.createDataFrame(
+        [(1, None, "U"), (2, "b", "D"), (3, "c", "U")], cols + ", op STRING"
+    )
+    sync.jdbc_cdc_batch(
+        spark, batch, url, "replica", ["event_id"],
+        varchar_lengths={**lengths, "op": 1},
+    )
+    assert len(opened) == 2
+    assert _replica(spark, url) == [(1, None), (3, "c")]
 
 
 def test_derby_shutdown_warns_only_on_real_failures():
