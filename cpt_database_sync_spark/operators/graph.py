@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import bounded_cache
+from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 # Minimum absolute support for a reported co-occurrence pair.
@@ -152,8 +152,8 @@ def _node_rows_df(flows: DataFrame, rows, fields) -> DataFrame:
         [T.StructField("node", node_t, False)]
         + [T.StructField(n, t or node_t, nl) for n, t, nl in fields]
     )
-    return flows.sparkSession.createDataFrame(
-        sorted(rows, key=lambda r: r[0]), schema
+    return local_frame(
+        flows.sparkSession, sorted(rows, key=lambda r: r[0]), schema
     )
 
 

@@ -31,7 +31,7 @@ from cpt_database_sync_spark.plans.golden import (
 )
 from cpt_database_sync_spark.functions.textnorm import norm_ws, sql_norm_ws
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import bounded_cache, release
+from cpt_database_sync_spark.session import bounded_cache, local_frame, release
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 SHINGLE_K = 3
@@ -508,7 +508,7 @@ def _cc_driver(rows, edges: DataFrame) -> DataFrame:
             T.StructField("component", node_t, False),
         ]
     )
-    return edges.sparkSession.createDataFrame(labels, schema)
+    return local_frame(edges.sparkSession, labels, schema)
 
 
 def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:

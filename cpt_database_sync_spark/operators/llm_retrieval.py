@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import bounded_cache
+from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load
 
 # Query terms chosen from the fixture vocabulary; any literal set works —
@@ -142,7 +142,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not stats["n"] or stats["avgdl"] is None:
         # empty corpus: no documents, no scores — and no avgdl to fold
         # into the literal scoring expression
-        return spark.createDataFrame([], "doc_id bigint, score double, rn int")
+        return local_frame(spark, [], "doc_id bigint, score double, rn int")
     n, avgdl = float(stats["n"]), float(stats["avgdl"])
     score = None
     for i in range(len(BM25_QUERY_TERMS)):

@@ -31,7 +31,7 @@ from cpt_database_sync_spark.plans.golden import (
     golden_oracle,
 )
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import bounded_cache
+from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load
 
 TOPK = 5
@@ -430,7 +430,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _empty_topk(spark: SparkSession) -> DataFrame:
     """The empty-corpus result of every IVF variant: the top-k schema
     with zero rows (matches the oracles, which also yield nothing)."""
-    return spark.createDataFrame([], "q_id bigint, n_id bigint, rn int, sim double")
+    return local_frame(spark, [], "q_id bigint, n_id bigint, rn int, sim double")
 
 
 def _ivf_topk(scored: DataFrame) -> DataFrame:
@@ -842,7 +842,7 @@ def kmeans_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not cent_rows:
         # empty corpus: no seed centroids, nothing to cluster
-        return spark.createDataFrame([], "vec_id bigint, cid bigint")
+        return local_frame(spark, [], "vec_id bigint, cid bigint")
 
     def centroid_literal(rows) -> Column:
         # r13 (guide §5.1 — the driver is part of the plan): the K x
@@ -882,7 +882,8 @@ def kmeans_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
             else centroid_literal(rows)
         )
         if lit is None:
-            cent_df = emb.sparkSession.createDataFrame(
+            cent_df = local_frame(
+                emb.sparkSession,
                 [(int(r["cid"]), [float(v) for v in r["ce"]]) for r in rows],
                 "cid bigint, ce array<double>",
             )

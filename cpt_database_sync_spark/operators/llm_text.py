@@ -18,6 +18,7 @@ from cpt_database_sync_spark.plans.golden import (
     golden_oracle,
 )
 from cpt_database_sync_spark.plans.registry import register
+from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 # Language marker patterns — same regex dialect subset works in Java
@@ -896,7 +897,8 @@ def _bpe_learn_driver(spark: SparkSession, rows) -> DataFrame:
             T.StructField("n_tokens", T.IntegerType(), False),
         ]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(w, f, " ".join(syms[w]), len(syms[w])) for w, f in sorted(rows)],
         schema,
     )
@@ -2171,9 +2173,7 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     for chunk, cnt in counts:
         bal_rows.append((chunk, running))
         running += cnt
-    bal = spark.createDataFrame(
-        bal_rows or [], schema="chunk long, bal long"
-    )
+    bal = local_frame(spark, bal_rows, "chunk long, bal long")
     w = Window.partitionBy("chunk").orderBy("n_tokens", "doc_id")
     ranked = t.join(F.broadcast(bal), "chunk").select(
         "doc_id",

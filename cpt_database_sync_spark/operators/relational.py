@@ -31,6 +31,7 @@ from cpt_database_sync_spark.functions.numeric import (
     sql_dsum,
 )
 from cpt_database_sync_spark.plans.registry import register
+from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import load
 
 
@@ -352,9 +353,10 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the fact side streams; no shuffle occurs.
     """
     p = load(spark, sf_dir, "part")
-    buckets = spark.createDataFrame(
+    buckets = local_frame(
+        spark,
         [(1, 10, "small"), (10, 25, "medium"), (25, 51, "large")],
-        ["lo", "hi", "bucket"],
+        "lo int, hi int, bucket string",
     )
     return (
         p.join(

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import bounded_cache
+from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
 
@@ -288,7 +288,7 @@ def hist_empty_result(spark):
     fields = "event_type STRING, n BIGINT, " + ", ".join(
         f"est_p{int(q * 100)} DOUBLE" for q in HIST_QS
     )
-    return spark.createDataFrame([], fields)
+    return local_frame(spark, [], fields)
 
 
 def hist_bin_col(lo: float, hi: float):

@@ -21,11 +21,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     skipped while the same sf_dir stays registered — each bind re-reads
     parquet footers)."""
     marker = "spark.cpt_database_sync.registered_sf_dir"
-    try:
-        if spark.conf.get(marker) == sf_dir:
-            return
-    except Exception:
-        pass
+    if spark.conf.get(marker, None) == sf_dir:
+        return
     for t in ALL_TABLES:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
     spark.conf.set(marker, sf_dir)

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from cpt_database_sync_spark.plans.registry import register
+from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import ALL_TABLES, load
 
 
@@ -68,7 +69,7 @@ def schema_introspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the raw nanos-timestamp column name/order, same as our loader.
         for i, f in enumerate(table_schema(spark, sf_dir, t).fields, start=1):
             rows.append((t, f.name, i))
-    return spark.createDataFrame(rows, "table_name string, column_name string, ordinal int")
+    return local_frame(spark, rows, "table_name string, column_name string, ordinal int")
 
 
 _PROFILE_COLS = (
@@ -140,8 +141,10 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Profile ONTO the static column spine: a groupBy over an empty table
     # loses its groups, but "profile these 5 columns" must still answer
     # one zero-count row per column (ANSI: the oracle's per-column global
-    # aggregates do). The spine is a 5-row literal — broadcast, free.
-    spine = spark.createDataFrame([(c,) for c in _PROFILE_COLS], "column string")
+    # aggregates do). The spine is a 5-row ``LocalRelation`` that joins
+    # as a broadcast; built with ``createDataFrame(list)`` it cost a
+    # Python-worker stage on every execution (``session.local_frame``).
+    spine = local_frame(spark, [(c,) for c in _PROFILE_COLS], "column string")
     zero = F.lit(0).cast("long")
     return spine.join(prof, "column", "left").select(
         "column",
@@ -226,7 +229,8 @@ def catalog_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((t, c.name, c.dataType, i))
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, column_name string, data_type string, ordinal int",
     )

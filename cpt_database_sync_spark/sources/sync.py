@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
+from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import load
 
 _scratch_reaped = False
@@ -685,8 +686,9 @@ def sync_database_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep_scratch("sync_db_")
     target = tempfile.mkdtemp(prefix="sync_db_", dir=scratch_dir())
     counts = sync_database(spark, sf_dir, target)
-    return spark.createDataFrame(
-        [(t, n) for t, n in counts.items()],
+    return local_frame(
+        spark,
+        list(counts.items()),
         "table_name string, n_rows bigint",
     )
 
@@ -1205,7 +1207,8 @@ def sync_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Zero-contribution seed per edge: guarantees one group per edge so
     # empty tables still yield their all-zero audit row (degenerate-
     # fixture gate); a (NULL key, 0, 0) seed adds 0 to every statistic.
-    seeds = spark.createDataFrame(
+    seeds = local_frame(
+        spark,
         [(name, None, 0, 0) for name, *_ in _FK_EDGES],
         "_e string, _k bigint, _c int, _p int",
     )

@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.functions.numeric import sql_dsum
 from cpt_database_sync_spark.plans.registry import register
+from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import (
     events_raw_schema,
-    file_meta,
     normalize_events_ts,
     parquet_schema,
 )
@@ -132,7 +132,7 @@ def run_to_table(
         # the source produced zero micro-batches: no sink write ever ran.
         # An empty frame with the stream's result schema is the right
         # answer, not an AnalysisException on a missing path.
-        result = spark.createDataFrame([], stream_df.schema)
+        result = local_frame(spark, [], stream_df.schema)
         shutil.rmtree(f"{scratch_root}/{name}", ignore_errors=True)
         return result
     # localCheckpoint materializes the result into executor block storage
@@ -488,7 +488,7 @@ def serve_keyed_stream(
         )
     if not created:
         # zero micro-batches: the serving table was never created
-        return stream_df.sparkSession.createDataFrame([], stream_df.schema), progresses
+        return local_frame(stream_df.sparkSession, [], stream_df.schema), progresses
     back = jdbc_reader(spark, url, table)
     # Derby folded identifiers upper; restore the stream's column names
     back = back.toDF(*[c.lower() for c in back.columns]).select(*stream_df.columns)
@@ -937,10 +937,8 @@ def cusum_daily_stream(ev: DataFrame) -> DataFrame:
 def orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders as an unbounded source (the `events_stream` shape over the
     orders fixture file; a deployment points at the landing directory of
-    the order feed). The schema probe is memoized by ``file_meta``."""
-    schema = file_meta(
-        parquet_schema, os.path.join(sf_dir, "orders.parquet"), spark
-    )
+    the order feed). The schema probe is memoized by ``parquet_schema``."""
+    schema = parquet_schema(os.path.join(sf_dir, "orders.parquet"), spark)
     return (
         spark.readStream.schema(schema)
         .format("parquet")

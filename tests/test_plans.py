@@ -1182,19 +1182,37 @@ def test_frequent_pairs_hof_expansion_plan(spark, sf_dir):
         assert cols <= {"ok", "pa", "pb"}, f"unexpected shuffle key: {cols}"
 
 
-def test_pagerank_iterations_reuse_checkpointed_edges(spark, sf_dir):
+def _graph_lane_plans(op, spark, sf_dir, monkeypatch, mode="formatted"):
+    """``(driver lane, distributed lane)`` plans of one graph operator.
+    The driver lane's result is a driver literal (``LocalTableScan``);
+    the distributed loop reads the checkpointed edge relation
+    (``Scan ExistingRDD``), forced by a 0 edge ceiling and a fresh memo."""
+    import cpt_database_sync_spark.operators.graph as gr
+
+    driver = plan_string(op(spark, sf_dir), mode)
+    with monkeypatch.context() as m:
+        m.setattr(gr, "GRAPH_DRIVER_EDGE_CEILING", 0)
+        m.setattr(gr, "_FLOWS_ROWS_MEMO", [])
+        distributed = plan_string(op(spark, sf_dir), mode)
+    assert "LocalTableScan" in driver, "driver-lane result is not a literal"
+    assert "ExistingRDD" in distributed, (
+        "edge relation is not checkpoint-materialized"
+    )
+    return driver, distributed
+
+
+def test_pagerank_iterations_reuse_checkpointed_edges(spark, sf_dir, monkeypatch):
     """pagerank_nations cuts lineage after the edge build: no rank round
     may re-derive the 4-way fact join. The executed plan downstream of
     the checkpoint must read the materialized edge RDD and never scan
     lineitem again; every rank relation joins in as a broadcast."""
     from cpt_database_sync_spark.operators.graph import pagerank_nations
 
-    plan = plan_string(pagerank_nations(spark, sf_dir))
-    assert "ExistingRDD" in plan, "edge relation is not checkpoint-materialized"
-    assert "lineitem" not in plan, (
-        "a rank iteration re-scans the fact table past the lineage cut"
-    )
-    assert "CartesianProduct" not in plan
+    for plan in _graph_lane_plans(pagerank_nations, spark, sf_dir, monkeypatch):
+        assert "lineitem" not in plan, (
+            "a rank iteration re-scans the fact table past the lineage cut"
+        )
+        assert "CartesianProduct" not in plan
 
 
 def test_triangle_count_reuses_edges_and_broadcasts(spark, sf_dir):
@@ -1290,19 +1308,18 @@ def test_cube_route_reads_one_cuboid_partition(spark, sf_dir):
     )
 
 
-def test_bfs_iterations_reuse_checkpointed_edges(spark, sf_dir):
+def test_bfs_iterations_reuse_checkpointed_edges(spark, sf_dir, monkeypatch):
     """bfs_hops shares pagerank's lineage discipline: the fact-table work
     happens once in the checkpointed edge build; no frontier round may
     re-derive the 4-way join, and frontier/rank relations join in
     without a cartesian surface."""
     from cpt_database_sync_spark.operators.graph import bfs_hops
 
-    plan = plan_string(bfs_hops(spark, sf_dir))
-    assert "ExistingRDD" in plan, "edge relation is not checkpoint-materialized"
-    assert "lineitem" not in plan, (
-        "a frontier round re-scans the fact table past the lineage cut"
-    )
-    assert "CartesianProduct" not in plan
+    for plan in _graph_lane_plans(bfs_hops, spark, sf_dir, monkeypatch):
+        assert "lineitem" not in plan, (
+            "a frontier round re-scans the fact table past the lineage cut"
+        )
+        assert "CartesianProduct" not in plan
 
 
 def test_skyline_sweeps_groups_not_rows(spark, sf_dir):
@@ -1614,7 +1631,7 @@ def test_stream_twa_exact_under_cross_batch_disorder(spark, tmp_path):
     assert got["twa"] == ((num * 10**6) // dur) / 1_000_000
 
 
-def test_shortest_path_iterations_reuse_checkpointed_edges(spark, sf_dir):
+def test_shortest_path_iterations_reuse_checkpointed_edges(spark, sf_dir, monkeypatch):
     """shortest_path_weighted follows the graph-family lineage-cut
     discipline: the fact joins run once into the checkpointed edge
     relation; no relaxation round may rescan lineitem, each round's
@@ -1622,13 +1639,12 @@ def test_shortest_path_iterations_reuse_checkpointed_edges(spark, sf_dir):
     surface exists."""
     from cpt_database_sync_spark.operators.graph import shortest_path_weighted
 
-    plan = plan_string(shortest_path_weighted(spark, sf_dir))
-    assert "ExistingRDD" in plan, "edge relation is not checkpoint-materialized"
-    assert "lineitem" not in plan, (
-        "a relaxation round re-scans the fact table past the lineage cut"
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan, "distance relation should broadcast"
+    for plan in _graph_lane_plans(shortest_path_weighted, spark, sf_dir, monkeypatch):
+        assert "lineitem" not in plan, (
+            "a relaxation round re-scans the fact table past the lineage cut"
+        )
+        assert "CartesianProduct" not in plan
+        assert "BroadcastHashJoin" in plan, "distance relation should broadcast"
 
 
 def test_seasonal_decompose_single_corpus_shuffle(spark, sf_dir):
@@ -1842,7 +1858,7 @@ def test_graph_copartitioned_hatch_bit_identical_and_shuffled(spark, sf_dir):
     )
 
 
-def test_r10_keys_plan_physics(spark, sf_dir):
+def test_r10_keys_plan_physics(spark, sf_dir, monkeypatch):
     """One physics gate per r10 operator (the per-addition plan-gate
     doctrine): scan counts prove single-pass claims, broadcast/exchange
     shapes prove the documented join/shuffle structure. Counts use
@@ -1883,9 +1899,11 @@ def test_r10_keys_plan_physics(spark, sf_dir):
     assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
 
     # graph components: fact consumed once via the checkpointed flows
-    p = plan(connected_components)
-    assert "ExistingRDD" in p and "lineitem" not in p
-    assert p.count("Scan parquet") == 1, "only the nation dim is scanned"
+    for p in _graph_lane_plans(
+        connected_components, spark, sf_dir, monkeypatch, "simple"
+    ):
+        assert "lineitem" not in p
+        assert p.count("Scan parquet") == 1, "only the nation dim is scanned"
 
     # island union: ONE user-keyed exchange, no join anywhere
     p = plan(interval_coverage)

@@ -4,6 +4,7 @@ core), the JDBC upsert statement builder, and catalog helpers."""
 from __future__ import annotations
 
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import types as T
@@ -714,6 +715,30 @@ class TestEventsTsDispatch:
             events_raw_schema(spark, d)["ts"].dataType, TimestampNTZType
         )
 
+    def test_schema_memo_is_keyed_on_nanos_as_long(self, spark, tmp_path):
+        """A nanos file reads as int64 under ``nanosAsLong`` and not at all
+        without it: the memoized schema of one setting must not answer
+        for the other."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql.types import LongType
+
+        from cpt_database_sync_spark.sources.tables import parquet_schema
+
+        path = f"{self._write_events(tmp_path, 'ns')}/events.parquet"
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key, None)
+        try:
+            spark.conf.set(key, "true")
+            assert isinstance(parquet_schema(path, spark)["ts"].dataType, LongType)
+            spark.conf.set(key, "false")
+            with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+                parquet_schema(path, spark)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
 
 def test_table_rowcount_follows_in_place_rewrite(tmp_path):
     """A parquet rewritten in place (10 -> 25 rows) must not be served
@@ -728,6 +753,51 @@ def test_table_rowcount_follows_in_place_rewrite(tmp_path):
     assert table_rowcount(str(tmp_path), "nation") == 10
     pq.write_table(pa.table({"n_nationkey": list(range(25))}), path)
     assert table_rowcount(str(tmp_path), "nation") == 25
+
+
+def _jobs_in(spark, group: str, fn):
+    """``(fn(), number of Spark jobs it launched)``, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_runs_no_job(spark, tmp_path):
+    """``load`` takes its schema from the file-metadata memo: the first
+    call infers it (one job), a second call of the same table runs none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cpt_database_sync_spark.sources.tables import load
+
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), str(tmp_path / "region.parquet"))
+    load(spark, str(tmp_path), "region")
+    df, n = _jobs_in(spark, "load-warm", lambda: load(spark, str(tmp_path), "region"))
+    assert n == 0, f"a warm load ran {n} jobs; want 0"
+    assert sorted(r[0] for r in df.collect()) == [0, 1, 2]
+
+
+def test_load_follows_in_place_rewrite(spark, tmp_path):
+    """A parquet rewritten in place with another schema (1 -> 2 columns,
+    3 -> 5 rows) must not be read with the memoized old schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cpt_database_sync_spark.sources.tables import load
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), path)
+    assert load(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": list(range(5)), "r_name": list("abcde")}), path
+    )
+    df = load(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(tuple(r) for r in df.collect()) == list(zip(range(5), "abcde"))
 
 
 class TestImageDecode:
@@ -4220,3 +4290,120 @@ def test_dbl_array_lit_round_trip_exact(spark):
     assert math.isnan(row2["a"][2]) and math.isinf(row2["a"][3])
     # empty list stays an empty array
     assert spark.range(1).select(dbl_array_lit([]).alias("a")).first()["a"] == []
+
+
+# --- local_frame: driver literals as a JVM LocalRelation --------------------
+
+_LF_DDL = (
+    "s string, i int, b bigint, d double, dec decimal(12,2), a array<double>"
+)
+_LF_ROWS = [
+    ("x", 1, 2**40, 1.5, Decimal("3.25"), [1.0, None, -0.0]),
+    (None, None, None, None, None, None),
+    ("", -(2**31), -(2**63), float("inf"), Decimal("-0.01"), []),
+]
+
+
+@pytest.mark.parametrize("rows", [_LF_ROWS, []], ids=["rows", "empty"])
+def test_local_frame_round_trips_like_create_dataframe(spark, rows):
+    from cpt_database_sync_spark.session import local_frame
+
+    got = local_frame(spark, rows, _LF_DDL)
+    want = spark.createDataFrame(rows, _LF_DDL)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_takes_a_struct_type(spark):
+    from cpt_database_sync_spark.session import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("node", T.LongType(), False),
+            T.StructField("w", T.DoubleType(), True),
+        ]
+    )
+    df = local_frame(spark, [(2, 0.5), (1, None)], schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == [(2, 0.5), (1, None)]
+
+
+@pytest.mark.parametrize("rows", [_LF_ROWS, []], ids=["rows", "empty"])
+def test_local_frame_plans_a_local_relation(spark, rows):
+    from cpt_database_sync_spark.session import local_frame
+
+    plan = local_frame(spark, rows, _LF_DDL)._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+
+
+@pytest.mark.parametrize(
+    "ddl,rows",
+    [
+        ("b bigint", [("1",)]),  # string in a number column
+        ("i int", [(True,)]),  # bool in an integer column
+        ("i int", [(1.5,)]),  # fraction in an integer column
+        ("b bigint", [(1.0,)]),  # float in an integer column
+        ("a array<bigint>", [([1, 2.5],)]),
+        ("i int", [(2**31,)]),  # out of range
+        ("dec decimal(12,2)", [(Decimal("1.005"),)]),
+        ("s string", [(1,)]),  # number in a string column
+        ("a array<double>", [(["x"],)]),
+        ("s string, i int", [("a", 1), ("b",)]),  # short row
+        ("s string", [("a", 1)]),  # long row
+    ],
+)
+def test_local_frame_rejects_values_that_do_not_fit(spark, ddl, rows):
+    from cpt_database_sync_spark.session import local_frame
+
+    with pytest.raises((TypeError, ValueError)):
+        local_frame(spark, rows, ddl)
+
+
+def test_local_frame_rejects_null_in_non_nullable_column(spark):
+    from cpt_database_sync_spark.session import local_frame
+
+    schema = T.StructType([T.StructField("node", T.LongType(), False)])
+    with pytest.raises(ValueError, match="non-nullable"):
+        local_frame(spark, [(1,), (None,)], schema)
+
+
+def _python_rdd_nodes(df) -> list[str]:
+    text = df._jdf.queryExecution().toString()
+    return [n for n in ("LogicalRDD", "ExistingRDD") if n in text]
+
+
+def test_driver_literal_plans_hold_no_python_rdd(spark, sf_dir):
+    """The table_profile spine and the empty IVF result are literals: no
+    plan phase may hold a Python-RDD scan (one Python-worker stage per
+    execution)."""
+    from cpt_database_sync_spark.operators.llm_similarity import _empty_topk
+    from cpt_database_sync_spark.sources.catalog import table_profile
+
+    assert _python_rdd_nodes(table_profile(spark, sf_dir)) == []
+    assert _python_rdd_nodes(_empty_topk(spark)) == []
+
+
+def test_package_builds_frames_only_through_local_frame():
+    """``createDataFrame`` is called in one place, ``session.local_frame``:
+    a frame from a Python list plans a Python-worker stage per execution."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "cpt_database_sync_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path.name == "session.py" and path.parent == pkg:
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
