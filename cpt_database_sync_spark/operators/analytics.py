@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.functions.numeric import sql_dsum
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
 
@@ -1633,7 +1634,7 @@ def gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reverify:r13",),
 )
 def funnel_latency(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Time-to-convert — the metric `funnel` (stage counts) doesn't
     answer: among users whose first 'view' was eventually followed by a
@@ -1650,17 +1651,16 @@ def funnel_latency(
     quantile_cont), divided by 1e6 AFTER interpolation so both engines
     run the identical IEEE steps.
 
-    BELOW ``PCTL_SORT_ROW_CEILING`` fact rows (footer-derived hint)
-    the percentile is Spark's built-in exact Percentile — whose
-    single-group value buffer is |converted users|-sized, i.e.
-    corpus-proportional, the scale hazard. ABOVE it,
+    Small lane (``lanes`` "single_task_rows", events footer count):
+    Spark's built-in exact Percentile, whose single-group value buffer
+    is |converted users|-sized. Scale lane:
     ``ranks.group_quantiles_cont`` with NO group column: per distinct
     latency rollup → hour-wide chunked cumulative counts (|chunks| is
-    bounded by the latency DOMAIN — the event-time span in hours —
-    never by the corpus) → bracketing order statistics by rank →
-    Percentile's own interpolation as a closed form. Bit-identical
-    twin; the |chunks|-row unpartitioned prefix is the audited bounded
-    class (mann_whitney_u's justification).
+    bounded by the event-time span in hours, never by the corpus) →
+    bracketing order statistics by rank → Percentile's own
+    interpolation as a closed form. The |chunks|-row unpartitioned
+    prefix is the audited bounded class (mann_whitney_u's
+    justification).
     """
     ev = load(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
@@ -1678,9 +1678,7 @@ def funnel_latency(
         )
     )
     viewed = firsts.agg(F.count("fv").alias("n_viewed"))
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "events")
-    if n_rows_hint > PCTL_SORT_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             group_quantiles_cont,
         )
@@ -2491,7 +2489,7 @@ _CONC_HIST_SQL = f"""
     "concurrency_histogram", oracle=_CONC_HIST_SQL, tags=("reverify:r13",)
 )
 def concurrency_histogram(
-    spark: SparkSession, sf_dir: str, n_per_key_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Duration-weighted concurrency-DEPTH histogram per channel —
     `concurrency_peak` answers "how deep did it stack and when"; this
@@ -2513,21 +2511,19 @@ def concurrency_histogram(
     endpoint (depth 0 forever after) has no next and is out of the
     span by construction.
 
-    Physics: identical to the peak sweep. BELOW
-    ``CONCURRENCY_WINDOW_ROW_CEILING`` (hint derived from the events
-    parquet footer when the caller passes none) one type-keyed shuffle,
+    Physics: identical to the peak sweep. Small lane (``lanes``
+    "single_task_rows", events footer count): one type-keyed shuffle,
     one within-partition sort feeding running sum + LEAD + span extrema
     in the SAME window pass, then a map-side-combined rollup over
-    (type, depth). ABOVE it the peak's two-level chunk device,
-    implemented (r13, was documented-only): per-(type, time-chunk)
-    local running sums, LEAD and depth histograms in parallel; the
-    chunk balance (prefix over chunk AGGREGATES) shifts local depths to
-    global ones through a broadcast join; cross-chunk gap durations —
+    (type, depth). Scale lane: the peak's two-level chunk device:
+    per-(type, time-chunk) local running sums, LEAD and depth
+    histograms in parallel; the chunk balance (prefix over chunk
+    AGGREGATES) shifts local depths to global ones through a broadcast
+    join; cross-chunk gap durations —
     last endpoint of chunk k to first endpoint of chunk k+1, held at
     the chunk's closing global depth — come from a LEAD over the same
     chunk-aggregate relation; span extrema assemble from per-chunk
-    min/max. Twin-tested bit-identical, plan-gated (no per-type
-    endpoint sort above the ceiling).
+    min/max. Plan-gated: no per-type endpoint sort in the scale lane.
     """
     ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
@@ -2551,9 +2547,7 @@ def concurrency_histogram(
             )
         ).alias("p"),
     ).select("event_type", "p.t", "p.delta", "p.event_id")
-    if n_per_key_hint == 0:
-        n_per_key_hint = table_rowcount(sf_dir, "events")
-    if n_per_key_hint > CONCURRENCY_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         pts = pts.withColumn("c", F.floor(F.col("t") / CONCURRENCY_CHUNK_US))
         w_local = (
             Window.partitionBy("event_type", "c")
@@ -2704,15 +2698,7 @@ _RFM_SQL = f"""
 """
 
 
-# Row ceiling for rfm's three global NTILEs: below it the |customers|
-# rollup sorts on one task per score (dimension-sized — fine); above
-# it (hint derived from the orders parquet footer, an upper bound on
-# |customers with orders|) each score comes from the two-level chunked
-# row_number + the closed-form NTILE over (rank, n) — operators/
-# ranks.py, the gini/lorenz device ungrouped: metric-range chunks sort
-# corpus fractions in parallel and only the |chunks|-row aggregate
-# relation takes an unpartitioned prefix (the audited bounded class).
-RFM_RANK_ROW_CEILING = 50_000_000
+# Chunk widths of rfm's scale lane (recency days, order count, cents).
 RFM_DAYS_CHUNK = 64
 RFM_ORDERS_CHUNK = 8
 RFM_CENTS_CHUNK = 10_000_000
@@ -2720,7 +2706,7 @@ RFM_CENTS_CHUNK = 10_000_000
 
 @register("rfm_segments", oracle=_RFM_SQL, tags=("reverify:r13",))
 def rfm_segments(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """RFM segmentation — the standard customer-value grid (Recency /
     Frequency / Monetary, each scored into quartiles, higher = better):
@@ -2739,15 +2725,14 @@ def rfm_segments(
     NULLS-FIRST divergence out of existence).
 
     Physics: one map-side-combined per-customer rollup over orders;
-    BELOW ``RFM_RANK_ROW_CEILING`` the three NTILEs run over the
-    |customers|-sized rollup — rank statistics need a sort, but of the
-    DIMENSION, never the fact; the reference date joins as a one-row
-    broadcast. ABOVE the ceiling (hint from the orders parquet footer)
-    each score comes from the two-level chunked row_number + the
-    closed-form NTILE over (rank, n) — implemented, not documented
-    (VERDICT r12 next #6): no task ever sorts the whole rollup, and
-    only |chunks|-row aggregate relations take a prefix. Twin-tested
-    bit-identical.
+    the reference date joins as a one-row broadcast. Small lane
+    (``lanes`` "single_task_rows", orders footer count, an upper bound
+    on |customers with orders|): the three NTILEs run over the
+    |customers|-sized rollup, a sort of the DIMENSION, never the fact.
+    Scale lane: each score comes from the two-level chunked row_number
+    + the closed-form NTILE over (rank, n) (operators/ranks.py): no
+    task ever sorts the whole rollup, and only |chunks|-row aggregate
+    relations take an unpartitioned prefix.
     """
     o = (
         load(spark, sf_dir, "orders")
@@ -2785,9 +2770,7 @@ def rfm_segments(
             "m_cents",
         )
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "orders")
-    if n_rows_hint > RFM_RANK_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "orders")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             ntile_col_sql,
             two_level_row_number,
@@ -2886,10 +2869,9 @@ _CONCURRENCY_SQL = f"""
 """
 
 
-# Per-key endpoint-volume ceiling for the single-window sweep: the ±1
-# endpoint sweep's parallelism is bounded by |event_type|, and one
-# dominant type funnels 2×|its events| endpoint rows through a single
-# task's sort (VERDICT r10 scale finding #2). Above the ceiling the
+# The ±1 endpoint sweep's parallelism is bounded by |event_type|, and
+# one dominant type funnels 2×|its events| endpoint rows through a
+# single task's sort. Above ``lanes`` "single_task_rows" the
 # sweep runs TWO-LEVEL (the distributed prefix-sum shape): endpoints
 # chunk by time range, each (type, chunk) computes its delta sum +
 # local running max + first-max time in parallel, a second window over
@@ -2900,13 +2882,12 @@ _CONCURRENCY_SQL = f"""
 # (chunk, t, delta, event_id) is the same total order, the local max
 # plus incoming balance is the chunk's global running max, and the
 # earliest chunk attaining the global peak holds the earliest peak row.
-CONCURRENCY_WINDOW_ROW_CEILING = 50_000_000
 CONCURRENCY_CHUNK_US = 6 * 3_600_000_000  # 6 h endpoint chunks
 
 
 @register("concurrency_peak", oracle=_CONCURRENCY_SQL, tags=("reverify:r11",))
 def concurrency_peak(
-    spark: SparkSession, sf_dir: str, n_per_key_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Peak concurrency per channel — the capacity question
     `interval_coverage` doesn't answer (union length says how LONG the
@@ -2957,16 +2938,10 @@ def concurrency_peak(
             )
         ).alias("p"),
     ).select("event_type", "p.t", "p.delta", "p.event_id")
-    if n_per_key_hint == 0:
-        # Data-derived dispatch (VERDICT r12 next #3): footer row count
-        # as a conservative per-key upper bound (one type could own the
-        # whole fact — the skew case IS the reason the ceiling exists).
-        # A caller hint still wins; probe 0 = unknown = window lane.
-        n_per_key_hint = table_rowcount(sf_dir, "events")
-    if n_per_key_hint > CONCURRENCY_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         # Two-level sweep: chunk-local partials over (type, time-chunk)
         # — parallelism |type|×|chunks| — then a prefix window over the
-        # chunk AGGREGATES only (see CONCURRENCY_WINDOW_ROW_CEILING).
+        # chunk AGGREGATES only (see CONCURRENCY_CHUNK_US).
         pts = pts.withColumn(
             "c", F.floor(F.col("t") / CONCURRENCY_CHUNK_US)
         )
@@ -3227,16 +3202,14 @@ def transition_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Tukey IQR fences -------------------------------------------------------
 
-# Above this many fact rows the exact-percentile keys (iqr_fences,
-# tail_cvar) leave Spark's built-in Percentile aggregate — whose
-# per-group value buffer funnels each group's whole slice through one
-# task — for the two-level rollup lane (ranks.group_quantiles_cont).
-# Same governance as QN_WINDOW_ROW_CEILING: footer-derived, caller
-# hint wins.
-PCTL_SORT_ROW_CEILING = 50_000_000
-# Chunk widths keep |chunks| = value-range / width — bounded by the
-# physical domain, not corpus size, yet wide enough that the
-# chunk-aggregate prefix has real parallelism feeding it.
+# Above ``lanes`` "single_task_rows" the exact-percentile keys
+# (iqr_fences, tail_cvar, funnel_latency) leave Spark's built-in
+# Percentile aggregate — whose per-group value buffer funnels each
+# group's whole slice through one task — for the two-level rollup lane
+# (ranks.group_quantiles_cont). Chunk widths keep |chunks| =
+# value-range / width — bounded by the physical domain, not corpus
+# size, yet wide enough that the chunk-aggregate prefix has real
+# parallelism feeding it.
 EVENT_VALUE_CHUNK_WIDTH = 50.0  # events.value spans ~[0, 500)
 PRICE_CHUNK_WIDTH = 10_000.0  # o_totalprice spans ~[900, 600k)
 # funnel_latency: one hour of microseconds per chunk — |chunks| =
@@ -3266,7 +3239,7 @@ _IQR_SQL = """
 
 @register("iqr_fences", oracle=_IQR_SQL, tags=("reverify:r13",))
 def iqr_fences(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Tukey IQR outlier fences per event type: quartiles of `value`,
     and the count of points beyond q1 − 1.5·IQR / q3 + 1.5·IQR — the
@@ -3281,27 +3254,23 @@ def iqr_fences(
     and the threshold compares are exact double comparisons — same
     operands, same result, both engines. Counts BIGINT.
 
-    Physics: BELOW ``PCTL_SORT_ROW_CEILING`` rows (hint derived from
-    the parquet footer when the caller passes none), one per-type
-    exact-Percentile rollup — whose per-group value buffer is the
-    scale hazard. ABOVE it, the quartiles come from
-    ``ranks.group_quantiles_cont``: per-(type, value) rollup →
+    Physics: small lane (``lanes`` "single_task_rows", events footer
+    count), one per-type exact-Percentile rollup — whose per-group
+    value buffer is the scale hazard. Scale lane: the quartiles come
+    from ``ranks.group_quantiles_cont``: per-(type, value) rollup →
     two-level chunked cumulative counts → the two bracketing order
     statistics per quartile looked up by rank → Spark's own
-    Percentile interpolation as a closed-form column (bit-identical
-    twin, VERDICT r12 missing #3 — swap implemented, not documented).
-    Either way the fence counts are ONE pass of the fact re-joined
-    against the |types|-row broadcast quartile relation; the fact is
-    never sorted inside a task in the big lane. The GK-sketch swap
+    Percentile interpolation as a closed-form column. Either way the
+    fence counts are ONE pass of the fact re-joined against the
+    |types|-row broadcast quartile relation; the fact is never sorted
+    inside a task in the big lane. The GK-sketch swap
     (`agg_approx_percentile`) remains the documented lane when even
     the distinct-value rollup is too hot.
     """
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & F.col("event_type").isNotNull()
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "events")
-    if n_rows_hint > PCTL_SORT_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             group_quantiles_cont,
         )
@@ -3512,7 +3481,7 @@ _BURSTINESS_SQL = f"""
 
 @register("burstiness", oracle=_BURSTINESS_SQL, tags=("reverify:r13",))
 def burstiness(
-    spark: SparkSession, sf_dir: str, n_per_key_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Goh-Barabasi burstiness of the per-type arrival process:
     B = (σ−μ)/(σ+μ) over inter-event gaps — B → −1 periodic, B ≈ 0
@@ -3530,25 +3499,22 @@ def burstiness(
     n=1-gap degenerate (σ=0, μ>0 → B=−1) falling out identically.
     Zero-gap-only types: σ+μ = 0 → NULL via NULLIF.
 
-    Physics: BELOW ``CONCURRENCY_WINDOW_ROW_CEILING`` (hint derived
-    from the events parquet footer) one window pass over the type-keyed
-    exchange, one map-side-combined moment rollup to |types| rows.
-    ABOVE it the chunked-lag device (r13, was documented-only): gaps
-    are time-local, so time-range chunks compute their gap moments in
-    parallel and only the CROSS-CHUNK gaps — last arrival of chunk k to
-    first arrival of chunk k+1, one per chunk pair — assemble on the
-    |chunks|-row aggregate relation via LEAD; the per-type moments are
-    then one rollup over chunk aggregates. Twin-tested bit-identical
-    (moments are sums — chunk decomposition is exact). The
+    Physics: small lane (``lanes`` "single_task_rows", events footer
+    count), one window pass over the type-keyed exchange, one
+    map-side-combined moment rollup to |types| rows. Scale lane, the
+    chunked-lag device: gaps are time-local, so time-range chunks
+    compute their gap moments in parallel and only the CROSS-CHUNK
+    gaps — last arrival of chunk k to first arrival of chunk k+1, one
+    per chunk pair — assemble on the |chunks|-row aggregate relation
+    via LEAD; the per-type moments are then one rollup over chunk
+    aggregates (moments are sums — chunk decomposition is exact). The
     pre-sorted-ingest swap (sort within arrival files, merge at read)
     remains documented for feeds that land ordered.
     """
     ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
-    if n_per_key_hint == 0:
-        n_per_key_hint = table_rowcount(sf_dir, "events")
-    if n_per_key_hint > CONCURRENCY_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         t = F.unix_micros("ts")
         pts = ev.select(
             "event_type",
@@ -3654,7 +3620,7 @@ _TAIL_CVAR_SQL = f"""
 
 @register("tail_cvar", oracle=_TAIL_CVAR_SQL, tags=("reverify:r13",))
 def tail_cvar(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Value-at-risk and conditional value-at-risk of order totals per
     priority class: VaR = the exact 0.95 quantile, CVaR = the mean of
@@ -3673,12 +3639,11 @@ def tail_cvar(
 
     Physics: one per-group quantile relation broadcast back over ONE
     tail-count pass (the `iqr_fences` shape — the fact is scanned
-    twice, never joined to itself). BELOW ``PCTL_SORT_ROW_CEILING``
-    rows (footer-derived hint) the quantile is Spark's built-in exact
-    Percentile; ABOVE it, ``ranks.group_quantiles_cont`` — the
+    twice, never joined to itself). Small lane (``lanes``
+    "single_task_rows", orders footer count): Spark's built-in exact
+    Percentile. Scale lane: ``ranks.group_quantiles_cont`` — the
     per-(priority, price) rollup through the two-level chunked
-    cumulative counts with closed-form interpolation (bit-identical
-    twin; VERDICT r12 missing #3 — swap implemented). The GK sketch
+    cumulative counts with closed-form interpolation. The GK sketch
     stays the documented lane when even the rollup is too hot (prices
     here are near-unique — the honest exact-rank footprint the
     mann_whitney_u docstring costs out).
@@ -3686,9 +3651,7 @@ def tail_cvar(
     orders = load(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull()
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "orders")
-    if n_rows_hint > PCTL_SORT_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "orders")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             group_quantiles_cont,
         )

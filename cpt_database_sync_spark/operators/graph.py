@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
@@ -39,28 +40,17 @@ PR_ROUNDS = 3
 BFS_SOURCE_NATION = 3
 BFS_MAX_HOPS = 4
 
-# Ceiling for broadcasting the per-round ITERATE relation (ranks /
-# distances — one row per node) in the iterative graph ops. Nodes are
-# catalog-sized entities (nations here; domains/ASNs/warehouses at
-# deployment), so broadcast is the right default; a deployment whose
-# node set outgrows executor memory (~2M rows ≈ tens of MB of
-# (id, value) pairs) flips the per-round join to a CO-PARTITIONED
-# shuffle instead: the edge relation is hash-partitioned on the join
-# key ONCE (checkpointed, so the partitioning survives every round) and
-# each round shuffles only the node-sized iterate relation to meet it —
-# the assign_via_relation ceiling-dispatch pattern
-# (llm_similarity.CENTROID_LITERAL_CEILING). Both paths are
-# bit-identical (differential-tested) because the join is the same
-# relational join either way; only the physical exchange flips.
-GRAPH_BCAST_NODE_CEILING = 2_000_000
-
-
-def _iteration_edges(edges: DataFrame, key: str, n_nodes_hint: int):
+def _iteration_edges(edges: DataFrame, key: str, n_nodes: int):
     """Dispatch for the per-round iterate⋈edges join: returns
     (edges', joiner) where joiner(iterate_keyed) performs the round's
-    join. Broadcast lane below the ceiling; above it the edges are
-    co-partitioned once and the iterate relation shuffles to meet them."""
-    if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING:
+    join. Up to ``lanes`` "graph_bcast_node" ``n_nodes`` (the nation
+    footer count) the iterate relation (ranks / distances, one row per
+    node) is broadcast. Above it the edges are hash-partitioned on the
+    join key ONCE (checkpointed, so the partitioning survives every
+    round) and each round shuffles only the node-sized iterate relation
+    to meet them. Both forms are the same relational join; only the
+    physical exchange flips."""
+    if not lanes.exceeds("graph_bcast_node", n_nodes):
         return edges, lambda it: edges.join(F.broadcast(it), key)
     eco = edges.repartition(key).localCheckpoint(eager=True)
     # SHUFFLE_HASH pin: above the ceiling the iterate relation must NOT
@@ -72,70 +62,38 @@ def _iteration_edges(edges: DataFrame, key: str, n_nodes_hint: int):
     return eco, lambda it: eco.join(it.hint("shuffle_hash"), key)
 
 
-def _nodes_hint(sf_dir: str, n_nodes_hint: int) -> int:
-    """Data-derived node-count hint (VERDICT r12 next #3): an explicit
-    caller hint wins; otherwise the nation parquet FOOTER row count —
-    the node domain IS the nation catalog, so the footer is the exact
-    |nodes| statistic, metadata-only (``tables.table_rowcount``). A
-    probe miss returns 0 = unknown = the broadcast lane (nodes are
-    catalog-sized entities; broadcast is the right default)."""
-    return n_nodes_hint if n_nodes_hint else table_rowcount(sf_dir, "nation")
-
-
-# Edge-count ceiling below which the ITERATION of the loop-shaped graph
-# ops (pagerank, CC, BFS, shortest path, LPA) solves on the driver over
-# the collected aggregated edge relation instead of as per-round
-# join+agg jobs (r13, guide §2.4). The fact-scale work — the 4-way
+# Below ``lanes`` "graph_driver_edge" the ITERATION of the loop-shaped
+# graph ops (pagerank, CC, BFS, shortest path, LPA) solves on the
+# driver over the collected aggregated edge relation instead of as
+# per-round join+agg jobs. The fact-scale work — the 4-way
 # lineitem⋈orders⋈supplier⋈customer rollup — ALWAYS runs distributed
 # (`_trade_flows`); what moves to the driver is only the ≤|nodes|²
-# AGGREGATED edge list, probed with a limit(ceiling+1).collect() that is
-# bounded BY CONSTRUCTION (≤ 500k (src,dst,w) triples ≈ 12 MB) — the
-# same bounded-literal class as the k-centroid / per-dim-range collects.
-# Rationale: every one of these loops is exact-integer arithmetic whose
-# per-round cost at nation scale (≤ 625 edges) is pure job/shuffle
-# overhead — 3-5 rounds × 2-3 jobs measured 0.7-2.3 s per operator for
-# microseconds of actual arithmetic. Above the ceiling the distributed
-# loops run unchanged (broadcast or co-partitioned per
-# GRAPH_BCAST_NODE_CEILING); all lanes are bit-identical — the loop
-# bodies are exact integer expressions replicated verbatim (floor div on
-# non-negative operands ≡ Python //) — and differential-twin-tested.
-#
-# 150k, not the original 500k (r14, VERDICT r13 next #5 — the ceiling
-# was a memory-bound assumption; CROSSOVER_r14.json is the measurement):
-# on identical synthetic flows the PageRank driver lane TIES the
-# distributed loop at ~120k edges (2.30 vs 2.43 s), loses 2.0x at ~390k
-# (3.34 vs 1.66 s) and 3.3x at ~1.6M — the per-round Python dict fold is
-# O(rounds x E) single-core, so the crossover sits near 150k for the
-# round-heaviest member. One shared ceiling gates all five loops (they
-# share the probe memo); union-find CC alone would tolerate far more
-# (driver still wins at 2M edges, same file), which the dedup-side
-# DEDUP_CC_EDGE_CEILING (500k, measured: 2.70 vs 2.82 s at 500k, 9.4 vs
-# 12.2 s at 2M) keeps exploiting.
-GRAPH_DRIVER_EDGE_CEILING = 150_000
-
-_FLOWS_ROWS_MEMO: list = []  # [flows_frame, rows-or-None] single slot
+# AGGREGATED edge list. At nation scale (≤ 625 edges) the distributed
+# loop's 3-5 rounds × 2-3 jobs cost 0.7-2.3 s per operator for
+# microseconds of arithmetic. All lanes are bit-identical: the loop
+# bodies are exact integer expressions replicated verbatim (floor div
+# on non-negative operands ≡ Python //).
+_FLOWS_ROWS_MEMO: list = []  # [flows_frame, ceiling, rows-or-None]
 
 
 def _flows_literal(flows: DataFrame):
     """Collected (src, dst, w) triples of the aggregated trade-edge
-    relation when it fits under ``GRAPH_DRIVER_EDGE_CEILING``; None when
-    it doesn't (the distributed loop lane must run). Memoized on the
-    frame's identity — ``_trade_flows``'s checkpoint memo entry hands
-    every consumer the SAME checkpointed frame, so the probe job runs
-    once per session, not once per operator call."""
-    if _FLOWS_ROWS_MEMO and _FLOWS_ROWS_MEMO[0] is flows:
-        return _FLOWS_ROWS_MEMO[1]
-    probe = (
-        flows.select("src", "dst", "w")
-        .limit(GRAPH_DRIVER_EDGE_CEILING + 1)
-        .collect()
+    relation when it fits under ``lanes`` "graph_driver_edge"; None
+    when it doesn't (the distributed loop lane must run). Memoized on
+    the frame's identity and the ceiling — ``_trade_flows``'s
+    checkpoint memo entry hands every consumer the SAME checkpointed
+    frame, so the probe job runs once per session, not once per
+    operator call."""
+    ceiling = lanes.CEILINGS["graph_driver_edge"]
+    if _FLOWS_ROWS_MEMO and _FLOWS_ROWS_MEMO[0] is flows and (
+        _FLOWS_ROWS_MEMO[1] == ceiling
+    ):
+        return _FLOWS_ROWS_MEMO[2]
+    probe = lanes.collect_within(
+        "graph_driver_edge", flows.select("src", "dst", "w")
     )
-    rows = (
-        [(r[0], r[1], r[2]) for r in probe]
-        if len(probe) <= GRAPH_DRIVER_EDGE_CEILING
-        else None
-    )
-    _FLOWS_ROWS_MEMO[:] = [flows, rows]
+    rows = None if probe is None else [(r[0], r[1], r[2]) for r in probe]
+    _FLOWS_ROWS_MEMO[:] = [flows, ceiling, rows]
     return rows
 
 
@@ -158,11 +116,11 @@ def _node_rows_df(flows: DataFrame, rows, fields) -> DataFrame:
 
 
 def _pagerank_driver(flows: DataFrame, rows) -> DataFrame:
-    """Driver lane for the PageRank iteration (see
-    ``GRAPH_DRIVER_EDGE_CEILING``): the IDENTICAL scaled-integer fixed
-    point — every expression below mirrors the distributed loop verbatim
-    and Python ``//`` ≡ Spark ``div`` on these non-negative operands, so
-    the lanes are bit-identical (twin-tested in tests/test_plans.py)."""
+    """Driver lane for the PageRank iteration (see ``_flows_literal``):
+    the IDENTICAL scaled-integer fixed point — every expression below
+    mirrors the distributed loop verbatim and Python ``//`` ≡ Spark
+    ``div`` on these non-negative operands, so the lanes are
+    bit-identical."""
     nodes = sorted({s for s, _, _ in rows} | {d for _, d, _ in rows})
     ranks: dict = {}
     if nodes:
@@ -597,9 +555,7 @@ _PAGERANK_SQL = (
 
 @register("pagerank_nations", oracle=_PAGERANK_SQL, tags=("reverify:r10",))
 def pagerank_nations(
-    spark: SparkSession,
-    sf_dir: str,
-    n_nodes_hint: int = 0,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """PageRank over the nation-level trade graph (edge src -> dst
     weighted by lineitems a supplier nation ships into a customer
@@ -625,27 +581,23 @@ def pagerank_nations(
     Physics: the edge build is the only raw-data work — lineitem joins
     orders on the orderkey shuffle, then BROADCAST joins to supplier
     and customer dimensions, aggregating to <= 25x25 weighted edges.
-    Each rank round is a broadcast join of a <= 25-row rank relation
-    into the edge relation plus a rollup-sized re-aggregation; nothing
-    iterative ever touches the fact table again, and no .collect()
-    moves ranks through the driver. At 100 TB the same plan holds with
+    Below ``lanes`` "graph_driver_edge" the rounds run on the driver
+    over the collected edge list (``_pagerank_driver``). Otherwise each
+    rank round is a broadcast join of a <= 25-row rank relation into
+    the edge relation plus a rollup-sized re-aggregation; nothing
+    iterative ever touches the fact table again. At 100 TB the same plan holds with
     the node set at catalog size (domains, ASNs, repos...) — the rank
     relation broadcasts until it is itself huge, at which point the
-    join flips to a co-partitioned shuffle on node id: pass
-    ``n_nodes_hint`` above ``GRAPH_BCAST_NODE_CEILING`` (the node
-    domain is catalog metadata the deployment knows, the
-    ``assign_via_relation`` dispatch pattern) and the edge relation is
-    hash-partitioned once while each round shuffles only the node-sized
-    rank/contribution relations — bit-identical output, gated by the
-    differential test in tests/test_plans.py.
+    join flips to a co-partitioned shuffle on node id above ``lanes``
+    "graph_bcast_node" (the nation footer count is the node domain):
+    the edge relation is hash-partitioned once while each round
+    shuffles only the node-sized rank/contribution relations —
+    bit-identical output.
     """
     flows = _trade_flows(spark, sf_dir)
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    rows = (
-        _flows_literal(flows)
-        if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
-        else None
-    )
+    n_nodes = table_rowcount(sf_dir, "nation")
+    bcast = not lanes.exceeds("graph_bcast_node", n_nodes)
+    rows = _flows_literal(flows) if bcast else None
     if rows is not None:
         ranks = _pagerank_driver(flows, rows)
         nation = load(spark, sf_dir, "nation")
@@ -677,9 +629,7 @@ def pagerank_nations(
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
         "node", F.expr(f"{PR_SCALE} div n").alias("r")
     )
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    edges, iter_join = _iteration_edges(edges, "src", n_nodes_hint)
-    bcast_nodes = n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
+    edges, iter_join = _iteration_edges(edges, "src", n_nodes)
     for _ in range(PR_ROUNDS):
         contrib = (
             iter_join(ranks.withColumnRenamed("node", "src"))
@@ -693,7 +643,7 @@ def pagerank_nations(
         ranks = (
             nodes.crossJoin(F.broadcast(nn))
             .join(
-                F.broadcast(contrib) if bcast_nodes else contrib,
+                F.broadcast(contrib) if bcast else contrib,
                 nodes.node == contrib.dst,
                 "left",
             )
@@ -790,7 +740,7 @@ def bfs_frontier(
 
 @register("bfs_hops", oracle=_BFS_SQL)
 def bfs_hops(
-    spark: SparkSession, sf_dir: str, n_nodes_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Single-source BFS over the nation trade graph: minimum hop count
     from BFS_SOURCE_NATION to every node within BFS_MAX_HOPS (NULL =
@@ -819,15 +769,11 @@ def bfs_hops(
     there is no float, no tie, no ordering sensitivity anywhere.
     """
     flows = _trade_flows(spark, sf_dir)
-    # Same n_nodes_hint gate as the four sibling loops (ADVICE r13 #3):
-    # above the node ceiling the up-to-500k-row probe collect is skipped
-    # outright and BFS dispatches distributed with the rest of the family.
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    rows = (
-        _flows_literal(flows)
-        if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
-        else None
-    )
+    # Same node gate as the four sibling loops: above the node ceiling
+    # the edge probe is skipped and BFS runs distributed with the rest.
+    n_nodes = table_rowcount(sf_dir, "nation")
+    bcast = not lanes.exceeds("graph_bcast_node", n_nodes)
+    rows = _flows_literal(flows) if bcast else None
     if rows is not None:
         hops = _bfs_driver(flows, rows)
         nation = load(spark, sf_dir, "nation")
@@ -912,9 +858,7 @@ _SHORTEST_PATH_SQL = (
 
 @register("shortest_path_weighted", oracle=_SHORTEST_PATH_SQL, tags=("reverify:r10",))
 def shortest_path_weighted(
-    spark: SparkSession,
-    sf_dir: str,
-    n_nodes_hint: int = 0,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Single-source WEIGHTED shortest path over the nation trade graph
     (Bellman-Ford relaxation), completing the graph family's distance
@@ -935,23 +879,19 @@ def shortest_path_weighted(
     unrolled-CTE iteration is bit-identical. At 100 TB the node set is
     catalog-sized (domains, ASNs, warehouses); when the distance
     relation itself outgrows broadcast, the per-round join flips to a
-    co-partitioned shuffle on node id — the implemented
-    ``GRAPH_BCAST_NODE_CEILING`` dispatch shared with PageRank (pass
-    ``n_nodes_hint`` above the ceiling): edges hash-partition once,
-    each round shuffles only the node-sized distance relation, output
-    bit-identical (differential-tested in tests/test_plans.py).
+    co-partitioned shuffle on node id — the ``lanes``
+    "graph_bcast_node" dispatch shared with PageRank: edges
+    hash-partition once, each round shuffles only the node-sized
+    distance relation, output bit-identical.
 
     Reference basis: the reference moves tables (`handler/
     Handler.java:42-55`); graph distance over the moved data is part of
     the analytics surface it never had.
     """
     flows = _trade_flows(spark, sf_dir)
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    rows = (
-        _flows_literal(flows)
-        if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
-        else None
-    )
+    n_nodes = table_rowcount(sf_dir, "nation")
+    bcast = not lanes.exceeds("graph_bcast_node", n_nodes)
+    rows = _flows_literal(flows) if bcast else None
     if rows is not None:
         dist = _sp_driver(flows, rows)
         nation = load(spark, sf_dir, "nation")
@@ -971,9 +911,7 @@ def shortest_path_weighted(
     dist = nodes.filter(F.col("node") == SP_SOURCE_NATION).select(
         "node", F.lit(0).cast("long").alias("d")
     )
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    e, iter_join = _iteration_edges(e, "src", n_nodes_hint)
-    bcast_nodes = n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
+    e, iter_join = _iteration_edges(e, "src", n_nodes)
     for _ in range(SP_MAX_EDGES):
         relaxed = iter_join(dist.withColumnRenamed("node", "src")).select(
             F.col("dst").alias("node"), (F.col("d") + F.col("cost")).alias("d")
@@ -989,7 +927,7 @@ def shortest_path_weighted(
     return (
         nodes.join(F.broadcast(nation), nodes.node == nation.n_nationkey)
         .join(
-            F.broadcast(dd) if bcast_nodes else dd,
+            F.broadcast(dd) if bcast else dd,
             F.col("node") == F.col("dnode"),
             "left",
         )
@@ -1139,9 +1077,7 @@ _CC_SQL = f"""
 
 @register("connected_components", oracle=_CC_SQL)
 def connected_components(
-    spark: SparkSession,
-    sf_dir: str,
-    n_nodes_hint: int = 0,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Connected components of the STRONG-lane trade graph — the graph
     family's partition primitive (`dedup_clusters` runs the same
@@ -1160,8 +1096,8 @@ def connected_components(
     round: CC_ROUNDS = 5 provably covers any diameter ≤ 32 ≥ the
     25-node domain's worst-case path. At deployment scale rounds grow
     with log(diameter) only; the per-round joins ride the same
-    ``GRAPH_BCAST_NODE_CEILING`` dispatch as PageRank (broadcast below,
-    co-partitioned shuffle above — pass ``n_nodes_hint``).
+    ``lanes`` "graph_bcast_node" dispatch as PageRank (broadcast
+    below, co-partitioned shuffle above).
 
     Exactness: labels are node ids (exact ints); MIN has no tie hazard;
     the oracle replays the same fixed point as a recursive CTE
@@ -1181,12 +1117,9 @@ def connected_components(
     analytics surface it never had.
     """
     flows = _trade_flows(spark, sf_dir)
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    rows = (
-        _flows_literal(flows)
-        if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
-        else None
-    )
+    n_nodes = table_rowcount(sf_dir, "nation")
+    bcast = not lanes.exceeds("graph_bcast_node", n_nodes)
+    rows = _flows_literal(flows) if bcast else None
     if rows is not None:
         lab = _cc_nations_driver(flows, rows)
         nation = load(spark, sf_dir, "nation")
@@ -1209,9 +1142,7 @@ def connected_components(
         .union(flows.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    e, iter_join = _iteration_edges(und, "src", n_nodes_hint)
-    bcast = n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
+    e, iter_join = _iteration_edges(und, "src", n_nodes)
     lab = nodes.select("node", F.col("node").alias("comp"))
     for _ in range(CC_ROUNDS):
         cand = iter_join(lab.withColumnRenamed("node", "src")).select(
@@ -1313,7 +1244,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     |nations|-row degree relations; the moment fold is one row. At
     deployment scale degrees co-partition with edges on the endpoint
     key (one hash exchange each) — same plan, physical exchange flips
-    (the `GRAPH_BCAST_NODE_CEILING` doctrine).
+    (the ``_iteration_edges`` doctrine).
     """
     flows = _trade_flows(spark, sf_dir)
     outd = flows.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("od"))
@@ -1428,9 +1359,7 @@ _LPA_SQL = "WITH " + _LPA_EDGE_CTES + _LPA_ROUND_CHAIN + _LPA_TAIL
 
 @register("label_propagation", oracle=_LPA_SQL)
 def label_propagation(
-    spark: SparkSession,
-    sf_dir: str,
-    n_nodes_hint: int = 0,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Synchronous weighted label propagation over the symmetrized
     nation trade graph — community detection where `connected_
@@ -1453,17 +1382,14 @@ def label_propagation(
     fact join runs once); each round is one join of the node-sized
     label relation against edges + one map-side-combined (node,label)
     rollup + one argmax agg — the `_iteration_edges` broadcast ↔
-    co-partitioned dispatch (`GRAPH_BCAST_NODE_CEILING`) decides the
+    co-partitioned dispatch (``lanes`` "graph_bcast_node") decides the
     physical exchange exactly as in pagerank/CC. Round count is fixed,
     so the lineage is bounded; per-round localCheckpoint cuts it.
     """
     flows = _trade_flows(spark, sf_dir)
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    rows = (
-        _flows_literal(flows)
-        if n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
-        else None
-    )
+    n_nodes = table_rowcount(sf_dir, "nation")
+    bcast = not lanes.exceeds("graph_bcast_node", n_nodes)
+    rows = _flows_literal(flows) if bcast else None
     if rows is not None:
         lab = _lpa_driver(flows, rows)
         nation = load(spark, sf_dir, "nation")
@@ -1490,10 +1416,8 @@ def label_propagation(
         .unionByName(flows.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n_nodes_hint = _nodes_hint(sf_dir, n_nodes_hint)
-    eu, iter_join = _iteration_edges(eu, "src", n_nodes_hint)
+    eu, iter_join = _iteration_edges(eu, "src", n_nodes)
     nodes = nodes.localCheckpoint(eager=False)
-    bcast = n_nodes_hint <= GRAPH_BCAST_NODE_CEILING
     lab = nodes.select("node", F.col("node").alias("lab"))
     for _ in range(LPA_ROUNDS):
         f = (

@@ -30,6 +30,7 @@ from cpt_database_sync_spark.plans.golden import (
     golden_oracle,
 )
 from cpt_database_sync_spark.functions.textnorm import norm_ws, sql_norm_ws
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.session import bounded_cache, local_frame, release
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
@@ -98,34 +99,20 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-# Corpus-size ceiling for sourcing cluster-stage candidate edges from
-# the exact shingle self-join (quadratic in per-shingle frequency —
-# fine while Σ freq(shingle)² is small, i.e. catalog/fixture corpora).
-# Above the ceiling the SAME verified near-dup pair relation comes from
-# banded MinHash candidates + exact-Jaccard verification
-# (`dedup_minhash`'s near-linear shape): cost ~ #docs × #bands +
-# bucket-local joins, no shingle self-join anywhere in the plan. Both
-# lanes produce IDENTICAL pairs whenever banding recall is 1.0 for
-# J ≥ threshold (verified differentially at fixture scale in
-# tests/test_llm_ops.py); at deployment the banded lane is the only
-# tractable one and its (bands, rows-per-band) S-curve is the recall
-# contract — the `GRAPH_BCAST_NODE_CEILING` / `assign_via_relation`
-# ceiling-dispatch pattern applied to dedup.
-DEDUP_PAIR_DOC_CEILING = 1_000_000
-
-
 def near_dup_pairs(
-    docs: DataFrame, threshold: float, n_docs_hint: int = 0
+    docs: DataFrame, threshold: float, n_docs: int
 ) -> DataFrame:
     """Verified near-dup (a_id, b_id) edge relation for the cluster
-    stage — exact shingle-join detector below ``DEDUP_PAIR_DOC_CEILING``
-    (the ground-truth/small-corpus lane), banded-MinHash candidates +
-    exact-Jaccard verify above it (the 100 TB lane). Dispatch is by
-    corpus-size hint — supplied by the
-    caller or derived by the registered callables from the documents
-    parquet footer (``tables.table_rowcount``, metadata-only) — so no
-    counting JOB ever runs (VERDICT r12 next #3)."""
-    if n_docs_hint <= DEDUP_PAIR_DOC_CEILING:
+    stage. Up to ``lanes`` "dedup_pair_doc" ``n_docs`` (the caller's
+    documents footer count, so no counting job runs): the exact
+    shingle self-join, quadratic in per-shingle frequency and the
+    ground-truth lane. Above it: banded-MinHash candidates +
+    exact-Jaccard verify (`dedup_minhash`'s near-linear shape), no
+    shingle self-join anywhere in the plan. Both lanes produce
+    IDENTICAL pairs whenever banding recall is 1.0 for J ≥ threshold;
+    at deployment the banded lane's (bands, rows-per-band) S-curve is
+    the recall contract."""
+    if not lanes.exceeds("dedup_pair_doc", n_docs):
         return bounded_cache(
             "dedup.jaccard_pairs",
             exact_jaccard_pairs(docs, threshold).select("a_id", "b_id"),
@@ -444,26 +431,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Edge-count ceiling below which the component solve itself runs on the
+# Below ``lanes`` "dedup_cc_edge" the component solve runs on the
 # driver (union-find over the collected, ALREADY-VERIFIED pair relation)
 # instead of as a distributed min-label loop. Near-dup edge sets are the
-# smallest relation in the whole dedup pipeline — |pairs| ≪ |docs| by the
-# dedup rate — and the fixture/sf1 graphs are a few hundred to a few
-# thousand edges, so the iterative lane's per-round job+shuffle overhead
-# (2 blocking jobs × O(diameter) rounds) dwarfs the actual work by ~10×
-# (r13 measurement: 2.98 s for 256 edges / 477 nodes). 500k edges collect
-# to ~8 MB of longs — the same bounded-literal class as the k-centroid /
-# per-dim-range collects. Above the ceiling the distributed loop runs
-# unchanged; both lanes produce the identical min-label-per-component
-# fixed point (exact integer labels, no tie hazard) and are
-# differential-twin-tested in tests/test_llm_ops.py.
-# r14 crossover measurement (CROSSOVER_r14.json, VERDICT r13 next #5):
-# the union-find driver lane beats the distributed loop at every size
-# tried — 2.48 vs 3.76 s at 125k edges, 2.70 vs 2.82 s AT the ceiling,
-# 9.4 vs 12.2 s at 2M (union-find is one O(E·α) pass, not O(rounds·E))
-# — so 500k is evidence-backed with margin; memory stays the binding
-# constraint (~8 MB of longs at the ceiling).
-DEDUP_CC_EDGE_CEILING = 500_000
+# smallest relation in the dedup pipeline (|pairs| ≪ |docs|), and the
+# iterative lane's per-round job+shuffle overhead (2 blocking jobs ×
+# O(diameter) rounds) dwarfs the actual work there: 2.98 s for 256
+# edges / 477 nodes. Both lanes produce the identical
+# min-label-per-component fixed point (exact integer labels, no tie
+# hazard).
 
 
 def _cc_driver(rows, edges: DataFrame) -> DataFrame:
@@ -515,37 +491,30 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components by min-label propagation:
     (node, component) where component = min node id in the component.
 
-    Size-dispatched (r13, guide §2.1/§2.4): one bounded probe —
-    ``limit(DEDUP_CC_EDGE_CEILING + 1).collect()`` on the pair relation,
-    bounded BY CONSTRUCTION regardless of corpus size — both decides the
-    lane and, below the ceiling, already holds the full edge list, so
-    the small lane costs exactly one job + a driver union-find
-    (``_cc_driver``). The edge relation is the pipeline's smallest
-    (|pairs| ≪ |docs| by the dedup rate) and the distributed loop's cost
-    at that size is pure job overhead. Above the ceiling the probe rows
-    are discarded and the iterative lane runs: each round joins current
-    labels across edges
+    Size-dispatched: one bounded probe (``lanes.collect_within``
+    "dedup_cc_edge") on the pair relation both decides the lane and,
+    below the ceiling, already holds the full edge list, so the small
+    lane costs exactly one job + a driver union-find (``_cc_driver``).
+    Above the ceiling the probe rows are discarded and the iterative
+    lane runs: each round joins current labels across edges
     and keeps the per-node min — converging in O(diameter) rounds
     (near-dup clusters have tiny diameters). Lineage is cut per round
     with localCheckpoint so the plan doesn't grow unboundedly; the
     convergence check is a flag folded into the label pass (counted on
     the round's checkpointed output — no extra label⋈label join per
-    round, r13). At 100 TB the same loop runs with edges pre-partitioned
+    round). At 100 TB the same loop runs with edges pre-partitioned
     by node and labels persisted per round.
     """
-    # Materialize the pair pipeline ONCE before probing (ADVICE r13 #1:
-    # the bare probe collect fully evaluated the un-materialized near-dup
-    # pipeline, and above the ceiling those rows were discarded while the
-    # distributed lane's sym checkpoint re-derived the same pipeline —
-    # TWICE, once per union arm). Now every lane pays exactly one
-    # evaluation: the probe reads checkpointed blocks, and sym below is a
-    # block-read union, not a recompute.
+    # Materialize the pair pipeline ONCE before probing: above the
+    # ceiling the probe rows are discarded, and without the checkpoint
+    # the distributed lane's sym relation would re-derive the pipeline
+    # once per union arm. The probe reads checkpointed blocks, and sym
+    # below is a block-read union, not a recompute.
     edges = edges.select("a_id", "b_id").localCheckpoint(eager=True)
-    probe = edges.limit(DEDUP_CC_EDGE_CEILING + 1).collect()
-    if len(probe) <= DEDUP_CC_EDGE_CEILING:
+    probe = lanes.collect_within("dedup_cc_edge", edges)
+    if probe is not None:
         # the collected rows ARE the edge list: free the blocks now
-        # instead of leaving them to ContextCleaner GC (r14 block-
-        # pressure discipline, VERDICT r13 next #1)
+        # instead of leaving them to ContextCleaner GC
         result = _cc_driver(probe, edges)
         release(edges, checkpoint=True)
         return result
@@ -633,7 +602,7 @@ def cc_oracle(pairs_sql: str, id_col: str) -> str:
     tags=("reverify:r11",),
 )
 def dedup_clusters(
-    spark: SparkSession, sf_dir: str, n_docs_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Duplicate clusters: connected components over the verified
     near-dup pair graph — the step that turns pairwise dedup output into
@@ -642,17 +611,16 @@ def dedup_clusters(
 
     Iterative DataFrame label propagation (see ``connected_components``);
     the oracle is a DuckDB recursive CTE computing min-reachable-node.
-    The edge SOURCE dispatches on corpus size (``near_dup_pairs``):
-    exact shingle-Jaccard below ``DEDUP_PAIR_DOC_CEILING`` (keeps the
-    oracle deterministic and is the ground-truth lane), banded-MinHash
-    candidates + exact verify above it — at 100 TB the CC stage consumes
-    the near-linear detector, never the quadratic self-join. Both lanes
-    are differential-tested to identical clusters at fixture scale.
+    The edge SOURCE dispatches on the documents footer count
+    (``near_dup_pairs``): exact shingle-Jaccard in the small lane (the
+    ground-truth lane), banded-MinHash candidates + exact verify in the
+    scale lane — at 100 TB the CC stage consumes the near-linear
+    detector, never the quadratic self-join.
     """
     pairs = near_dup_pairs(
         load(spark, sf_dir, "documents"),
         JACCARD_THRESHOLD,
-        n_docs_hint or table_rowcount(sf_dir, "documents"),
+        table_rowcount(sf_dir, "documents"),
     )
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
@@ -1028,7 +996,7 @@ def _canonical_oracle() -> str:
 
 @register("dedup_canonical", oracle=_canonical_oracle(), tags=("reverify:r12",))
 def dedup_canonical(
-    spark: SparkSession, sf_dir: str, n_docs_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Canonical-document selection — the step that FINISHES dedup:
     pairwise detection (dedup_ngram) → clusters (dedup_clusters) → keep
@@ -1045,9 +1013,9 @@ def dedup_canonical(
     replays CC as a recursive CTE and ranks with the SAME quality
     expression text (SQL_QUALITY_EXPR), so keeper choice is bit-checked.
     The candidate-edge source dispatches on corpus size
-    (``near_dup_pairs``): above ``DEDUP_PAIR_DOC_CEILING`` the edges
-    come from banded MinHash + exact verify, so no shingle self-join
-    reaches the 100 TB plan — differential-tested to identical keepers.
+    (``near_dup_pairs``): in the scale lane the edges come from banded
+    MinHash + exact verify, so no shingle self-join reaches the 100 TB
+    plan.
     """
     docs = load(spark, sf_dir, "documents")
     from cpt_database_sync_spark.operators.llm_text import (  # noqa: PLC0415
@@ -1055,7 +1023,7 @@ def dedup_canonical(
     )
 
     pairs = near_dup_pairs(
-        docs, JACCARD_THRESHOLD, n_docs_hint or table_rowcount(sf_dir, "documents")
+        docs, JACCARD_THRESHOLD, table_rowcount(sf_dir, "documents")
     )
     comp = connected_components(pairs)
     q = docs.select("doc_id", quality_col().alias("quality"))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.operators.llm_dedup import (
     cc_oracle,
     connected_components,
@@ -705,13 +706,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 KM_K = 8
 KM_ITERS = 3
 
-# Ceiling for the driver-literal centroid pattern (_ivf_cell_ranks /
-# kmeans assign_with): K x dims double literals embedded in the plan.
-# Catalyst folds them fine up to ~10^4-10^5 values; past that, plan
-# serialization/compile dominates. Above the ceiling the assignment
-# switches to assign_via_relation: the same HOF argmax, but the centroid
-# array arrives via a one-row BROADCAST RELATION instead of the plan tree.
-CENTROID_LITERAL_CEILING = 65536
+# The driver-literal centroid pattern (_ivf_cell_ranks / kmeans
+# assign_with) embeds K x dims double literals in the plan. Catalyst
+# folds them fine up to ~10^4-10^5 values; past that, plan
+# serialization/compile dominates. Above ``lanes`` "centroid_literal"
+# the assignment switches to assign_via_relation: the same HOF argmax,
+# but the centroid array arrives via a one-row BROADCAST RELATION
+# instead of the plan tree.
 
 
 def argmax_centroid(cents_col: Column) -> Column:
@@ -845,18 +846,13 @@ def kmeans_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
         return local_frame(spark, [], "vec_id bigint, cid bigint")
 
     def centroid_literal(rows) -> Column:
-        # r13 (guide §5.1 — the driver is part of the plan): the K x
-        # dims literal used to be built as 512+ individual F.lit py4j
-        # calls, ~0.7-0.9 s of DRIVER time per iteration at K=8,
-        # dims=64. The whole K-centroid array renders as ONE SQL string
-        # -> ONE F.expr py4j call; the per-array text (and its
-        # None/non-finite guard + bit-exactness contract) comes from
-        # the shared dbl_array_sql (r14, ADVICE r13 #2 — one home for
-        # the rendered-literal logic; a guard miss falls back to the
-        # broadcast-relation path, which assign_with also takes above
-        # the literal ceiling). An F.struct-per-centroid variant
-        # measured +0.17 s/call in the r14 isolated lane — the single
-        # rendered call is the point of this device.
+        # The whole K-centroid array renders as ONE SQL string -> ONE
+        # F.expr py4j call: 512+ individual F.lit calls cost ~0.7-0.9 s
+        # of driver time per iteration at K=8, dims=64, and an
+        # F.struct-per-centroid variant +0.17 s per call. The
+        # per-array text (and its None/non-finite guard +
+        # bit-exactness contract) comes from the shared dbl_array_sql;
+        # a guard miss falls back to the broadcast-relation path.
         parts = []
         for r in sorted(rows, key=lambda r: r["cid"]):
             arr = dbl_array_sql(r["ce"])
@@ -872,13 +868,13 @@ def kmeans_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
         # K x dims above the literal ceiling -> broadcast-relation path
         # (same argmax fold, centroids shipped as data not plan nodes);
         # below it, the literal keeps the plan self-contained. At KM_K=8
-        # the literal path runs — results are identical either way
-        # (equality-checked in tests/test_plans.py). A guard miss in
-        # the literal render (non-finite centroid — argued impossible)
-        # also takes the relation path.
+        # the literal path runs — results are identical either way. A
+        # guard miss in the literal render (non-finite centroid) also
+        # takes the relation path.
+        n_values = len(rows) * len(rows[0]["ce"])
         lit = (
             None
-            if len(rows) * len(rows[0]["ce"]) > CENTROID_LITERAL_CEILING
+            if lanes.exceeds("centroid_literal", n_values)
             else centroid_literal(rows)
         )
         if lit is None:

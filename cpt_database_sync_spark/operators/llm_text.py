@@ -17,6 +17,7 @@ from cpt_database_sync_spark.plans.golden import (
     DOCS_FINGERPRINT_SQL,
     golden_oracle,
 )
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.session import local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
@@ -841,29 +842,20 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGES = 12
 
-# Vocab-size ceiling below which the BPE merge LOOP runs on the driver
-# over the collected (word, freq) table instead of as 2 jobs per merge
-# round (r13, guide §2.4/§5 — the GRAPH_DRIVER_EDGE_CEILING device).
-# The corpus-scale work (explode + word-frequency shuffle) ALWAYS runs
-# distributed; what moves to the driver is the vocab-sized iteration,
-# probed with a bounded limit(ceiling+1).collect() (≤ ~200k (w, freq)
-# pairs ≈ a few MB — the bounded-literal collect class). The driver
-# loop replicates the distributed expressions verbatim: same adjacent
-# pair counting weighted by freq, same (count DESC, pair ASC) tie-break
-# (Spark string order = UTF-8 binary = Python code-point order), same
-# leftmost-greedy fold — differential-twin-tested in tests/test_plans.py.
-# r14 crossover measurement (CROSSOVER_r14.json, VERDICT r13 next #5):
-# the driver merge loop beats the 2-jobs-per-merge distributed loop at
-# every size tried — 4.0 vs 25.0 s at 50k distinct words, 16.3 vs
-# 41.1 s AT the ceiling, 57.6 vs 128.8 s at 800k — so 200k is
-# evidence-backed; what caps it is the driver-memory/latency budget
-# (a 57 s single-core stall at 800k), not the crossover.
-BPE_VOCAB_DRIVER_CEILING = 200_000
+# Below ``lanes`` "bpe_vocab_driver" distinct words the BPE merge LOOP
+# runs on the driver over the collected (word, freq) table instead of
+# as 2 jobs per merge round. The corpus-scale work (explode +
+# word-frequency shuffle) ALWAYS runs distributed; what moves to the
+# driver is the vocab-sized iteration. The driver loop replicates the
+# distributed expressions verbatim: same adjacent pair counting
+# weighted by freq, same (count DESC, pair ASC) tie-break (Spark string
+# order = UTF-8 binary = Python code-point order), same leftmost-greedy
+# fold.
 
 
 def _bpe_learn_driver(spark: SparkSession, rows) -> DataFrame:
-    """Driver lane for the BPE merge loop (see
-    ``BPE_VOCAB_DRIVER_CEILING``): ``rows`` is the collected
+    """Driver lane for the BPE merge loop (see ``lanes``
+    "bpe_vocab_driver"): ``rows`` is the collected
     ``(w, freq)`` vocabulary; every expression mirrors the distributed
     loop bit-for-bit."""
     from pyspark.sql import types as T  # noqa: PLC0415
@@ -951,8 +943,8 @@ def bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
     ).filter(F.col("w") != "")
     vocab_base = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    probe = vocab_base.limit(BPE_VOCAB_DRIVER_CEILING + 1).collect()
-    if len(probe) <= BPE_VOCAB_DRIVER_CEILING:
+    probe = lanes.collect_within("bpe_vocab_driver", vocab_base)
+    if probe is not None:
         return _bpe_learn_driver(spark, [(r["w"], r["freq"]) for r in probe])
     chars = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
     vocab = vocab_base.withColumn("syms", chars).localCheckpoint(eager=True)
@@ -1726,13 +1718,10 @@ def script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Vocabulary growth (Heaps curve) ----------------------------------------
 
 VOCAB_GROWTH_BUCKETS = 10  # corpus-prefix deciles the curve is sampled at
-# doc_ids per chunk for the two-level position device: 1e10 docs →
-# 1e5 chunk aggregates through the one |chunks|-row prefix task.
+# doc_ids per chunk for the two-level position device (``lanes``
+# "vocab_window"): 1e10 docs → 1e5 chunk aggregates through the one
+# |chunks|-row prefix task.
 VOCAB_DOC_CHUNK = 100_000
-# Below this many documents (footer-derived) the single-window
-# row_number is cheaper than the two-level machinery (the same
-# small-lane economics as the rest of the dispatch family).
-VOCAB_WINDOW_DOC_CEILING = 10_000_000
 
 _VOCAB_GROWTH_SQL = f"""
     WITH d AS (
@@ -1784,8 +1773,6 @@ _VOCAB_GROWTH_SQL = f"""
 def vocab_growth(
     spark: SparkSession,
     sf_dir: str,
-    doc_chunk: int = 0,
-    n_docs_hint: int = 0,
 ) -> DataFrame:
     """Vocabulary growth curve (Heaps' law, V ≈ K·N^β): cumulative
     distinct-token count vs cumulative token count, sampled at
@@ -1810,33 +1797,26 @@ def vocab_growth(
     dedup-shaped groupBy(word) — map-side-combined, the shuffle
     carries one row per DISTINCT word (the `dedup_exact`
     discipline); the occurrence rollup is 10 rows straight off the
-    generator. Everything downstream is grid-sized. BELOW
-    ``VOCAB_WINDOW_DOC_CEILING`` documents (footer-derived hint) the
-    doc position is the plain single-window row_number — the audited
-    allowlist class, cheaper at small scale. ABOVE it (r13 — this
-    used to be a corpus-sized single-task ROW_NUMBER at EVERY scale,
-    the shape the curriculum_stages rework killed),
+    generator. Everything downstream is grid-sized. Small lane
+    (``lanes`` "vocab_window", documents footer count): the doc
+    position is the plain single-window row_number — the audited
+    allowlist class, cheaper at small scale. Scale lane:
     ``ranks.two_level_row_number`` over monotone
     ``doc_id div VOCAB_DOC_CHUNK`` chunks: chunk-local row_numbers in
     parallel, one |chunks|-row prefix, and n_docs rides the SAME
     chunk-aggregate broadcast (the global COUNT() OVER () funnel goes
-    with it). Bit-identical twin. The word rollup shuffles
-    xxhash64(word) exactly as `dedup_substring`'s hashed lane.
-    ``doc_chunk`` forces the big lane with that chunk width (tests
-    exercise the multi-chunk path at fixture scale).
+    with it). The word rollup shuffles xxhash64(word) exactly as
+    `dedup_substring`'s hashed lane.
     """
     docs = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    if n_docs_hint == 0:
-        n_docs_hint = table_rowcount(sf_dir, "documents")
-    if doc_chunk or n_docs_hint > VOCAB_WINDOW_DOC_CEILING:
+    if lanes.exceeds("vocab_window", table_rowcount(sf_dir, "documents")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             two_level_row_number,
         )
 
-        width = doc_chunk or VOCAB_DOC_CHUNK
         d = two_level_row_number(
             docs.select("doc_id", "text"),
-            chunk=F.expr(f"doc_id div {width}"),
+            chunk=F.expr(f"doc_id div {VOCAB_DOC_CHUNK}"),
             order_cols=["doc_id"],
             out="pos",
             total_col="n_docs",

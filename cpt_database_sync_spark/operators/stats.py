@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cpt_database_sync_spark.operators import lanes
 from cpt_database_sync_spark.plans.registry import register
 from cpt_database_sync_spark.session import bounded_cache, local_frame
 from cpt_database_sync_spark.sources.tables import load, table_rowcount
@@ -1571,24 +1572,22 @@ _WINSOR_APPROX_SQL = """
 """
 
 
-def _winsor_bounds(ev, n_rows_hint: int):
+def _winsor_bounds(ev, n_rows: int):
     """Per-type (nv, exact p05/p95, GK a05/a95) bounds relation for
     ``winsorize_approx`` — PRE-checkpoint, so the plan gates can assert
     the lane shape directly (the op wraps it in a lazy localCheckpoint,
     which hides the subtree from the served plan).
 
-    BELOW ``PCTL_SORT_ROW_CEILING``: ONE exact-Percentile buffer and ONE
-    GK sketch per group serve both tail percentages (r14, guide §2.3 —
-    the two single-percentage aggregates each re-buffered/re-sketched
-    the group's values; array percentages share the state and are
-    bit-identical per element). ABOVE it (r14, VERDICT r13 next #7) the
-    exact p05/p95 come from the two-level chunked device
-    (`iqr_fences`/`tail_cvar` discipline — no per-group value buffer,
-    bit-identical interpolation) over the non-NULL values; the count and
+    Small lane (``lanes`` "single_task_rows" over ``n_rows``): ONE
+    exact-Percentile buffer and ONE GK sketch per group serve both tail
+    percentages (array percentages share the state and are
+    bit-identical per element). Scale lane: the exact p05/p95 come from
+    the two-level chunked device (`iqr_fences`/`tail_cvar` discipline —
+    no per-group value buffer) over the non-NULL values; the count and
     the mergeable sketches stay one hash rollup, and the left join keeps
     all-NULL groups (nv=0, NULL bounds) exactly as the small lane's
     groupBy does."""
-    if n_rows_hint > PCTL_SORT_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", n_rows):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             group_quantiles_cont,
         )
@@ -1633,7 +1632,7 @@ def _winsor_bounds(ev, n_rows_hint: int):
 
 @register("winsorize_approx", oracle=_WINSOR_APPROX_SQL)
 def winsorize_approx(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """`winsorize_scale`'s documented 100 TB lane made checkable — the
     second half of VERDICT r9 next #5 (`anomaly_mad_approx` is the
@@ -1656,23 +1655,21 @@ def winsorize_approx(
     (carrying one shared GK sketch beside the exact percentiles), then
     one broadcast-join + map-side-combined re-aggregation doing clamp
     counts, the winsorized decimal mean, and the four rank counts
-    together. BELOW ``PCTL_SORT_ROW_CEILING`` rows (footer-derived
-    hint) the exact p05/p95 share ONE Percentile buffer per group
-    (array percentages — r14; two single-percentage aggregates each
-    re-buffered the group). ABOVE it they come from the two-level
-    chunked device (``ranks.group_quantiles_cont``, bit-identical
-    interpolation — the ``iqr_fences``/``tail_cvar`` lane), so no
-    per-group value buffer exists at scale; the sketches are mergeable
-    either way.
+    together. Small lane (``lanes`` "single_task_rows", events footer
+    count): the exact p05/p95 share ONE Percentile buffer per group.
+    Scale lane: they come from the two-level chunked device
+    (``ranks.group_quantiles_cont`` — the ``iqr_fences``/``tail_cvar``
+    lane), so no per-group value buffer exists at scale; the sketches
+    are mergeable either way.
     """
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("event_type").isNotNull())
         .select("event_type", "value")
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "events")
-    bounds = _winsor_bounds(ev, n_rows_hint).localCheckpoint(eager=False)
+    bounds = _winsor_bounds(
+        ev, table_rowcount(sf_dir, "events")
+    ).localCheckpoint(eager=False)
     joined = ev.join(F.broadcast(bounds), "event_type")
     wv = (
         F.when(F.col("value") < F.col("p05"), F.col("p05"))
@@ -1720,18 +1717,13 @@ def winsorize_approx(
     )
 
 
-# Row ceiling for the dimension-rank family's window lane (gini /
-# lorenz here, rfm_segments in analytics.py): the nation-partitioned
-# row_number/NTILE sorts each nation's FULL customer rollup inside one
-# task — dimension-sized today, single-task-funnel once customers
-# rival the fact (VERDICT r12 next #6). Above the ceiling (hint
-# derived from the customer parquet footer when the caller passes
-# none) ranks come from the two-level chunked row_number
+# The dimension-rank family's window lane (gini / lorenz here,
+# rfm_segments in analytics.py) sorts each nation's FULL customer
+# rollup inside one task. Above ``lanes`` "single_task_rows" (customer
+# footer count) ranks come from the two-level chunked row_number
 # (operators/ranks.py): cents-range chunks sort corpus fractions in
 # parallel, the chunk balance prefixes over |nations|x|chunks|
-# aggregate rows, and NTILE becomes a closed form over (rank, n) — no
-# per-nation relation sort anywhere. Twin-tested bit-identical.
-CUSTOMER_RANK_ROW_CEILING = 50_000_000
+# aggregate rows, and NTILE becomes a closed form over (rank, n).
 CENTS_CHUNK_WIDTH = 10_000_000  # $100k lifetime-spend chunks
 
 _GINI_EXPR = (
@@ -1777,7 +1769,7 @@ _GINI_SQL = f"""
 # which keeps its tag).
 @register("gini_concentration", oracle=_GINI_SQL)
 def gini_concentration(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Gini coefficient of customer spend per nation — the inequality/
     concentration rollup a marketplace-health dashboard runs (is revenue
@@ -1798,10 +1790,9 @@ def gini_concentration(
     engines (shared _GINI_EXPR text), NULL on an all-zero nation.
 
     Physics: one customer-keyed outer join + rollup (spend), then the
-    rank. BELOW ``CUSTOMER_RANK_ROW_CEILING`` a nation-partitioned
-    window sort over the |customers| rollup (dimension-sized — the
-    right plan until customers rival the fact); ABOVE it (hint from
-    the customer parquet footer) the two-level chunked row_number —
+    rank. Small lane (``lanes`` "single_task_rows", customer footer
+    count): a nation-partitioned window sort over the |customers|
+    rollup. Scale lane: the two-level chunked row_number —
     cents-range chunks sort in parallel, the balance prefixes over
     chunk AGGREGATES only (operators/ranks.py) — so no task ever
     sorts a nation's whole slice. One map-side-combined per-nation
@@ -1824,9 +1815,7 @@ def gini_concentration(
             .alias("cents")
         )
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "customer")
-    if n_rows_hint > CUSTOMER_RANK_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "customer")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             two_level_row_number,
         )
@@ -1930,12 +1919,9 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-channel row ceiling for quantile_normalize's window lane: the
-# |event_type|-partitioned percent_rank sorts each channel's FULL fact
+# quantile_normalize's window lane sorts each channel's FULL fact
 # slice inside one task (parallelism = |channels| = 5 at any corpus
-# size), which is the right plan at fixture scale and a scale-killer
-# at 100 TB (VERDICT r12 what's-wrong #1 — the last corpus-sized
-# per-group fact sort in the registry). Above the ceiling the rank
+# size). Above ``lanes`` "single_task_rows" the rank
 # structure comes from per-(channel, value) ROLLUPS through the
 # channel-grouped two-level chunked prefix (`_rank_avg2_two_level` —
 # the spearman device) and joins back to the fact on (channel, value):
@@ -1943,7 +1929,6 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bit-identical: percent_rank's RANK is the peer group's MIN rank —
 # a pure function of the per-value rollup — and (min_rank−1)/(n−1) is
 # the same exact-long-over-exact-long IEEE division in both lanes.
-QN_WINDOW_ROW_CEILING = 50_000_000
 
 
 @register(
@@ -1957,7 +1942,7 @@ QN_WINDOW_ROW_CEILING = 50_000_000
     tags=("reverify:r13",),
 )
 def quantile_normalize(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Quantile (rank/CDF) normalization per channel — the
     distribution-free feature transform (map each value to its within-group
@@ -1975,25 +1960,22 @@ def quantile_normalize(
     contract on both sides; NULL event_type is a real group (window
     partitions keep it on both engines).
 
-    Physics: BELOW ``QN_WINDOW_ROW_CEILING`` rows, ONE type-keyed
-    shuffle and a within-partition sort — the canonical window shape.
-    ABOVE it (hint derived from the parquet footer when the caller
-    passes none), the rank structure comes from per-(type, value)
-    rollups through the type-grouped two-level chunked prefix and a
-    rank-aligned join back to the fact on (type, value) — the fact is
-    never sorted inside a task, parallelism is |distinct values|-wide,
-    and the per-type n joins as a |types|-row broadcast. NULL
-    event_type stays a real group in both lanes (the big lane groups
-    and joins on a (is_null, value) struct key, sidestepping
-    NULL-droppping equi-join semantics). The further documented swap
-    is the approx-CDF transform (percentile_approx grid + broadcast
-    interpolation — the winsorize_approx lane) when even the rollup is
-    too hot.
+    Physics: small lane (``lanes`` "single_task_rows", events footer
+    count), ONE type-keyed shuffle and a within-partition sort — the
+    canonical window shape. Scale lane: the rank structure comes from
+    per-(type, value) rollups through the type-grouped two-level
+    chunked prefix and a rank-aligned join back to the fact on
+    (type, value) — the fact is never sorted inside a task,
+    parallelism is |distinct values|-wide, and the per-type n joins as
+    a |types|-row broadcast. NULL event_type stays a real group in both
+    lanes (the big lane groups and joins on a (is_null, value) struct
+    key, sidestepping NULL-droppping equi-join semantics). The further
+    documented swap is the approx-CDF transform (percentile_approx
+    grid + broadcast interpolation — the winsorize_approx lane) when
+    even the rollup is too hot.
     """
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "events")
-    if n_rows_hint > QN_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         # NULL-proof group key: equi-joins drop NULL keys, but NULL
         # event_type is a real channel. (is_null, coalesced value) is
         # total and collision-free.
@@ -2081,7 +2063,7 @@ _LORENZ_SQL = f"""
 
 @register("lorenz_deciles", oracle=_LORENZ_SQL, tags=("reverify:r13",))
 def lorenz_deciles(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Lorenz curve by spend decile per nation — `gini_concentration`'s
     companion VIEW (Gini is the area summary; this is the curve a
@@ -2098,9 +2080,9 @@ def lorenz_deciles(
     nation.
 
     Physics: one per-customer rollup (the gini_concentration stage),
-    then the rank. BELOW ``CUSTOMER_RANK_ROW_CEILING`` one
-    nation-partitioned dimension sort for NTILE; ABOVE it (hint from
-    the customer parquet footer) the two-level chunked row_number
+    then the rank. Small lane (``lanes`` "single_task_rows", customer
+    footer count): one nation-partitioned dimension sort for NTILE.
+    Scale lane: the two-level chunked row_number
     plus the closed-form NTILE over (rank, per-nation n) — both from
     operators/ranks.py, no per-nation relation sort, the per-nation n
     carried on the chunk-aggregate broadcast. Everything downstream
@@ -2124,9 +2106,7 @@ def lorenz_deciles(
             .alias("cents")
         )
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "customer")
-    if n_rows_hint > CUSTOMER_RANK_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "customer")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             ntile_col_sql,
             two_level_row_number,
@@ -2232,20 +2212,17 @@ _DRIFT_KS_SQL = f"""
 """
 
 
-# Per-type distinct-value ceiling for drift_ks's cumulative window:
-# the per-type ordered CDF pass runs over DISTINCT values, which scale
-# with the corpus for continuous measures — the same class the
-# spearman/MWU two-level device closed. Above the ceiling (hint from
-# the events parquet footer, a conservative distinct-value upper
-# bound) both cumulative counts run chunk-locally with a prefix over
-# the chunk AGGREGATES only. Bit-identical: the CDF gap is a pure
-# function of the per-value cumulative counts the device preserves.
-KS_WINDOW_ROW_CEILING = 50_000_000
+# drift_ks's per-type ordered CDF pass runs over DISTINCT values, which
+# scale with the corpus for continuous measures. Above ``lanes``
+# "single_task_rows" (events footer count, an upper bound on distinct
+# values) both cumulative counts run chunk-locally with a prefix over
+# the chunk AGGREGATES only. The CDF gap is a pure function of the
+# per-value cumulative counts the device preserves.
 
 
 @register("drift_ks", oracle=_DRIFT_KS_SQL, tags=("reverify:r13",))
 def drift_ks(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov drift per event type —
     `drift_psi`'s companion monitor over the SAME before/after cutoff:
@@ -2267,12 +2244,11 @@ def drift_ks(
 
     Physics: one type-keyed exchange of the (type, value)-deduplicated
     counts feeds both the ordered cumulative window and the totals;
-    everything upstream is a map-side-combined groupBy. BELOW
-    ``KS_WINDOW_ROW_CEILING`` the per-type sort is over DISTINCT
-    values; ABOVE it (hint from the events parquet footer) both
-    cumulative counts run through the two-level chunked prefix —
-    value-range chunks locally, balance over chunk AGGREGATES,
-    implemented r13 (was documented-only). The further documented swap
+    everything upstream is a map-side-combined groupBy. In the small
+    lane the per-type sort is over DISTINCT values; in the scale lane
+    (see the comment above) both cumulative counts run through the
+    two-level chunked prefix — value-range chunks locally, balance
+    over chunk AGGREGATES. The further documented swap
     is the GK-sketch lane (`winsorize_approx`'s trade: D to within the
     sketch's rank ε).
     """
@@ -2287,9 +2263,7 @@ def drift_ks(
     per_v = ev.groupBy("event_type", "value").agg(
         F.sum(a).alias("ca"), F.sum(1 - a).alias("cb")
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "events")
-    if n_rows_hint > KS_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "events")):
         chunked = per_v.withColumn(
             "chunk", F.floor(F.col("value") / RANK_CHUNK_WIDTH).cast("long")
         )
@@ -2550,23 +2524,20 @@ _SPEARMAN_SQL = f"""
 """
 
 
-# Per-flag fact-row ceiling for spearman's in-partition rank sort: the
-# window lane sorts each flag's FULL fact slice inside one task
-# (parallelism = |flags| = 3), which is the right plan at fixture scale
-# and impossible at 100 TB (tens of TB per task). Above the ceiling the
+# spearman's window lane sorts each flag's FULL fact slice inside one
+# task (parallelism = |flags| = 3). Above ``lanes`` "single_task_rows"
+# (lineitem footer count, an upper bound per flag) the
 # rank structure comes from per-(flag, value) ROLLUPS run through the
 # two-level chunked prefix (`_rank_avg2_two_level` grouped by flag — no
 # unpartitioned window anywhere) and joined back to the fact on
 # (flag, value): the fact is never sorted, only shuffled on join keys,
-# full parallelism. Bit-identical (tie-averaged ranks are a pure
-# function of the per-value rollup) — differential twin in
-# tests/test_units.py, plan gate in tests/test_plans.py.
-SPEARMAN_WINDOW_ROW_CEILING = 50_000_000
+# full parallelism. Tie-averaged ranks are a pure function of the
+# per-value rollup, so both lanes return the same rows.
 
 
 @register("spearman_corr", oracle=_SPEARMAN_SQL, tags=("reverify:r12",))
 def spearman_corr(
-    spark: SparkSession, sf_dir: str, n_per_group_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Spearman rank correlation between quantity and extended price
     per return flag — the robust counterpart to `corr_matrix`'s Pearson
@@ -2586,14 +2557,14 @@ def spearman_corr(
     are out of contract on both sides (rank order of NULL differs by
     engine).
 
-    Physics: BELOW ``SPEARMAN_WINDOW_ROW_CEILING`` rows per flag, two
+    Physics: small lane, two
     within-group sort windows over the fact (rank by x, rank by y —
     one exchange on the group key, two in-partition sorts), then one
-    map-side-combined moment rollup to |groups| rows. ABOVE it, the
+    map-side-combined moment rollup to |groups| rows. Scale lane: the
     rank structure comes from per-(flag, value) rollups through the
     flag-grouped two-level chunked prefix, joined back to the fact on
     (flag, value) — the fact is never sorted inside a task (see the
-    ceiling constant). Both lanes feed the identical moment rollup.
+    comment above). Both lanes feed the identical moment rollup.
     The further documented swap is approximate ranks from the GK
     sketch lane (`agg_approx_percentile`) feeding the same closed
     form — rank-interval contract instead of exact ranks.
@@ -2601,14 +2572,7 @@ def spearman_corr(
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity").isNotNull() & F.col("l_extendedprice").isNotNull()
     )
-    if n_per_group_hint == 0:
-        # Data-derived dispatch (VERDICT r12 next #3): parquet-footer
-        # row count as a conservative per-group upper bound (one flag
-        # could own the whole fact — skew-safe by construction). A
-        # caller-supplied hint still wins; 0 from the probe means
-        # "unknown" and keeps the window lane.
-        n_per_group_hint = table_rowcount(sf_dir, "lineitem")
-    if n_per_group_hint > SPEARMAN_WINDOW_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "lineitem")):
         li2 = li.select(
             "l_returnflag",
             F.col("l_quantity").alias("q"),
@@ -3324,11 +3288,6 @@ def jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Levene / Brown-Forsythe variance-homogeneity test --------------------
 
-# Same governance as analytics.PCTL_SORT_ROW_CEILING (the iqr_fences /
-# tail_cvar pair): above this many fact rows the exact median leaves
-# Spark's Percentile aggregate for ranks.group_quantiles_cont. Own
-# binding so monkeypatch-style tests patch per module.
-PCTL_SORT_ROW_CEILING = 50_000_000
 QUANTITY_CHUNK_WIDTH = 5.0  # l_quantity spans [1, 50] integers
 
 # The ANOVA machinery applied to DOUBLED absolute deviations from the
@@ -3385,7 +3344,7 @@ _LEVENE_SQL = f"""
 
 @register("levene_test", oracle=_LEVENE_SQL, tags=("reverify:r13",))
 def levene_test(
-    spark: SparkSession, sf_dir: str, n_rows_hint: int = 0
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Levene's variance-homogeneity test (Brown-Forsythe variant:
     deviations from the group MEDIAN, the robust recommendation) —
@@ -3407,22 +3366,19 @@ def levene_test(
 
     Physics: the per-group median relation broadcast back over ONE
     deviation pass (the `iqr_fences` shape), then k-row arithmetic.
-    BELOW ``PCTL_SORT_ROW_CEILING`` rows (footer-derived hint) the
-    median is Spark's built-in exact Percentile; ABOVE it,
+    Small lane (``lanes`` "single_task_rows", lineitem footer count):
+    the median is Spark's built-in exact Percentile. Scale lane:
     ``ranks.group_quantiles_cont`` — the per-(flag, quantity) rollup
     through the flag-grouped two-level cumulative counts with
-    Percentile's own interpolation as a closed form (bit-identical
-    twin; the r13 exact-percentile dispatch closing this key's
-    documented swap). The GK sketch stays the documented lane when
-    even the rollup is too hot (quantities here are 50 distinct
-    integers — the rollup IS vocabulary-sized).
+    Percentile's own interpolation as a closed form. The GK sketch
+    stays the documented lane when even the rollup is too hot
+    (quantities here are 50 distinct integers — the rollup IS
+    vocabulary-sized).
     """
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity").isNotNull()
     )
-    if n_rows_hint == 0:
-        n_rows_hint = table_rowcount(sf_dir, "lineitem")
-    if n_rows_hint > PCTL_SORT_ROW_CEILING:
+    if lanes.exceeds("single_task_rows", table_rowcount(sf_dir, "lineitem")):
         from cpt_database_sync_spark.operators.ranks import (  # noqa: PLC0415
             group_quantiles_cont,
         )

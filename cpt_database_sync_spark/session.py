@@ -20,6 +20,13 @@ import warnings
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
+# The directory that holds the package. Python workers start in the
+# driver's working directory and see only that on their path, so
+# without it every pandas-UDF key fails with "No module named
+# 'cpt_database_sync_spark'" when the driver starts outside that
+# directory.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _local_scratch() -> str:
     """RAM-backed scratch for shuffle/spill when available (local mode);
@@ -94,6 +101,8 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # PySpark merges this into each Python worker's PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -1,16 +1,13 @@
-"""Driver-lane crossover measurement (VERDICT r13 next #5).
+"""Driver-lane crossover measurement.
 
-The r13 optimization round moved the ITERATION of the loop-shaped
-operators (graph fixed points, dedup connected components, the BPE merge
-loop) onto the driver below data-probed ceilings
-(``GRAPH_DRIVER_EDGE_CEILING`` / ``DEDUP_CC_EDGE_CEILING`` = 500k edges,
-``BPE_VOCAB_DRIVER_CEILING`` = 200k words). The ceilings were sized by
-memory-bound argument only — nothing ever TIMED the driver lane against
-the distributed lane AT the ceiling, so the constants were assumptions.
+The loop-shaped operators (graph fixed points, dedup connected
+components, the BPE merge loop) solve their ITERATION on the driver
+below the ``lanes`` ceilings "graph_driver_edge", "dedup_cc_edge" and
+"bpe_vocab_driver".
 
 This harness builds synthetic inputs at fractions and multiples of each
 ceiling, times both lanes on identical data in one session (forcing the
-lane by patching the module ceiling, exactly like the twin tests), checks
+lane by patching ``lanes.CEILINGS``, exactly like the twin tests), checks
 the lanes produce identical results, and prints one JSON document
 (committed as ``CROSSOVER_r14.json``). "The right ceiling" is where the
 lane times cross: below it the distributed loop is pure job overhead,
@@ -25,13 +22,17 @@ import json
 import os
 import sys
 import time
+from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from cpt_database_sync_spark.operators import graph, llm_dedup, llm_text  # noqa: E402
+from cpt_database_sync_spark.operators import graph, lanes, llm_dedup  # noqa: E402
 from cpt_database_sync_spark.session import get_spark  # noqa: E402
+
+# Ceilings that force the driver lane and the distributed lane.
+DRIVER, DISTRIBUTED = 10**18, 0
 
 
 def _timed(fn):
@@ -67,18 +68,14 @@ def run_cc(spark, sizes) -> dict:
     for n in sizes:
         edges = cc_edges(spark, n, max(1000, n // 50))
         n_real = edges.count()
-        saved = llm_dedup.DEDUP_CC_EDGE_CEILING
-        try:
-            llm_dedup.DEDUP_CC_EDGE_CEILING = 2_000_000_000  # force driver lane (limit() takes int32)
+        with patch.dict(lanes.CEILINGS, {"dedup_cc_edge": DRIVER}):
             d_res, t_driver = _timed(
                 lambda: _rowset(llm_dedup.connected_components(edges))
             )
-            llm_dedup.DEDUP_CC_EDGE_CEILING = 0  # force distributed lane
+        with patch.dict(lanes.CEILINGS, {"dedup_cc_edge": DISTRIBUTED}):
             s_res, t_dist = _timed(
                 lambda: _rowset(llm_dedup.connected_components(edges))
             )
-        finally:
-            llm_dedup.DEDUP_CC_EDGE_CEILING = saved
         out[str(n)] = {
             "edges": n_real,
             "t_driver": t_driver,
@@ -94,7 +91,6 @@ def run_graph(spark, sizes) -> dict:
     checkpointed edge relation so only the iteration is timed."""
     out = {}
     saved_flows = graph._trade_flows
-    saved_ceil = graph.GRAPH_DRIVER_EDGE_CEILING
     try:
         for n in sizes:
             n_nodes = max(1000, int((2 * n) ** 0.5))
@@ -116,18 +112,14 @@ def run_graph(spark, sizes) -> dict:
             # the iteration runs over the patched synthetic flows
             sf_small = "/root/testdata/sf0.001"
             graph._trade_flows = lambda s, d, _f=flows: _f
-            graph._FLOWS_ROWS_MEMO[:] = []
-            graph.GRAPH_DRIVER_EDGE_CEILING = 2_000_000_000
-            d_res, t_driver = _timed(
-                lambda: _rowset(graph.pagerank_nations(spark, sf_small,
-                                                       n_nodes_hint=1))
-            )
-            graph._FLOWS_ROWS_MEMO[:] = []
-            graph.GRAPH_DRIVER_EDGE_CEILING = 0
-            s_res, t_dist = _timed(
-                lambda: _rowset(graph.pagerank_nations(spark, sf_small,
-                                                       n_nodes_hint=1))
-            )
+            with patch.dict(lanes.CEILINGS, {"graph_driver_edge": DRIVER}):
+                d_res, t_driver = _timed(
+                    lambda: _rowset(graph.pagerank_nations(spark, sf_small))
+                )
+            with patch.dict(lanes.CEILINGS, {"graph_driver_edge": DISTRIBUTED}):
+                s_res, t_dist = _timed(
+                    lambda: _rowset(graph.pagerank_nations(spark, sf_small))
+                )
             out[str(n)] = {
                 "edges": n_real,
                 "t_driver": t_driver,
@@ -136,20 +128,18 @@ def run_graph(spark, sizes) -> dict:
             }
     finally:
         graph._trade_flows = saved_flows
-        graph.GRAPH_DRIVER_EDGE_CEILING = saved_ceil
         graph._FLOWS_ROWS_MEMO[:] = []
     return out
 
 
 def run_bpe(spark, sizes) -> dict:
-    """BPE merge loop at vocab sizes around BPE_VOCAB_DRIVER_CEILING:
+    """BPE merge loop at vocab sizes around the "bpe_vocab_driver" ceiling:
     synthetic corpus = one document per distinct word (freq 1), words of
     4-10 lowercase letters derived from the row id."""
     from cpt_database_sync_spark.operators import llm_text as lt
 
     out = {}
     saved_load = lt.load
-    saved_ceil = lt.BPE_VOCAB_DRIVER_CEILING
     try:
         for n in sizes:
             # hex-rendered hash = a 1-16 char word over [0-9a-f]: real
@@ -162,14 +152,14 @@ def run_bpe(spark, sizes) -> dict:
             )
             n_real = docs.select("text").distinct().count()
             lt.load = lambda s, d, t, _docs=docs: _docs
-            lt.BPE_VOCAB_DRIVER_CEILING = 2_000_000_000
-            d_res, t_driver = _timed(
-                lambda: _rowset(lt.bpe_learn(spark, "/nonexistent"))
-            )
-            lt.BPE_VOCAB_DRIVER_CEILING = 0
-            s_res, t_dist = _timed(
-                lambda: _rowset(lt.bpe_learn(spark, "/nonexistent"))
-            )
+            with patch.dict(lanes.CEILINGS, {"bpe_vocab_driver": DRIVER}):
+                d_res, t_driver = _timed(
+                    lambda: _rowset(lt.bpe_learn(spark, "/nonexistent"))
+                )
+            with patch.dict(lanes.CEILINGS, {"bpe_vocab_driver": DISTRIBUTED}):
+                s_res, t_dist = _timed(
+                    lambda: _rowset(lt.bpe_learn(spark, "/nonexistent"))
+                )
             out[str(n)] = {
                 "distinct_words": n_real,
                 "t_driver": t_driver,
@@ -178,7 +168,6 @@ def run_bpe(spark, sizes) -> dict:
             }
     finally:
         lt.load = saved_load
-        lt.BPE_VOCAB_DRIVER_CEILING = saved_ceil
     return out
 
 

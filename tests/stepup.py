@@ -95,69 +95,28 @@ STEPUP_KEYS = [
 ]
 
 # Keys whose registered callable dispatches on a size ceiling: verify
-# the BIG lane at the big dir too (the small lane is what the footer
-# probe picks at sf1 — the big lane is the 100 TB plan and needs its
-# own oracle row). Each override forces the ceiling via the hint param.
+# the scale lane at the big dir too (the small lane is what the footer
+# count picks at sf1 — the scale lane is the 100 TB plan and needs its
+# own oracle row). Each key maps to the lane whose ceiling is set to 0
+# for that run; for the graph keys that is the co-partitioned per-round
+# join.
 BIG_LANE_OVERRIDES = {
-    "spearman_corr": lambda fn: (
-        lambda spark, d: fn(spark, d, n_per_group_hint=10**18)
+    **dict.fromkeys(
+        (
+            "spearman_corr", "quantile_normalize", "rfm_segments",
+            "lorenz_deciles", "gini_concentration", "concurrency_histogram",
+            "drift_ks", "burstiness", "concurrency_peak", "iqr_fences",
+            "tail_cvar", "levene_test", "funnel_latency",
+        ),
+        "single_task_rows",
     ),
-    "quantile_normalize": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "rfm_segments": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "lorenz_deciles": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "gini_concentration": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "concurrency_histogram": lambda fn: (
-        lambda spark, d: fn(spark, d, n_per_key_hint=10**18)
-    ),
-    "drift_ks": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "burstiness": lambda fn: (
-        lambda spark, d: fn(spark, d, n_per_key_hint=10**18)
-    ),
-    "concurrency_peak": lambda fn: (
-        lambda spark, d: fn(spark, d, n_per_key_hint=10**18)
-    ),
-    "iqr_fences": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "tail_cvar": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "levene_test": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    "funnel_latency": lambda fn: (
-        lambda spark, d: fn(spark, d, n_rows_hint=10**18)
-    ),
-    # vocab_growth has a single (two-level) lane; the override forces
-    # the MULTI-chunk shape at fixture scale (default width covers the
-    # whole fixture in one chunk).
-    "vocab_growth": lambda fn: (
-        lambda spark, d: fn(spark, d, doc_chunk=7)
-    ),
-    # graph iterate-join dispatch: forcing the node hint past
-    # GRAPH_BCAST_NODE_CEILING flips every per-round join to the
-    # co-partitioned shuffle lane — the 100 TB physical plan.
-    "pagerank_nations": lambda fn: (
-        lambda spark, d: fn(spark, d, n_nodes_hint=10**18)
-    ),
-    "label_propagation": lambda fn: (
-        lambda spark, d: fn(spark, d, n_nodes_hint=10**18)
-    ),
-    "connected_components": lambda fn: (
-        lambda spark, d: fn(spark, d, n_nodes_hint=10**18)
-    ),
-    "shortest_path_weighted": lambda fn: (
-        lambda spark, d: fn(spark, d, n_nodes_hint=10**18)
+    "vocab_growth": "vocab_window",
+    **dict.fromkeys(
+        (
+            "pagerank_nations", "label_propagation", "connected_components",
+            "shortest_path_weighted",
+        ),
+        "graph_bcast_node",
     ),
 }
 
@@ -259,8 +218,11 @@ def time_key(fn, spark, sf_dir: str, trials: int = 2) -> float:
 
 
 def main() -> None:
+    from unittest.mock import patch
+
     import duckdb
 
+    from cpt_database_sync_spark.operators import lanes
     from cpt_database_sync_spark.plans.registry import all_specs
     from cpt_database_sync_spark.session import get_spark
     from cpt_database_sync_spark.sources.tables import ALL_TABLES
@@ -320,9 +282,9 @@ def main() -> None:
         if oracle_note:
             out[name]["oracle_note"] = oracle_note
         if name in BIG_LANE_OVERRIDES and oracle and not golden:
-            big_fn = BIG_LANE_OVERRIDES[name](spec.fn)
             t0 = time.perf_counter()
-            problems2, _ = run_query_pair(spark, con, big_fn, oracle, big)
+            with patch.dict(lanes.CEILINGS, {BIG_LANE_OVERRIDES[name]: 0}):
+                problems2, _ = run_query_pair(spark, con, spec.fn, oracle, big)
             out[name]["parity_big_lane"] = "pass" if not problems2 else "FAIL"
             out[name]["t_big_lane"] = round(time.perf_counter() - t0, 3)
             if problems2:

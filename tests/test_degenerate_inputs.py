@@ -412,10 +412,10 @@ def test_r11_keys_on_their_edge_shapes(spark, edge_shapes_sf_dir):
 
 
 def test_big_lanes_on_degenerate_fixtures(
-    spark, empty_sf_dir, one_row_sf_dir, payload_nulls_sf_dir
+    spark, monkeypatch, empty_sf_dir, one_row_sf_dir, payload_nulls_sf_dir
 ):
-    """Forced BIG lanes on the empty, 1-row and null-payload fixtures
-    (r13): the default-lane sweeps above never reach the scale lanes —
+    """Forced BIG lanes on the empty, 1-row and null-payload fixtures:
+    the default-lane sweeps above never reach the scale lanes —
     the footer probe sees tiny counts — yet at 100 TB an empty
     PARTITION of a huge table presents exactly this shape to the big
     plan, and NULL groups/measures are where rollup+equi-join lanes
@@ -424,6 +424,7 @@ def test_big_lanes_on_degenerate_fixtures(
     must run and agree with its oracle on all three shapes: no
     empty-chunk prefix assumptions, no 0-row broadcast literal typing,
     no n−1/0 in the closed forms, no NULL-key join drops."""
+    from cpt_database_sync_spark.operators import lanes
     from tests.stepup import BIG_LANE_OVERRIDES
 
     failures = []
@@ -434,15 +435,17 @@ def test_big_lanes_on_degenerate_fixtures(
                 f"CREATE VIEW {t} AS SELECT * FROM '{dirpath}/{t}.parquet'"
             )
         specs = all_specs()
-        for name, wrap in sorted(BIG_LANE_OVERRIDES.items()):
+        for name, lane in sorted(BIG_LANE_OVERRIDES.items()):
             spec = specs[name]
             if spec.oracle is None or _golden_keyed(spec):
                 continue
             try:
-                problems, _ = run_query_pair(
-                    spark, con, wrap(spec.fn), spec.oracle, dirpath,
-                    name=name,
-                )
+                with monkeypatch.context() as m:
+                    # -1, not 0: the empty fixture's footer count is 0
+                    m.setitem(lanes.CEILINGS, lane, -1)
+                    problems, _ = run_query_pair(
+                        spark, con, spec.fn, spec.oracle, dirpath, name=name
+                    )
                 if problems:
                     failures.append(
                         f"{name}@{os.path.basename(dirpath)}: {problems[0]}"

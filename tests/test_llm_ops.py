@@ -200,26 +200,6 @@ class TestDedupClusters:
         assert all(out[i] == 0 for i in range(11))
         assert out[100] == out[101] == 100
 
-    def test_cc_lane_twins(self, spark, sf_dir, monkeypatch):
-        """The r13 driver union-find lane and the distributed min-label
-        loop must produce identical labels on the real near-dup pair
-        graph (lane dispatch is DEDUP_CC_EDGE_CEILING; force the
-        distributed lane by zeroing the ceiling)."""
-        from cpt_database_sync_spark.operators import llm_dedup as m
-        from cpt_database_sync_spark.sources.tables import load, table_rowcount
-
-        pairs = m.near_dup_pairs(
-            load(spark, sf_dir, "documents"),
-            m.JACCARD_THRESHOLD,
-            table_rowcount(sf_dir, "documents"),
-        ).select("a_id", "b_id")
-        small = {(r["node"], r["component"])
-                 for r in m.connected_components(pairs).collect()}
-        monkeypatch.setattr(m, "DEDUP_CC_EDGE_CEILING", 0)
-        big = {(r["node"], r["component"])
-               for r in m.connected_components(pairs).collect()}
-        assert small == big and small, "CC lanes disagree"
-
 
 class TestKmeans:
     def test_partition_and_determinism(self, spark, sf_dir):

@@ -1046,26 +1046,25 @@ def test_ngram_novelty_hashed_exchange_plan_shape(spark, sf_dir):
     )
 
 
-def test_dedup_cluster_edge_source_banded_plan_shape(spark, sf_dir):
-    """The cluster-stage 100 TB edge source (VERDICT r10 next #1): above
-    DEDUP_PAIR_DOC_CEILING, near_dup_pairs must plan the banded-MinHash
+def test_dedup_cluster_edge_source_banded_plan_shape(spark, sf_dir, monkeypatch):
+    """The cluster-stage 100 TB edge source: above the "dedup_pair_doc"
+    ceiling, near_dup_pairs must plan the banded-MinHash
     candidate join (band_hash equality) with NO shingle self-join — no
     aggregate or join keyed on a shingle string column anywhere (the
     banded lane works entirely on int64-hashed shingle sets), and no
     cartesian/nested-loop form."""
     import re
 
+    from cpt_database_sync_spark.operators import lanes
     from cpt_database_sync_spark.operators.llm_dedup import (
-        DEDUP_PAIR_DOC_CEILING,
         JACCARD_THRESHOLD,
         near_dup_pairs,
     )
     from cpt_database_sync_spark.sources.tables import load
 
+    monkeypatch.setitem(lanes.CEILINGS, "dedup_pair_doc", 0)
     docs = load(spark, sf_dir, "documents")
-    plan = plan_string(
-        near_dup_pairs(docs, JACCARD_THRESHOLD, DEDUP_PAIR_DOC_CEILING + 1)
-    )
+    plan = plan_string(near_dup_pairs(docs, JACCARD_THRESHOLD, 1))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "band_hash" in plan, "candidates must come from LSH banding"
@@ -1080,25 +1079,20 @@ def test_dedup_cluster_edge_source_banded_plan_shape(spark, sf_dir):
     ), f"banded lane must never key on a shingle string: {key_sets}"
 
 
-def test_concurrency_peak_two_level_plan_shape(spark, sf_dir):
-    """The two-level sweep's physics (VERDICT r10 next #6): the
-    corpus-sized window pass must partition by (event_type, chunk) —
+def test_concurrency_peak_two_level_plan_shape(spark, sf_dir, monkeypatch):
+    """The two-level sweep's physics: the corpus-sized window pass
+    must partition by (event_type, chunk) —
     parallelism |type|×|chunks|, no single-task funnel for a dominant
     type — and the only window partitioned by event_type alone runs
     over the chunk AGGREGATES (post-aggregation, |chunks| rows/type).
     The chunk aggregation itself must be map-side combined."""
     import re
 
-    from cpt_database_sync_spark.operators.analytics import (
-        CONCURRENCY_WINDOW_ROW_CEILING,
-        concurrency_peak,
-    )
+    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators.analytics import concurrency_peak
 
-    plan = plan_string(
-        concurrency_peak(
-            spark, sf_dir, n_per_key_hint=CONCURRENCY_WINDOW_ROW_CEILING + 1
-        )
-    )
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    plan = plan_string(concurrency_peak(spark, sf_dir))
     assert re.search(
         r"windowspecdefinition\(event_type#\d+, c#\d+L", plan
     ), f"corpus window must partition by (event_type, chunk):\n{plan}"
@@ -1186,13 +1180,12 @@ def _graph_lane_plans(op, spark, sf_dir, monkeypatch, mode="formatted"):
     """``(driver lane, distributed lane)`` plans of one graph operator.
     The driver lane's result is a driver literal (``LocalTableScan``);
     the distributed loop reads the checkpointed edge relation
-    (``Scan ExistingRDD``), forced by a 0 edge ceiling and a fresh memo."""
-    import cpt_database_sync_spark.operators.graph as gr
+    (``Scan ExistingRDD``), forced by a 0 edge ceiling."""
+    from cpt_database_sync_spark.operators import lanes
 
     driver = plan_string(op(spark, sf_dir), mode)
     with monkeypatch.context() as m:
-        m.setattr(gr, "GRAPH_DRIVER_EDGE_CEILING", 0)
-        m.setattr(gr, "_FLOWS_ROWS_MEMO", [])
+        m.setitem(lanes.CEILINGS, "graph_driver_edge", 0)
         distributed = plan_string(op(spark, sf_dir), mode)
     assert "LocalTableScan" in driver, "driver-lane result is not a literal"
     assert "ExistingRDD" in distributed, (
@@ -1812,26 +1805,15 @@ def test_rollup_cube_ansi_empty_row_without_driver_probe(spark, sf_dir):
 
 
 def test_graph_copartitioned_hatch_bit_identical_and_shuffled(spark, sf_dir):
-    """VERDICT r9 next #6: the broadcast→co-partitioned flip for the
-    iterative graph ops' per-round join. Forcing the node hint above
-    GRAPH_BCAST_NODE_CEILING must (a) produce BIT-IDENTICAL results to
-    the broadcast lane for both PageRank and weighted shortest path, and
-    (b) actually take the shuffled form: the initial physical plan of
-    the iteration carries a hash-partitioned (non-broadcast) join on the
-    node key where the broadcast lane shows BroadcastHashJoin."""
-    from cpt_database_sync_spark.operators.graph import (
-        GRAPH_BCAST_NODE_CEILING,
-        pagerank_nations,
-        shortest_path_weighted,
-    )
+    """The broadcast→co-partitioned flip for the iterative graph ops'
+    per-round join must actually take the shuffled form above the
+    "graph_bcast_node" ceiling: the initial physical plan of the
+    iteration carries a hash-partitioned (non-broadcast) join on the
+    node key where the broadcast lane shows BroadcastHashJoin. That both
+    lanes return the same rows is checked in tests/test_lanes.py."""
+    from cpt_database_sync_spark.operators import lanes
 
-    huge = GRAPH_BCAST_NODE_CEILING + 1
-    for op in (pagerank_nations, shortest_path_weighted):
-        bc = sorted(map(tuple, op(spark, sf_dir).collect()))
-        sh_df = op(spark, sf_dir, n_nodes_hint=huge)
-        sh = sorted(map(tuple, sh_df.collect()))
-        assert bc == sh, f"{op.__name__}: shuffled lane diverged from broadcast"
-        assert len(bc) > 0
+    huge = lanes.CEILINGS["graph_bcast_node"] + 1
     # plan shape of ONE round's join (the per-round joins sit behind the
     # distance relation's checkpoint cuts, so the op's final plan cannot
     # show them): the shuffled lane must exchange the iterate relation on
@@ -2100,10 +2082,9 @@ def test_r11b_rank_stats_plan_physics(spark, sf_dir):
 
 
 def test_r11c_graph_ops_plan_physics_and_dispatch(spark, sf_dir):
-    """Physics + dispatch gates for the r11 graph batch (degree
-    assortativity, label propagation)."""
+    """Physics gates for the r11 graph batch (degree assortativity,
+    label propagation)."""
     from cpt_database_sync_spark.operators.graph import (
-        GRAPH_BCAST_NODE_CEILING,
         degree_assortativity,
         label_propagation,
     )
@@ -2116,19 +2097,9 @@ def test_r11c_graph_ops_plan_physics_and_dispatch(spark, sf_dir):
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
 
-    # LPA: broadcast lane must be bit-identical to the co-partitioned
-    # lane (the GRAPH_BCAST_NODE_CEILING dispatch doctrine), and both
-    # non-empty on the fixture
+    # LPA (its lane twins are in tests/test_lanes.py)
     bc = sorted(map(tuple, label_propagation(spark, sf_dir).collect()))
-    sh = sorted(
-        map(
-            tuple,
-            label_propagation(
-                spark, sf_dir, n_nodes_hint=GRAPH_BCAST_NODE_CEILING + 1
-            ).collect(),
-        )
-    )
-    assert bc == sh and len(bc) > 0
+    assert len(bc) > 0
     # synchronous LPA with min-tie-break must converge to ONE community
     # per connected component at most — communities never exceed nodes,
     # and every node appears exactly once
@@ -2616,7 +2587,7 @@ def test_r12_ops_plan_physics(spark, sf_dir):
     )
 
 
-def test_spearman_two_level_plan_shape(spark, sf_dir):
+def test_spearman_two_level_plan_shape(spark, sf_dir, monkeypatch):
     """Above the ceiling, spearman must never sort the fact inside a
     task: every window partitions by (flag, chunk) or by flag over the
     chunk AGGREGATES — no window ordered by a raw measure column with
@@ -2624,16 +2595,11 @@ def test_spearman_two_level_plan_shape(spark, sf_dir):
     relations come back via joins (no cartesian/nested-loop)."""
     import re
 
-    from cpt_database_sync_spark.operators.stats import (
-        SPEARMAN_WINDOW_ROW_CEILING,
-        spearman_corr,
-    )
+    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators.stats import spearman_corr
 
-    p = plan_string(
-        spearman_corr(
-            spark, sf_dir, n_per_group_hint=SPEARMAN_WINDOW_ROW_CEILING + 1
-        )
-    )
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    p = plan_string(spearman_corr(spark, sf_dir))
     assert not re.search(
         r"windowspecdefinition\(l_returnflag#\d+, (l_quantity|l_extendedprice)#\d+ ASC",
         p,
@@ -2647,23 +2613,24 @@ def test_spearman_two_level_plan_shape(spark, sf_dir):
 
 
 def test_size_dispatch_derives_from_footer(spark, sf_dir, monkeypatch):
-    """VERDICT r12 next #3: the REGISTERED callables must reach the big
-    lane with NO extra argument once the data outgrows the ceiling —
-    the hint is derived from parquet footer row counts, not supplied by
-    a knowing caller. Ceilings are patched below the fixture's footer
-    counts; every call here is hint-free."""
+    """The REGISTERED callables must reach the big lane with NO extra
+    argument once the data outgrows the ceiling — the size is the
+    parquet footer row count. Ceilings are patched just below the
+    fixture's footer counts."""
     import re
 
     from cpt_database_sync_spark.operators import analytics as an
     from cpt_database_sync_spark.operators import graph as gr
+    from cpt_database_sync_spark.operators import lanes
     from cpt_database_sync_spark.operators import stats as st
     from cpt_database_sync_spark.sources.tables import table_rowcount
 
     assert table_rowcount(sf_dir, "lineitem") > 1
     assert table_rowcount(sf_dir, "nation") > 1
+    for lane in ("single_task_rows", "graph_bcast_node", "vocab_window"):
+        monkeypatch.setitem(lanes.CEILINGS, lane, 1)
 
-    # spearman: hint-free call must plan the grouped two-level lane.
-    monkeypatch.setattr(st, "SPEARMAN_WINDOW_ROW_CEILING", 1)
+    # spearman: the grouped two-level lane.
     p = plan_string(st.spearman_corr(spark, sf_dir))
     assert re.search(r"windowspecdefinition\(l_returnflag#\d+, chunk#\d+L", p)
     assert not re.search(
@@ -2671,25 +2638,17 @@ def test_size_dispatch_derives_from_footer(spark, sf_dir, monkeypatch):
         p,
     )
 
-    # concurrency_peak: hint-free call must plan the chunked sweep.
-    monkeypatch.setattr(an, "CONCURRENCY_WINDOW_ROW_CEILING", 1)
+    # concurrency_peak: the chunked sweep.
     p = plan_string(an.concurrency_peak(spark, sf_dir))
     assert re.search(r"windowspecdefinition\(event_type#\d+, c#\d+L", p)
 
-    # graph iterate joins: hint-free call must flip off the broadcast
-    # (per-round ShuffledHashJoin against the pre-partitioned edges).
-    monkeypatch.setattr(gr, "GRAPH_BCAST_NODE_CEILING", 1)
+    # graph iterate joins: off the broadcast (per-round
+    # ShuffledHashJoin against the pre-partitioned edges).
     p = plan_string(gr.pagerank_nations(spark, sf_dir))
     assert "ShuffledHashJoin" in p
 
-    # explicit caller hint still wins over the derived count
-    p = plan_string(gr.pagerank_nations(spark, sf_dir, n_nodes_hint=10**9))
-    assert "ShuffledHashJoin" in p
-
-    # exact-percentile family (r13): hint-free call must leave the
-    # Percentile aggregate for the two-level rollup lane.
-    monkeypatch.setattr(an, "PCTL_SORT_ROW_CEILING", 1)
-    monkeypatch.setattr(st, "PCTL_SORT_ROW_CEILING", 1)
+    # exact-percentile family: the two-level rollup lane, not the
+    # Percentile aggregate.
     for fn in (an.iqr_fences, an.tail_cvar, st.levene_test):
         p = plan_string(fn(spark, sf_dir))
         assert "percentile(" not in p, fn.__name__
@@ -2702,35 +2661,29 @@ def test_size_dispatch_derives_from_footer(spark, sf_dir, monkeypatch):
     assert "percentile(" not in p
     assert re.search(r"windowspecdefinition\(_chunk#\d+L, lat_us#\d+", p)
 
-    # vocab_growth (r13): hint-free call above the doc ceiling must
-    # plan the chunked doc-position device, not the single-task sort.
+    # vocab_growth: the chunked doc-position device, not the
+    # single-task sort.
     from cpt_database_sync_spark.operators import llm_text as lt
 
-    monkeypatch.setattr(lt, "VOCAB_WINDOW_DOC_CEILING", 1)
     p = plan_string(lt.vocab_growth(spark, sf_dir))
     assert not re.search(r"windowspecdefinition\(doc_id#\d+L? ASC", p)
     assert re.search(r"windowspecdefinition\(_chunk#\d+L, doc_id#\d+", p)
 
 
-def test_quantile_normalize_two_level_plan_shape(spark, sf_dir):
+def test_quantile_normalize_two_level_plan_shape(spark, sf_dir, monkeypatch):
     """Above the ceiling, quantile_normalize must never sort the fact
-    inside a task (VERDICT r12 what's-wrong #1): every window
+    inside a task: every window
     partitions by (g, chunk) or by g over the chunk AGGREGATES — no
     window partitioned by the bare channel key ordered by the raw
     measure, no unpartitioned window — and the per-type n arrives as a
     broadcast, the rank relation via an equi-join."""
     import re
 
-    from cpt_database_sync_spark.operators.stats import (
-        QN_WINDOW_ROW_CEILING,
-        quantile_normalize,
-    )
+    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators.stats import quantile_normalize
 
-    p = plan_string(
-        quantile_normalize(
-            spark, sf_dir, n_rows_hint=QN_WINDOW_ROW_CEILING + 1
-        )
-    )
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    p = plan_string(quantile_normalize(spark, sf_dir))
     assert not re.search(
         r"windowspecdefinition\(\w+#\d+, value#\d+ ASC", p
     ), "fact must not be rank-sorted per channel in the two-level lane"
@@ -2743,7 +2696,7 @@ def test_quantile_normalize_two_level_plan_shape(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_dimension_rank_family_two_level_plan_shape(spark, sf_dir):
+def test_dimension_rank_family_two_level_plan_shape(spark, sf_dir, monkeypatch):
     """Above their ceilings, gini / lorenz / rfm must not sort the
     customer rollup inside one task per group: no NTILE anywhere, no
     window ordered by the raw metric without a chunk partition — the
@@ -2751,21 +2704,16 @@ def test_dimension_rank_family_two_level_plan_shape(spark, sf_dir):
     chunk-AGGREGATE prefix."""
     import re
 
-    from cpt_database_sync_spark.operators.analytics import (
-        RFM_RANK_ROW_CEILING,
-        rfm_segments,
-    )
+    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators.analytics import rfm_segments
     from cpt_database_sync_spark.operators.stats import (
-        CUSTOMER_RANK_ROW_CEILING,
         gini_concentration,
         lorenz_deciles,
     )
 
-    for fn, ceiling in (
-        (gini_concentration, CUSTOMER_RANK_ROW_CEILING),
-        (lorenz_deciles, CUSTOMER_RANK_ROW_CEILING),
-    ):
-        p = plan_string(fn(spark, sf_dir, n_rows_hint=ceiling + 1))
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    for fn in (gini_concentration, lorenz_deciles):
+        p = plan_string(fn(spark, sf_dir))
         assert "ntile" not in p.lower(), fn.__name__
         assert not re.search(
             r"windowspecdefinition\(c_nationkey#\d+, cents#\d+L ASC", p
@@ -2776,9 +2724,7 @@ def test_dimension_rank_family_two_level_plan_shape(spark, sf_dir):
         assert re.search(r"windowspecdefinition\(c_nationkey#\d+, _chunk#\d+L", p)
         assert "BroadcastHashJoin" in p and "CartesianProduct" not in p
 
-    p = plan_string(
-        rfm_segments(spark, sf_dir, n_rows_hint=RFM_RANK_ROW_CEILING + 1)
-    )
+    p = plan_string(rfm_segments(spark, sf_dir))
     assert "ntile" not in p.lower()
     # every ordered window is either chunk-partitioned (local ranks)
     # or the |chunks|-row aggregate prefix (_chunk as leading ORDER col)
@@ -2790,7 +2736,7 @@ def test_dimension_rank_family_two_level_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" in p and "CartesianProduct" not in p
 
 
-def test_event_sweep_family_two_level_plan_shape(spark, sf_dir):
+def test_event_sweep_family_two_level_plan_shape(spark, sf_dir, monkeypatch):
     """Above their ceilings, concurrency_histogram / drift_ks /
     burstiness must not sort a type's whole slice in one task: every
     ordered window partitions by (event_type, chunk) or runs over the
@@ -2799,18 +2745,20 @@ def test_event_sweep_family_two_level_plan_shape(spark, sf_dir):
     fact-sized relation ordered by raw time/value."""
     import re
 
+    from cpt_database_sync_spark.operators import lanes
     from cpt_database_sync_spark.operators.analytics import (
         burstiness,
         concurrency_histogram,
     )
     from cpt_database_sync_spark.operators.stats import drift_ks
 
-    for fn, kw, raw in (
-        (concurrency_histogram, "n_per_key_hint", r"t#\d+L"),
-        (burstiness, "n_per_key_hint", r"(ts|t)#\d+L?"),
-        (drift_ks, "n_rows_hint", r"value#\d+"),
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    for fn, raw in (
+        (concurrency_histogram, r"t#\d+L"),
+        (burstiness, r"(ts|t)#\d+L?"),
+        (drift_ks, r"value#\d+"),
     ):
-        p = plan_string(fn(spark, sf_dir, **{kw: 10**18}))
+        p = plan_string(fn(spark, sf_dir))
         assert not re.search(
             rf"windowspecdefinition\(event_type#\d+, {raw} ASC", p
         ), f"{fn.__name__}: per-type fact-slice sort must not plan"
@@ -2825,27 +2773,28 @@ def test_event_sweep_family_two_level_plan_shape(spark, sf_dir):
         assert "CartesianProduct" not in p
 
 
-def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir):
-    """Above PCTL_SORT_ROW_CEILING, iqr_fences and tail_cvar must not
+def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir, monkeypatch):
+    """Above the "single_task_rows" ceiling, iqr_fences and tail_cvar must not
     plan Spark's Percentile aggregate (its per-group value buffer IS
     the scale hazard) nor sort the fact per group: the only ordered
     windows are the chunk-partitioned locals and the group-partitioned
     chunk-aggregate prefix, the quantile relation arrives broadcast."""
     import re
 
+    from cpt_database_sync_spark.operators import lanes
     from cpt_database_sync_spark.operators.analytics import (
         iqr_fences,
         tail_cvar,
     )
     from cpt_database_sync_spark.operators.stats import levene_test
 
-    # r14: winsorize_approx's exact p05/p95 joined the family. Its
-    # bounds relation hides behind a lazy localCheckpoint in the served
-    # plan, so the gate inspects the PRE-checkpoint helper directly.
+    # winsorize_approx's bounds relation hides behind a lazy
+    # localCheckpoint in the served plan, so the gate inspects the
+    # PRE-checkpoint helper directly.
     from cpt_database_sync_spark.operators.stats import _winsor_bounds
     from cpt_database_sync_spark.sources.tables import load as _load
 
-    def _winsor_big(spark_, sf_dir_, n_rows_hint):
+    def _winsor_big(spark_, sf_dir_):
         from pyspark.sql import functions as F
 
         ev = (
@@ -2853,7 +2802,9 @@ def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir):
             .filter(F.col("event_type").isNotNull())
             .select("event_type", "value")
         )
-        return _winsor_bounds(ev, n_rows_hint)
+        return _winsor_bounds(ev, 1)
+
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
 
     for fn, grp, val in (
         (iqr_fences, r"event_type#\d+", r"value#\d+"),
@@ -2861,7 +2812,7 @@ def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir):
         (levene_test, r"l_returnflag#\d+", r"(q|l_quantity)#\d+"),
         (_winsor_big, r"event_type#\d+", r"value#\d+"),
     ):
-        p = plan_string(fn(spark, sf_dir, n_rows_hint=10**18))
+        p = plan_string(fn(spark, sf_dir))
         assert "percentile(" not in p, (
             f"{fn.__name__}: exact Percentile aggregate must not plan "
             "in the big lane"
@@ -2885,7 +2836,7 @@ def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir):
     # the audited allowlist class), never the raw latency relation.
     from cpt_database_sync_spark.operators.analytics import funnel_latency
 
-    p = plan_string(funnel_latency(spark, sf_dir, n_rows_hint=10**18))
+    p = plan_string(funnel_latency(spark, sf_dir))
     assert "percentile(" not in p
     assert re.search(r"windowspecdefinition\(_chunk#\d+L, lat_us#\d+", p)
     assert not re.search(r"windowspecdefinition\(lat_us#\d+ ASC", p), (
@@ -2895,8 +2846,8 @@ def test_exact_percentile_family_two_level_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_vocab_growth_two_level_plan_shape(spark, sf_dir):
-    """vocab_growth (r13 rework): the doc position must come from
+def test_vocab_growth_two_level_plan_shape(spark, sf_dir, monkeypatch):
+    """vocab_growth's scale lane: the doc position must come from
     chunk-partitioned local row_numbers — NO window ordered by the
     bare doc_id (the corpus-sized single-task sort) and NO global
     unbounded COUNT() OVER () (n_docs rides the chunk-aggregate
@@ -2904,9 +2855,11 @@ def test_vocab_growth_two_level_plan_shape(spark, sf_dir):
     |chunks| prefix and the 10-row decile grid cumsum."""
     import re
 
-    from cpt_database_sync_spark.operators.llm_text import vocab_growth
+    from cpt_database_sync_spark.operators import lanes, llm_text
 
-    p = plan_string(vocab_growth(spark, sf_dir, doc_chunk=7))
+    monkeypatch.setitem(lanes.CEILINGS, "vocab_window", 0)
+    monkeypatch.setattr(llm_text, "VOCAB_DOC_CHUNK", 7)
+    p = plan_string(llm_text.vocab_growth(spark, sf_dir))
     assert not re.search(r"windowspecdefinition\(doc_id#\d+L? ASC", p), (
         "corpus-sized single-task doc_id sort must not plan"
     )
@@ -2918,55 +2871,23 @@ def test_vocab_growth_two_level_plan_shape(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_graph_driver_lane_twin_and_dispatch(spark, sf_dir, monkeypatch):
-    """r13 graph driver lane: at nation scale the loop-shaped graph ops
+def test_graph_driver_lane_twin_and_dispatch(spark, sf_dir):
+    """Graph driver lane: at nation scale the loop-shaped graph ops
     (pagerank, CC, BFS, shortest path, LPA) solve the ITERATION on the
-    driver over the collected aggregated edge relation. The lanes must
-    be bit-identical: forcing GRAPH_DRIVER_EDGE_CEILING to 0 (probe
-    over-runs -> distributed loop) must reproduce the driver lane's
-    rows exactly for all five ops, and the driver lane's final plan
-    must contain NO distributed iteration machinery (a scan of the
-    local node relation joined to the broadcast nation dim only)."""
+    driver over the collected aggregated edge relation, so the driver
+    lane's final plan must contain NO distributed iteration machinery
+    (a scan of the local node relation joined to the broadcast nation
+    dim only). That both lanes return the same rows is checked in
+    tests/test_lanes.py."""
     import cpt_database_sync_spark.operators.graph as gr
 
-    ops = [
+    for op in (
         gr.pagerank_nations,
         gr.connected_components,
         gr.bfs_hops,
         gr.shortest_path_weighted,
         gr.label_propagation,
-    ]
-    driver_rows = {}
-    for op in ops:
-        df = op(spark, sf_dir)
-        driver_rows[op.__name__] = sorted(map(tuple, df.collect()))
-        assert len(driver_rows[op.__name__]) > 0
-        # the driver lane's plan is a local-relation scan + one
-        # broadcast dim join: no iteration joins, no fact scan
-        p = plan_string(df, "simple")
-        assert "Scan parquet" not in p or "nation" in p
+    ):
+        p = plan_string(op(spark, sf_dir), "simple")
+        assert "Scan parquet" not in p or "nation" in p, op.__name__
         assert "SortMergeJoin" not in p and "CartesianProduct" not in p
-
-    # force the distributed loop lane (fresh memo so the patched
-    # ceiling is actually consulted) and require bit-identity
-    monkeypatch.setattr(gr, "GRAPH_DRIVER_EDGE_CEILING", 0)
-    monkeypatch.setattr(gr, "_FLOWS_ROWS_MEMO", [])
-    for op in ops:
-        dist = sorted(map(tuple, op(spark, sf_dir).collect()))
-        assert dist == driver_rows[op.__name__], (
-            f"{op.__name__}: distributed lane diverged from driver lane"
-        )
-
-
-def test_bpe_learn_driver_lane_twin(spark, sf_dir, monkeypatch):
-    """r13 BPE driver lane: below BPE_VOCAB_DRIVER_CEILING the merge
-    loop solves on the driver over the collected (w, freq) vocabulary.
-    Forcing the ceiling to 0 (probe over-runs -> distributed loop) must
-    reproduce the driver lane's segmentation bit-identically."""
-    import cpt_database_sync_spark.operators.llm_text as lt
-
-    drv = sorted(map(tuple, lt.bpe_learn(spark, sf_dir).collect()))
-    assert len(drv) > 0
-    monkeypatch.setattr(lt, "BPE_VOCAB_DRIVER_CEILING", 0)
-    dist = sorted(map(tuple, lt.bpe_learn(spark, sf_dir).collect()))
-    assert dist == drv, "distributed BPE lane diverged from driver lane"

@@ -2544,60 +2544,6 @@ def test_ngram_novelty_hashed_lane_matches_string_lane(spark, sf_dir):
     ), "fixture must exercise at least one repeated (non-novel) shingle"
 
 
-def test_dedup_cluster_stage_banded_lane_matches_exact(spark, sf_dir):
-    """Differential gate for the cluster-stage edge-source dispatch
-    (VERDICT r10 next #1): above DEDUP_PAIR_DOC_CEILING the CC edges
-    come from banded-MinHash candidates + exact-Jaccard verify instead
-    of the quadratic shingle self-join. Clusters AND keepers must be
-    identical across lanes — banding recall at J >= threshold is 1.0 on
-    this corpus (probed; any fixture regeneration that breaks recall
-    surfaces here, not in production)."""
-    from cpt_database_sync_spark.operators.llm_dedup import (
-        DEDUP_PAIR_DOC_CEILING,
-        dedup_canonical,
-        dedup_clusters,
-    )
-
-    big = DEDUP_PAIR_DOC_CEILING + 1
-    cl_exact = sorted(map(tuple, dedup_clusters(spark, sf_dir).collect()))
-    cl_banded = sorted(
-        map(tuple, dedup_clusters(spark, sf_dir, n_docs_hint=big).collect())
-    )
-    assert cl_exact == cl_banded
-    assert cl_exact, "fixture must exercise at least one duplicate cluster"
-    ca_exact = sorted(map(tuple, dedup_canonical(spark, sf_dir).collect()))
-    ca_banded = sorted(
-        map(tuple, dedup_canonical(spark, sf_dir, n_docs_hint=big).collect())
-    )
-    assert ca_exact == ca_banded
-
-
-def test_concurrency_peak_two_level_matches_window_form(spark, sf_dir):
-    """Differential gate for the hot-key scale lane (VERDICT r10 next
-    #6): above CONCURRENCY_WINDOW_ROW_CEILING the sweep runs two-level
-    (chunk-local delta partials → prefix over chunk aggregates) instead
-    of one per-type ordered window over all endpoints. Peaks, first-peak
-    times and interval counts must be bit-identical across lanes."""
-    from cpt_database_sync_spark.operators.analytics import (
-        CONCURRENCY_WINDOW_ROW_CEILING,
-        concurrency_peak,
-    )
-
-    win = sorted(map(tuple, concurrency_peak(spark, sf_dir).collect()))
-    two = sorted(
-        map(
-            tuple,
-            concurrency_peak(
-                spark, sf_dir, n_per_key_hint=CONCURRENCY_WINDOW_ROW_CEILING + 1
-            ).collect(),
-        )
-    )
-    assert win == two
-    assert win and any(r[1] > 1 for r in win), (
-        "fixture must exercise a stacked (peak > 1) channel"
-    )
-
-
 def test_catalog_persist_round_trip(spark, sf_dir):
     """catalog_persist must (a) produce exactly the literal expected
     listing, (b) be idempotent — mode('overwrite') makes a second
@@ -3740,53 +3686,7 @@ def test_rank_avg2_two_level_property(spark):
     check()
 
 
-def test_spearman_two_level_lane_identical(spark, sf_dir):
-    """Scale-dispatch twin for spearman_corr: the rollup+join lane
-    (above SPEARMAN_WINDOW_ROW_CEILING) must be bit-identical to the
-    default window lane — tie-averaged ranks are a pure function of
-    the per-(flag, value) rollup, so the lanes differ only in physics."""
-    from cpt_database_sync_spark.operators.stats import (
-        SPEARMAN_WINDOW_ROW_CEILING,
-        spearman_corr,
-    )
-
-    a = sorted(map(tuple, spearman_corr(spark, sf_dir).collect()))
-    b = sorted(
-        map(
-            tuple,
-            spearman_corr(
-                spark, sf_dir,
-                n_per_group_hint=SPEARMAN_WINDOW_ROW_CEILING + 1,
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) > 0
-
-
-def test_quantile_normalize_two_level_lane_identical(spark, sf_dir):
-    """Scale-dispatch twin for quantile_normalize (VERDICT r12 next #1):
-    the rollup+join lane above QN_WINDOW_ROW_CEILING must be
-    bit-identical to the window lane — percent_rank's RANK is the peer
-    group's MIN rank, a pure function of the per-(type, value) rollup,
-    and (min_rank−1)/(n−1) is the same exact-long IEEE division."""
-    from cpt_database_sync_spark.operators.stats import (
-        QN_WINDOW_ROW_CEILING,
-        quantile_normalize,
-    )
-
-    a = sorted(map(tuple, quantile_normalize(spark, sf_dir).collect()))
-    b = sorted(
-        map(
-            tuple,
-            quantile_normalize(
-                spark, sf_dir, n_rows_hint=QN_WINDOW_ROW_CEILING + 1
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) > 0
-
-
-def test_quantile_normalize_null_channel_and_singleton(spark):
+def test_quantile_normalize_null_channel_and_singleton(spark, monkeypatch):
     """The big lane's (is_null, value) struct key must keep NULL
     event_type as a REAL group (equi-joins drop NULL keys — the exact
     hazard), and a 1-row group must produce percent_rank's defined 0.0
@@ -3796,10 +3696,8 @@ def test_quantile_normalize_null_channel_and_singleton(spark):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from cpt_database_sync_spark.operators.stats import (
-        QN_WINDOW_ROW_CEILING,
-        quantile_normalize,
-    )
+    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators.stats import quantile_normalize
     from cpt_database_sync_spark.sources.sync import scratch_dir
 
     out = os.path.join(scratch_dir(), "sf_qn_nullgroup")
@@ -3815,12 +3713,12 @@ def test_quantile_normalize_null_channel_and_singleton(spark):
     )
     pq.write_table(tbl, os.path.join(out, "events.parquet"))
 
-    def rows(hint):
-        return sorted(
-            map(tuple, quantile_normalize(spark, out, n_rows_hint=hint).collect())
-        )
+    def rows():
+        return sorted(map(tuple, quantile_normalize(spark, out).collect()))
 
-    small, big = rows(1), rows(QN_WINDOW_ROW_CEILING + 1)
+    small = rows()
+    monkeypatch.setitem(lanes.CEILINGS, "single_task_rows", 0)
+    big = rows()
     assert small == big
     got = {r[0]: (r[1], r[3]) for r in big}
     # group a: values 1,2,2 → ranks 1,2,2 → qn 0, .5, .5
@@ -3925,34 +3823,6 @@ def test_curriculum_stages_matches_ntile_twin(spark, sf_dir):
     assert a == b and len(a) == 3
 
 
-def test_dimension_rank_family_two_level_lanes_identical(spark, sf_dir):
-    """Scale-dispatch twins for the dimension-rank family (VERDICT r12
-    next #6 — implemented, not documented): gini / lorenz / rfm above
-    their ceilings must be bit-identical to the window lanes — ranks
-    and closed-form NTILE are pure functions of the total order the
-    chunk device preserves."""
-    from cpt_database_sync_spark.operators.analytics import (
-        RFM_RANK_ROW_CEILING,
-        rfm_segments,
-    )
-    from cpt_database_sync_spark.operators.stats import (
-        CUSTOMER_RANK_ROW_CEILING,
-        gini_concentration,
-        lorenz_deciles,
-    )
-
-    for fn, ceiling in (
-        (gini_concentration, CUSTOMER_RANK_ROW_CEILING),
-        (lorenz_deciles, CUSTOMER_RANK_ROW_CEILING),
-        (rfm_segments, RFM_RANK_ROW_CEILING),
-    ):
-        a = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        b = sorted(
-            map(tuple, fn(spark, sf_dir, n_rows_hint=ceiling + 1).collect())
-        )
-        assert a == b and len(a) > 0, fn.__name__
-
-
 def test_stream_kl_invariant_under_batch_splits(spark, sf_dir):
     """stream_kl_divergence accumulates pure algebraic cohort counts,
     so a multi-batch split of the event feed must finalize BIT-EQUAL
@@ -4015,79 +3885,6 @@ def test_stream_kl_invariant_under_batch_splits(spark, sf_dir):
         f"split stream diverged from batch: only-stream={multi - batch} "
         f"only-batch={batch - multi}"
     )
-
-
-def test_event_sweep_family_two_level_lanes_identical(spark, sf_dir):
-    """Scale-dispatch twins for the r13 event-sweep closures:
-    concurrency_histogram (chunked depth histogram + boundary gaps),
-    drift_ks (chunked cumulative CDF counts) and burstiness
-    (chunked-lag gap moments) above their ceilings must be
-    bit-identical to the single-window lanes — depths, cumulative
-    counts and moments are pure functions of the total orders the
-    chunk devices preserve."""
-    from cpt_database_sync_spark.operators.analytics import (
-        burstiness,
-        concurrency_histogram,
-    )
-    from cpt_database_sync_spark.operators.stats import drift_ks
-
-    for fn, kw in (
-        (concurrency_histogram, "n_per_key_hint"),
-        (burstiness, "n_per_key_hint"),
-        (drift_ks, "n_rows_hint"),
-    ):
-        a = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        b = sorted(map(tuple, fn(spark, sf_dir, **{kw: 10**18}).collect()))
-        assert a == b and len(a) > 0, fn.__name__
-
-
-def test_vocab_growth_chunked_position_twin(spark, sf_dir):
-    """vocab_growth's two-level doc-position dispatch (r13 — above
-    VOCAB_WINDOW_DOC_CEILING the corpus-sized single-task ROW_NUMBER
-    and the global COUNT() OVER () funnel leave the plan): the forced
-    big lane with a tiny chunk width (multi-chunk path at fixture
-    scale) must be bit-identical to the default single-window small
-    lane."""
-    from cpt_database_sync_spark.operators.llm_text import vocab_growth
-
-    a = sorted(map(tuple, vocab_growth(spark, sf_dir).collect()))
-    b = sorted(
-        map(tuple, vocab_growth(spark, sf_dir, doc_chunk=7).collect())
-    )
-    assert a == b and len(a) == 10
-
-
-def test_exact_percentile_family_two_level_lanes_identical(spark, sf_dir):
-    """Scale-dispatch twins for the exact-percentile family (VERDICT
-    r12 missing #3 — the last documented-not-implemented swap pair):
-    iqr_fences and tail_cvar above PCTL_SORT_ROW_CEILING must be
-    bit-identical to Spark's built-in exact Percentile lane —
-    group_quantiles_cont replicates PercentileBase.getPercentile's
-    bracketing and interpolation arithmetic verbatim (including both
-    short-circuits: integral position, and equal bracketing values)."""
-    from cpt_database_sync_spark.operators.analytics import (
-        iqr_fences,
-        tail_cvar,
-    )
-    from cpt_database_sync_spark.operators.stats import (
-        levene_test,
-        winsorize_approx,
-    )
-
-    from cpt_database_sync_spark.operators.analytics import funnel_latency
-
-    for fn in (
-        iqr_fences,
-        tail_cvar,
-        levene_test,
-        funnel_latency,
-        winsorize_approx,  # r14: p05/p95 through the same device
-    ):
-        a = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        b = sorted(
-            map(tuple, fn(spark, sf_dir, n_rows_hint=10**18).collect())
-        )
-        assert a == b and len(a) > 0, fn.__name__
 
 
 def test_group_quantiles_cont_degenerates(spark):
@@ -4407,3 +4204,30 @@ def test_package_builds_frames_only_through_local_frame():
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_dir):
+    """get_spark puts the package's parent directory on the Python
+    workers' path, so a pandas-UDF key (``stream_holt``'s
+    ``applyInPandasWithState``) runs from a directory outside the repo,
+    with no PYTHONPATH set."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from cpt_database_sync_spark.plans.registry import all_queries\n"
+        "from cpt_database_sync_spark.session import get_spark\n"
+        "spark = get_spark(shuffle_partitions=2)\n"
+        f"rows = all_queries()['stream_holt'](spark, {sf_dir!r}).collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="2g")
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert int(run.stdout.split("ROWS")[-1]) > 0
