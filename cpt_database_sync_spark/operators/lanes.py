@@ -81,6 +81,6 @@ def collect_within(lane: str, df: DataFrame):
     """``df``'s rows when it holds at most ``lane``'s ceiling of them,
     else None. One bounded job decides the lane and, below the ceiling,
     already holds the whole relation."""
-    ceiling = CEILINGS[lane]
-    rows = df.limit(min(ceiling, _LIMIT_MAX) + 1).collect()
-    return rows if len(rows) <= ceiling else None
+    bound = min(CEILINGS[lane], _LIMIT_MAX)
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None

@@ -222,7 +222,7 @@ def main() -> None:
 
     import duckdb
 
-    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators import lanes, llm_text
     from cpt_database_sync_spark.plans.registry import all_specs
     from cpt_database_sync_spark.session import get_spark
     from cpt_database_sync_spark.sources.tables import ALL_TABLES
@@ -283,7 +283,9 @@ def main() -> None:
             out[name]["oracle_note"] = oracle_note
         if name in BIG_LANE_OVERRIDES and oracle and not golden:
             t0 = time.perf_counter()
-            with patch.dict(lanes.CEILINGS, {BIG_LANE_OVERRIDES[name]: 0}):
+            # VOCAB_DOC_CHUNK=7: several position chunks at any scale
+            with patch.dict(lanes.CEILINGS, {BIG_LANE_OVERRIDES[name]: 0}), \
+                    patch.object(llm_text, "VOCAB_DOC_CHUNK", 7):
                 problems2, _ = run_query_pair(spark, con, spec.fn, oracle, big)
             out[name]["parity_big_lane"] = "pass" if not problems2 else "FAIL"
             out[name]["t_big_lane"] = round(time.perf_counter() - t0, 3)

@@ -424,7 +424,7 @@ def test_big_lanes_on_degenerate_fixtures(
     must run and agree with its oracle on all three shapes: no
     empty-chunk prefix assumptions, no 0-row broadcast literal typing,
     no n−1/0 in the closed forms, no NULL-key join drops."""
-    from cpt_database_sync_spark.operators import lanes
+    from cpt_database_sync_spark.operators import lanes, llm_text
     from tests.stepup import BIG_LANE_OVERRIDES
 
     failures = []
@@ -443,6 +443,8 @@ def test_big_lanes_on_degenerate_fixtures(
                 with monkeypatch.context() as m:
                     # -1, not 0: the empty fixture's footer count is 0
                     m.setitem(lanes.CEILINGS, lane, -1)
+                    # several position chunks even on these fixtures
+                    m.setattr(llm_text, "VOCAB_DOC_CHUNK", 7)
                     problems, _ = run_query_pair(
                         spark, con, spec.fn, spec.oracle, dirpath, name=name
                     )

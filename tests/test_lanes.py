@@ -44,6 +44,15 @@ LANE_TWINS = [
     ("centroid_literal", "kmeans_spherical"),
 ]
 
+# Fixture guards for twins that are trivial on a thinner fixture:
+# concurrency_peak must stack a channel (peak > 1) for the two-level
+# sweep to differ from a plain count, vocab_growth must report its
+# ten curve points.
+FIXTURE_GUARDS = {
+    "concurrency_peak": lambda rows: any(r[1] > 1 for r in rows),
+    "vocab_growth": lambda rows: len(rows) == 10,
+}
+
 
 def _rows(df) -> list[str]:
     return sorted(repr(tuple(r)) for r in df.collect())
@@ -56,9 +65,11 @@ def test_lane_twins_collect_identically(spark, sf_dir, monkeypatch, lane, key):
     fn = all_queries()[key]
     # vocab_growth's scale lane: several position chunks at fixture scale
     monkeypatch.setattr(llm_text, "VOCAB_DOC_CHUNK", 7)
-    small = _rows(fn(spark, sf_dir))
+    rows = fn(spark, sf_dir).collect()
+    small = sorted(repr(tuple(r)) for r in rows)
     monkeypatch.setitem(lanes.CEILINGS, lane, 0)
     assert small, f"{key}: the fixture must give the twin rows to compare"
+    assert FIXTURE_GUARDS.get(key, bool)(rows), f"{key}: fixture guard"
     assert _rows(fn(spark, sf_dir)) == small, f"{key}: {lane} lanes differ"
 
 
@@ -81,6 +92,9 @@ def test_collect_within_bounds_the_probe(spark, monkeypatch):
     assert len(lanes.collect_within("bpe_vocab_driver", df)) == 3
     monkeypatch.setitem(lanes.CEILINGS, "bpe_vocab_driver", 2)
     assert lanes.collect_within("bpe_vocab_driver", df) is None
-    # above Dataset.limit's int32 range the probe still runs
+    # above Dataset.limit's int32 range the probe still runs, and a
+    # relation longer than the clamped probe is never taken as whole
     monkeypatch.setitem(lanes.CEILINGS, "bpe_vocab_driver", 10**18)
     assert len(lanes.collect_within("bpe_vocab_driver", df)) == 3
+    monkeypatch.setattr(lanes, "_LIMIT_MAX", 2)
+    assert lanes.collect_within("bpe_vocab_driver", df) is None
