@@ -10,6 +10,7 @@ and compares it against the matching ``oracle_sql()[name]`` via DuckDB.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -22,6 +23,7 @@ from cpt_database_sync_spark.plans.registry import (  # noqa: E402
     all_oracles,
     all_queries,
 )
+from cpt_database_sync_spark.session import share_package_with_workers  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,12 +32,26 @@ def entry(spark: SparkSession) -> DataFrame:
     agg → sort). Driver checks rows>0 and a stable schema."""
     from cpt_database_sync_spark.operators.relational import agg_hash
 
+    share_package_with_workers(spark)
     return agg_hash(spark, "/root/testdata/sf0.001")
+
+
+def _on_worker_path(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` that first gives the session's Python workers the package:
+    the caller's session need not come from ``get_spark`` nor start in
+    the repository root."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args, **kwargs) -> DataFrame:
+        share_package_with_workers(spark)
+        return fn(spark, *args, **kwargs)
+
+    return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return all_queries()
+    return {name: _on_worker_path(fn) for name, fn in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -28,6 +28,22 @@ from pyspark.sql.types import StructType
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def share_package_with_workers(spark: SparkSession) -> None:
+    """Put the package's parent directory on the Python workers' path.
+
+    PySpark hands ``SparkContext.environment`` to every Python function it
+    plans, and the worker merges its ``PYTHONPATH`` into its own, so this
+    holds for every UDF planned afterwards, in any session on this
+    context. A ``spark.executorEnv.PYTHONPATH`` setting does the same only
+    for a context it starts: it is ignored when ``getOrCreate`` returns a
+    running one, and a session not built by ``get_spark`` never sets it.
+    """
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([*parts, _PACKAGE_PARENT])
+
+
 def _local_scratch() -> str:
     """RAM-backed scratch for shuffle/spill when available (local mode);
     honors SPARK_LOCAL_DIRS-style override via SPARK_GRAFT_LOCAL_DIR."""
@@ -101,14 +117,13 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
-        # PySpark merges this into each Python worker's PYTHONPATH.
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    share_package_with_workers(spark)
     return spark
 
 

@@ -167,6 +167,34 @@ def test_null_strings_into_varchar_columns(spark, derby_url):
     back2 = jdbc_reader(spark, derby_url, "null_vc_direct", props=DERBY_PROPS)
     assert back2.count() == 1
 
+    # column names are quoted, not spliced, into the NULL predicate
+    odd = spark.createDataFrame([(1, None), (2, "b")], "id int, `a ``b` string")
+    jdbc_sync_table(
+        spark, odd, derby_url, "null_vc_odd",
+        varchar_lengths={"a `b": 10}, flavor="ansi",
+    )
+    back3 = jdbc_reader(spark, derby_url, "null_vc_odd", props=DERBY_PROPS)
+    assert sorted(tuple(r) for r in back3.collect()) == [(1, None), (2, "b")]
+    assert _type_name(spark, derby_url, "NULL_VC_ODD", "A `B") == "VARCHAR"
+
+    # empty batches, with and without partitions, create the table and
+    # return: the write's NULL count reads 0, so no shadow is made
+    empties = {
+        "null_vc_no_rows": df.limit(0),
+        "null_vc_no_parts": spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), "id int, name string, note string"
+        ),
+    }
+    assert empties["null_vc_no_parts"].rdd.getNumPartitions() == 0
+    for table, empty in empties.items():
+        jdbc_sync_table(
+            spark, empty, derby_url, table,
+            varchar_lengths={"name": 40, "note": 60}, flavor="ansi",
+        )
+        assert jdbc_reader(spark, derby_url, table, props=DERBY_PROPS).count() == 0
+        assert _type_name(spark, derby_url, table.upper(), "NAME") == "VARCHAR"
+        assert _type_name(spark, derby_url, f"{table.upper()}_VCLOAD", "NAME") is None
+
 
 def test_timestamp_ntz_round_trip(spark, derby_url):
     """Zone-less timestamps (TIMESTAMP_NTZ, as parquet-sourced tables and
@@ -198,10 +226,9 @@ def _jobs_in(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_sync_null_free_batch_runs_two_jobs(spark, sf_dir, derby_url):
-    """A null-free batch costs two Spark jobs: the NULL-string probe and
-    the write. The probe is one shuffle-free job that stops at the first
-    NULL (a limit-then-count probe plans a shuffle and runs two).
+def test_sync_null_free_batch_runs_one_job(spark, sf_dir, derby_url):
+    """A null-free batch costs one Spark job: the write, which counts the
+    NULL-string rows as it goes; no probe job runs before it.
     NATION is one parquet file: a single partition, 25 NULL-free rows."""
     df = load(spark, sf_dir, "nation")
     assert df.rdd.getNumPartitions() == 1
@@ -209,7 +236,7 @@ def test_sync_null_free_batch_runs_two_jobs(spark, sf_dir, derby_url):
         spark, df, derby_url, "probe_jobs",
         varchar_lengths={"n_name": 25}, flavor="ansi",
     ))
-    assert n == 2, f"jdbc_sync_table ran {n} jobs; want the probe and the write"
+    assert n == 1, f"jdbc_sync_table ran {n} jobs; want the write alone"
     back = jdbc_reader(spark, derby_url, "probe_jobs")
     assert sorted(tuple(r) for r in back.collect()) == sorted(
         tuple(r) for r in df.collect()
@@ -217,18 +244,22 @@ def test_sync_null_free_batch_runs_two_jobs(spark, sf_dir, derby_url):
 
 
 def test_sync_finds_null_in_last_partition(spark, derby_url):
-    """The probe sees a NULL that sits only in the last of 4 partitions:
-    the batch takes the shadow detour, every value lands intact and the
-    column stays VARCHAR."""
+    """The write counts a NULL that sits only in the last of 4 partitions:
+    a second job sends that row through the shadow detour, every value
+    lands intact, the column stays VARCHAR and the shadow is dropped."""
     from pyspark.sql import functions as F
 
     df = spark.range(0, 400, numPartitions=4).select(
         "id", F.when(F.col("id") != 399, F.col("id").cast("string")).alias("name")
     )
-    jdbc_sync_table(
+    n = _jobs_in(spark, "sync-null-last", lambda: jdbc_sync_table(
         spark, df, derby_url, "null_last",
         varchar_lengths={"name": 20}, flavor="ansi",
-    )
-    back = {r["ID"]: r["NAME"] for r in jdbc_reader(spark, derby_url, "null_last").collect()}
+    ))
+    assert n == 2, f"jdbc_sync_table ran {n} jobs; want the write and the shadow load"
+    rows = jdbc_reader(spark, derby_url, "null_last").collect()
+    assert len(rows) == 400  # each row lands through exactly one load
+    back = {r["ID"]: r["NAME"] for r in rows}
     assert back == {i: (None if i == 399 else str(i)) for i in range(400)}
     assert _type_name(spark, derby_url, "NULL_LAST", "NAME") == "VARCHAR"
+    assert _type_name(spark, derby_url, "NULL_LAST_VCLOAD", "NAME") is None

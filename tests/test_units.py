@@ -4206,21 +4206,45 @@ def test_package_builds_frames_only_through_local_frame():
     assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
 
 
-def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_dir):
-    """get_spark puts the package's parent directory on the Python
-    workers' path, so a pandas-UDF key (``stream_holt``'s
-    ``applyInPandasWithState``) runs from a directory outside the repo,
-    with no PYTHONPATH set."""
+# How each case's subprocess builds its session and finds the key.
+_WORKER_PATH_SESSIONS = {
+    "get_spark": (
+        "from cpt_database_sync_spark.session import get_spark\n"
+        "spark = get_spark(shuffle_partitions=2)\n"
+        "from cpt_database_sync_spark.plans.registry import all_queries as queries\n"
+    ),
+    # getOrCreate on a running context ignores spark.executorEnv.*
+    "get_spark_on_running_context": (
+        "from pyspark.sql import SparkSession\n"
+        "SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "from cpt_database_sync_spark.session import get_spark\n"
+        "spark = get_spark(shuffle_partitions=2)\n"
+        "from cpt_database_sync_spark.plans.registry import all_queries as queries\n"
+    ),
+    # the driver contract on a session built without any engine conf
+    "vanilla": (
+        "from pyspark.sql import SparkSession\n"
+        "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "from __spark_entry__ import queries\n"
+    ),
+}
+
+
+@pytest.mark.parametrize("session", sorted(_WORKER_PATH_SESSIONS))
+def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_dir, session):
+    """Python workers get the package's parent directory on their path,
+    so a pandas-UDF key (``stream_holt``'s ``applyInPandasWithState``)
+    runs from a directory outside the repo, with no PYTHONPATH set: in a
+    session ``get_spark`` starts, in one it finds already running, and
+    through ``__spark_entry__`` in a vanilla session."""
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = (
         f"import sys; sys.path.insert(0, {repo!r})\n"
-        "from cpt_database_sync_spark.plans.registry import all_queries\n"
-        "from cpt_database_sync_spark.session import get_spark\n"
-        "spark = get_spark(shuffle_partitions=2)\n"
-        f"rows = all_queries()['stream_holt'](spark, {sf_dir!r}).collect()\n"
+        + _WORKER_PATH_SESSIONS[session]
+        + f"rows = queries()['stream_holt'](spark, {sf_dir!r}).collect()\n"
         "print('ROWS', len(rows))\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
