@@ -929,20 +929,13 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     point: index maintenance strategy must be invisible to readers.
     A multi-micro-batch equivalence test lives in tests/test_llm_ops.py.
     """
-    import tempfile  # noqa: PLC0415
-
-    from cpt_database_sync_spark.sources.sync import (  # noqa: PLC0415
-        scratch_dir,
-        sweep_scratch,
-    )
+    from cpt_database_sync_spark.sources.sync import sweep_scratch  # noqa: PLC0415
     from cpt_database_sync_spark.streaming.incremental import (  # noqa: PLC0415
-        incremental_sync_stream,
+        run_stream,
     )
 
     docs = load(spark, sf_dir, "documents")
-    sweep_scratch("mh_stream_")
-    workdir = tempfile.mkdtemp(prefix="mh_stream_", dir=scratch_dir())
-    idx = f"{workdir}/index"
+    idx = f"{sweep_scratch('mh_stream_')}/index"
 
     corpus_stream = (
         spark.readStream.schema(docs.schema)
@@ -958,10 +951,7 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(f"{idx}/bands/b{batch_id}")
         hs.write.mode("overwrite").parquet(f"{idx}/hs/b{batch_id}")
 
-    q = incremental_sync_stream(
-        spark, corpus_stream, index_batch, f"{workdir}/ckpt"
-    )
-    q.awaitTermination()
+    run_stream(corpus_stream, index_batch)
 
     bands_idx = (
         spark.read.option("recursiveFileLookup", "true").parquet(f"{idx}/bands")

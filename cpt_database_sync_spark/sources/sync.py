@@ -24,14 +24,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cpt_database_sync_spark.plans.registry import register
-from cpt_database_sync_spark.session import local_frame
+from cpt_database_sync_spark.session import _PACKAGE_PARENT, local_frame
 from cpt_database_sync_spark.sources.tables import load
 
 _scratch_reaped = False
 
 
 def scratch_dir() -> str:
-    """Engine scratch space, kept inside the repo tree (gitignored).
+    """Engine scratch space: ``$SPARK_GRAFT_SCRATCH``, else ``.scratch``
+    beside the package (gitignored), wherever the process started.
 
     Namespaced PER PROCESS (``p<pid>/``): the scratch holds mkdtemp'd
     sink targets, embedded Derby databases, and fixed-name format
@@ -53,7 +54,9 @@ def scratch_dir() -> str:
     rounds) reap under the old pid-only rule.
     """
     global _scratch_reaped
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+    root = os.environ.get(
+        "SPARK_GRAFT_SCRATCH", os.path.join(_PACKAGE_PARENT, ".scratch")
+    )
     d = os.path.join(root, f"p{os.getpid()}")
     os.makedirs(d, exist_ok=True)
     ident = _host_identity()
@@ -136,13 +139,13 @@ def derby_shutdown(spark: SparkSession, db_path: str) -> None:
             )
 
 
-def sweep_scratch(prefix: str, spark: SparkSession | None = None) -> None:
+def sweep_scratch(prefix: str, spark: SparkSession | None = None) -> str:
     """Remove scratch directories left by previous runs of the same
-    query (each run mkdtemps a fresh dir whose contents the returned lazy
-    plan still reads — so the CURRENT run's dir must survive until the
-    NEXT run, and this sweep runs first). Bounds `.scratch/` growth to
-    one live dir per query instead of one per invocation. Embedded Derby
-    databases are shut down before deletion."""
+    query, then return a fresh ``prefix``-named one for this run. The
+    returned lazy plan still reads this run's directory, so it survives
+    until the NEXT run's sweep. Bounds `.scratch/` growth to one live dir
+    per query instead of one per invocation. Embedded Derby databases are
+    shut down before deletion."""
     root = scratch_dir()
     for name in os.listdir(root):
         if not name.startswith(prefix):
@@ -152,6 +155,7 @@ def sweep_scratch(prefix: str, spark: SparkSession | None = None) -> None:
         if spark is not None and os.path.isdir(db):
             derby_shutdown(spark, db)
         shutil.rmtree(path, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 # The reference's constants (BASELINE.md) as defaults; at scale, raise
@@ -729,9 +733,7 @@ def sync_database_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     back FROM THE TARGET — the copy is what's being verified, exactly the
     reference's fetch-count==pull-count completion check
     (`sync/FetchRunner.java:38` / `sync/H2Runner.java:48`)."""
-    sweep_scratch("sync_db_")
-    target = tempfile.mkdtemp(prefix="sync_db_", dir=scratch_dir())
-    counts = sync_database(spark, sf_dir, target)
+    counts = sync_database(spark, sf_dir, sweep_scratch("sync_db_"))
     return local_frame(
         spark,
         list(counts.items()),
@@ -748,8 +750,7 @@ def full_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh target and read it back; the result must equal the source exactly
     (the reference's fetch-count==pull-count check made exact,
     `sync/FetchRunner.java:38` / `sync/H2Runner.java:38`)."""
-    sweep_scratch("full_copy_")
-    target = tempfile.mkdtemp(prefix="full_copy_", dir=scratch_dir()) + "/lineitem"
+    target = sweep_scratch("full_copy_") + "/lineitem"
     return full_copy_parquet(spark, load(spark, sf_dir, "lineitem"), target)
 
 
@@ -802,12 +803,10 @@ def derby_scratch_sync(
     varchar_lengths: dict[str, int],
 ) -> tuple[str, DataFrame]:
     """Shared scaffold for the embedded-Derby demo queries: sweep old
-    scratch dbs (before mkdtemp — see sweep_scratch), create a fresh db,
+    scratch dbs and create a fresh one (``sweep_scratch``),
     sync the fixture table through the reference-DDL path (ansi flavor
     for Derby). Returns (jdbc url, source frame)."""
-    sweep_scratch(prefix, spark)
-    workdir = tempfile.mkdtemp(prefix=prefix, dir=scratch_dir())
-    url = f"jdbc:derby:{workdir}/db;create=true"
+    url = f"jdbc:derby:{sweep_scratch(prefix, spark)}/db;create=true"
     src = load(spark, sf_dir, fixture)
     jdbc_sync_table(
         spark, src, url, table, varchar_lengths=varchar_lengths, flavor="ansi"

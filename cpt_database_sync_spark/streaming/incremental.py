@@ -16,14 +16,19 @@ Two implementations share the watermark logic:
   ``sources/sync.py`` (`sync/JdbcPageSink.java:81-88` insert shape extended
   with ON DUPLICATE KEY UPDATE), checkpointed by Spark itself.
 
+``run_stream`` is the one path that runs an availableNow stream to
+completion: every streaming key and helper in the package goes through it.
+
 At 100 TB the append target would be a partitioned table (partition by
 day(ts)) so each incremental run touches only new partitions.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,10 +109,9 @@ def incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back equals the full source — the reference's count-match check
     (`sync/FetchRunner.java:38`) strengthened to full-value equality.
     """
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
+    from cpt_database_sync_spark.sources.sync import sweep_scratch
 
-    sweep_scratch("incr_sync_")
-    workdir = tempfile.mkdtemp(prefix="incr_sync_", dir=scratch_dir())
+    workdir = sweep_scratch("incr_sync_")
     target = f"{workdir}/events_target"
     wm_file = f"{workdir}/watermark.json"
     ev = load(spark, sf_dir, "events")
@@ -131,17 +135,100 @@ def incremental_sync_stream(
     source_stream: DataFrame,
     write_batch,
     checkpoint_dir: str,
+    output_mode: str = "append",
 ):
     """Production shape: readStream → foreachBatch(write_batch). Spark's
     checkpoint replaces the JSON watermark file; write_batch receives
     (batch_df, batch_id) and should write idempotently (e.g. JDBC upsert
-    via sources.sync.jdbc_upsert_batch, or overwrite-by-batch-id paths)."""
+    via sources.sync.jdbc_upsert_batch, or overwrite-by-batch-id paths).
+    Starts the query and returns it; ``run_stream`` runs one to the end."""
     return (
         source_stream.writeStream.foreachBatch(write_batch)
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
+
+
+# Stateful queries create one state store per shuffle partition, each with
+# per-batch snapshot+commit overhead. The streamed result sets here are
+# tiny; 8 stores lose no parallelism that matters and more than halve
+# commit cost. A 100 TB deployment sizes this to cores: the checkpoint
+# pins it at the query's first start, so pick it deliberately there.
+STREAM_SHUFFLE_PARTITIONS = 8
+
+# Ephemeral checkpoints live on tmpfs: state-store commits fsync every
+# delta file, and on a disk-backed /tmp those fsyncs stall behind
+# unrelated page-cache flushes from earlier data-plane writes (measured
+# 10x batch-duration swings). These one-shot queries need no durability;
+# a real incremental pipeline points its checkpoint at durable storage.
+CKPT_ROOT = (
+    "/dev/shm/spark-graft-ckpt" if os.path.isdir("/dev/shm") else "/tmp/spark-graft-ckpt"
+)
+
+
+@contextlib.contextmanager
+def _pinned(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the block, then restore each prior value
+    (unset when it was never set)."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def run_stream(
+    stream_df: DataFrame,
+    write_batch,
+    output_mode: str = "append",
+    no_data_batches: bool = False,
+) -> list:
+    """Run ``stream_df`` to completion on the data available now, each
+    micro-batch through ``write_batch(batch_df, batch_id)``, and return
+    every batch's ``StreamingQueryProgress``.
+
+    The checkpoint is a fresh directory under ``CKPT_ROOT``, removed when
+    the run ends, whether it succeeded or raised. The query captures
+    ``spark.sql.shuffle.partitions`` (``STREAM_SHUFFLE_PARTITIONS``) and
+    ``noDataMicroBatches`` at ``start()``, so both are pinned only around
+    it. The trailing no-data batch is off by default: in complete mode it
+    only re-emits all state into the sink a second time. Outer joins turn
+    it on, because their NULL-extended arm fires only on the final
+    watermark advance, which is what that batch provides. Spark reads
+    ``numRecentProgressUpdates`` live (default 100), so it stays raised
+    until the query ends; otherwise a long run keeps only its last
+    progress entries.
+    """
+    spark = stream_df.sparkSession
+    os.makedirs(CKPT_ROOT, exist_ok=True)
+    ckpt = tempfile.mkdtemp(prefix="stream_", dir=CKPT_ROOT)
+    start_confs = {
+        "spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(no_data_batches).lower(),
+    }
+    try:
+        with _pinned(
+            spark, {"spark.sql.streaming.numRecentProgressUpdates": str(2**31 - 1)}
+        ):
+            with _pinned(spark, start_confs):
+                q = incremental_sync_stream(
+                    spark, stream_df, write_batch, ckpt, output_mode
+                )
+            try:
+                q.awaitTermination()
+                return list(q.recentProgress)
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _EVENT_VARCHARS = {"event_type": 40, "props": 400}
@@ -165,13 +252,12 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         jdbc_reader,
         jdbc_sync_table,
         jdbc_upsert_batch,
-        scratch_dir,
+        lowercase_columns,
         sweep_scratch,
     )
     from cpt_database_sync_spark.streaming.windows import events_stream
 
-    sweep_scratch("stream_upsert_", spark)
-    workdir = tempfile.mkdtemp(prefix="stream_upsert_", dir=scratch_dir())
+    workdir = sweep_scratch("stream_upsert_", spark)
     url = f"jdbc:derby:{workdir}/db;create=true"
     checkpoint = "2024-01-10 00:00:00"
     seed_cut = "2024-01-20 00:00:00"
@@ -194,12 +280,9 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             varchar_lengths=_EVENT_VARCHARS,
         )
 
-    q = incremental_sync_stream(spark, tail, write_batch, f"{workdir}/ckpt")
-    q.awaitTermination()
-
+    run_stream(tail, write_batch)
     back = jdbc_reader(spark, url, "events_replica")
-    # Derby folded identifiers to upper case; restore the source names
-    return back.toDF(*[c.lower() for c in back.columns]).select(*ev.columns)
+    return lowercase_columns(back).select(*ev.columns)
 
 
 @register(
@@ -229,15 +312,10 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the drift boundary: every source row present exactly once,
     props NULL iff it shipped before the upgrade.
     """
-    from cpt_database_sync_spark.sources.sync import (  # noqa: PLC0415
-        scratch_dir,
-        sweep_scratch,
-    )
+    from cpt_database_sync_spark.sources.sync import sweep_scratch  # noqa: PLC0415
     from cpt_database_sync_spark.streaming.windows import events_stream
 
-    sweep_scratch("stream_evo_")
-    workdir = tempfile.mkdtemp(prefix="stream_evo_", dir=scratch_dir())
-    target = f"{workdir}/sink"
+    target = f"{sweep_scratch('stream_evo_')}/sink"
     cutoff = "2024-01-15 00:00:00"
     ev = events_stream(spark, sf_dir)
 
@@ -254,11 +332,8 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         return write_batch
 
     v1 = ev.filter(F.col("ts") <= cutoff).drop("props")
-    q = incremental_sync_stream(spark, v1, writer("v1"), f"{workdir}/ckpt_v1")
-    q.awaitTermination()
-    v2 = ev.filter(F.col("ts") > cutoff)
-    q = incremental_sync_stream(spark, v2, writer("v2"), f"{workdir}/ckpt_v2")
-    q.awaitTermination()
+    run_stream(v1, writer("v1"))
+    run_stream(ev.filter(F.col("ts") > cutoff), writer("v2"))
 
     back = (
         spark.read.option("mergeSchema", "true")
@@ -313,13 +388,12 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         jdbc_cdc_batch,
         jdbc_reader,
         jdbc_sync_table,
-        scratch_dir,
+        lowercase_columns,
         sweep_scratch,
     )
     from cpt_database_sync_spark.streaming.windows import events_stream
 
-    sweep_scratch("stream_cdc_", spark)
-    workdir = tempfile.mkdtemp(prefix="stream_cdc_", dir=scratch_dir())
+    workdir = sweep_scratch("stream_cdc_", spark)
     url = f"jdbc:derby:{workdir}/db;create=true"
     checkpoint = "2024-01-10 00:00:00"
     seed_cut = "2024-01-20 00:00:00"
@@ -351,8 +425,6 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             varchar_lengths={**_EVENT_VARCHARS, "op": 1},
         )
 
-    q = incremental_sync_stream(spark, feed, write_batch, f"{workdir}/ckpt")
-    q.awaitTermination()
-
+    run_stream(feed, write_batch)
     back = jdbc_reader(spark, url, "events_replica")
-    return back.toDF(*[c.lower() for c in back.columns]).select(*ev.columns)
+    return lowercase_columns(back).select(*ev.columns)

@@ -108,8 +108,8 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     Like ``stream_time_weighted``, each emitted row is the user's
     CUMULATIVE accumulator, so it serves through the keyed MERGE sink in
     update mode — one current row per user under ANY chronological
-    micro-batch split (append mode re-emitted cumulative rows per batch:
-    the same hazard ADVICE r7 flagged on the TWA stream).
+    micro-batch split (append mode re-emitted cumulative rows per batch,
+    the same hazard as on the TWA stream).
     """
     ev = events_stream(spark, sf_dir).withColumn(
         "value_dec", F.col("value").cast("decimal(14,6)").cast("string")
@@ -183,11 +183,28 @@ def _twa_encode(pend: list[tuple[int, int, str | None]]) -> str | None:
     return "|".join(f"{us},{eid},{v if v is not None else ''}" for us, eid, v in pend)
 
 
+def _watermark_us(state: GroupState) -> int:
+    """The stream's current watermark in microseconds, or 0 when the
+    stream has none (0 keeps every event pending: nothing finalizes).
+
+    Only that specific condition degrades to 0; any other error must
+    propagate — a blanket except would silently drop the fast path and
+    re-fold the whole per-key history every batch. ``_watermark_present``
+    is the exact flag ``getCurrentWatermarkMs`` gates on; the
+    ``PySparkRuntimeError`` catch covers a future rename."""
+    if not getattr(state, "_watermark_present", True):
+        return 0
+    try:
+        return state.getCurrentWatermarkMs() * 1000
+    except PySparkRuntimeError:  # no watermark on the stream
+        return 0
+
+
 def _user_twa(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Watermark-delayed LOCF fold, idempotent under cross-batch
-    event-time disorder (VERDICT r8 next #4): events newer than the
+    event-time disorder: events newer than the
     watermark stay in a PENDING buffer and are RE-folded (sorted by
     (ts, event_id)) on top of the finalized accumulator at every
     emission; only events the watermark has passed fold into the
@@ -216,19 +233,7 @@ def _user_twa(
             pend.append(
                 (int(ts.value // 1000), int(eid), None if v is None else str(v))
             )
-    # Only the SPECIFIC no-watermark condition degrades to "nothing
-    # finalizes" (wm=0 keeps every event pending); any other error must
-    # propagate — a blanket except here would silently drop the fast
-    # path and re-fold the full per-user history every batch (ADVICE
-    # r10). `_watermark_present` is the exact flag getCurrentWatermarkMs
-    # gates on; the PySparkRuntimeError catch covers a future rename.
-    if getattr(state, "_watermark_present", True):
-        try:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-        except PySparkRuntimeError:  # no watermark on the stream
-            wm_us = 0
-    else:
-        wm_us = 0
+    wm_us = _watermark_us(state)
     pend.sort(key=lambda e: (e[0], e[1]))
     ripe = [e for e in pend if e[0] <= wm_us]
     pend = [e for e in pend if e[0] > wm_us]
@@ -293,12 +298,11 @@ def stream_time_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     upserts the refreshed rows and the serving table always holds
     exactly one current row per user — under any chronological
     micro-batch split, not just the one-shot availableNow run (append
-    mode re-emitted cumulative rows per batch — ADVICE r7). Cross-batch
+    mode re-emitted cumulative rows per batch). Cross-batch
     event-time DISORDER is handled by the watermark-delayed re-fold in
     ``_user_twa`` (pending buffer + finalize-behind-the-watermark), so
-    per-user ordering across batches is no longer an external
-    precondition — the r8-documented LOCF constraint, now implemented
-    and gated by the out-of-order split test in tests/test_units.py.
+    per-user ordering across batches is not an external precondition
+    of LOCF; the out-of-order split test in tests/test_units.py gates it.
     State is O(1) per user plus the watermark-bounded pending buffer.
     """
     ev = (
@@ -532,7 +536,7 @@ def stream_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming Holt double-exponential smoothing (VERDICT r9 next #3)
+# Streaming Holt double-exponential smoothing
 # ---------------------------------------------------------------------------
 
 _HOLT_OUT_SCHEMA = (
@@ -613,13 +617,7 @@ def _type_holt(
     for pdf in pdfs:
         for dn, c in pdf.groupby("dn").size().items():
             pend[int(dn)] = pend.get(int(dn), 0) + int(c)
-    if getattr(state, "_watermark_present", True):
-        try:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-        except PySparkRuntimeError:  # no watermark on the stream
-            wm_us = 0
-    else:
-        wm_us = 0
+    wm_us = _watermark_us(state)
     day_us = 86_400_000_000
     ripe = sorted(dn for dn in pend if (dn + 1) * day_us <= wm_us)
     for dn in ripe:
@@ -796,13 +794,7 @@ def _user_islands(
     for pdf in pdfs:
         for s, e, eid in zip(pdf["s"], pdf["e"], pdf["event_id"]):
             pend.append((int(s), int(e), int(eid)))
-    if getattr(state, "_watermark_present", True):
-        try:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-        except PySparkRuntimeError:  # no watermark on the stream
-            wm_us = 0
-    else:
-        wm_us = 0
+    wm_us = _watermark_us(state)
     pend.sort()
     ripe = [ev for ev in pend if ev[0] <= wm_us]
     pend = [ev for ev in pend if ev[0] > wm_us]
@@ -962,13 +954,7 @@ def _type_sweep(
         for s, e, eid in zip(pdf["s"], pdf["e"], pdf["event_id"]):
             pend.append((int(s), 1, int(eid)))
             pend.append((int(e), -1, int(eid)))
-    if getattr(state, "_watermark_present", True):
-        try:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-        except PySparkRuntimeError:  # no watermark on the stream
-            wm_us = 0
-    else:
-        wm_us = 0
+    wm_us = _watermark_us(state)
     pend.sort()
     ripe = [p for p in pend if p[0] <= wm_us]
     pend = [p for p in pend if p[0] > wm_us]
@@ -1142,13 +1128,7 @@ def _type_ph(
     for pdf in pdfs:
         for dn, c in pdf.groupby("dn").size().items():
             pend[int(dn)] = pend.get(int(dn), 0) + int(c)
-    if getattr(state, "_watermark_present", True):
-        try:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-        except PySparkRuntimeError:
-            wm_us = 0
-    else:
-        wm_us = 0
+    wm_us = _watermark_us(state)
     day_us = 86_400_000_000
     ripe = sorted(dn for dn in pend if (dn + 1) * day_us <= wm_us)
     for dn in ripe:

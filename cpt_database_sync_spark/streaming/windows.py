@@ -32,6 +32,7 @@ from cpt_database_sync_spark.sources.tables import (
     normalize_events_ts,
     parquet_schema,
 )
+from cpt_database_sync_spark.streaming.incremental import CKPT_ROOT, run_stream
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,16 +55,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-# State-store instances scale with shuffle partitions; see the comment at
-# the conf-set site in run_to_table. Module-level so tests can sweep it.
-STREAM_SHUFFLE_PARTITIONS = 8
-
-
 def run_to_table(
     stream_df: DataFrame, output_mode: str, no_data_batches: bool = False
 ) -> DataFrame:
     """Execute a streaming query to completion on the available data
-    (Trigger.AvailableNow); return the result as a batch DataFrame.
+    (``run_stream``); return the result as a batch DataFrame.
 
     The sink is ``foreachBatch`` → parquet scratch: the streamed result is
     written by the executors (one distributed write, complete-mode batches
@@ -73,27 +69,8 @@ def run_to_table(
     is the 100 TB path — swap the scratch dir for a partitioned table.
     """
     spark = stream_df.sparkSession
-    # one-shot availableNow: the trailing no-data batch would only re-emit
-    # all complete-mode state into the sink a second time — skip it by
-    # default. Outer joins opt IN (no_data_batches=True): their
-    # NULL-extended arm fires only on the final watermark advance, which
-    # is exactly what the trailing batch provides.
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data_batches else "false",
-    )
-    name = f"stream_{uuid.uuid4().hex[:12]}"
-    # Ephemeral checkpoint + result scratch on tmpfs: state-store commits
-    # fsync every delta file; on the default /tmp (virtio disk) those
-    # fsyncs stall behind unrelated page-cache flushes from earlier
-    # data-plane writes (measured 10x batch-duration swings). These
-    # one-shot queries need no durability; a real incremental pipeline
-    # points both at durable shared storage instead.
-    scratch_root = (
-        "/dev/shm/spark-graft-ckpt" if os.path.isdir("/dev/shm") else "/tmp/spark-graft-ckpt"
-    )
-    ckpt_dir = f"{scratch_root}/{name}/ckpt"
-    out_dir = f"{scratch_root}/{name}/out"
+    # tmpfs beside the checkpoints (see CKPT_ROOT); created by the first write
+    out_dir = f"{CKPT_ROOT}/out_{uuid.uuid4().hex[:12]}"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         # complete mode re-emits full state per batch → overwrite keeps the
@@ -101,46 +78,19 @@ def run_to_table(
         mode = "overwrite" if output_mode == "complete" else "append"
         batch_df.write.mode(mode).parquet(out_dir)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-    )
-    # Stateful queries create one state store per shuffle partition, each
-    # with per-batch snapshot+commit overhead. The streaming result sets
-    # here are tiny; 8 stores lose no parallelism that matters and more
-    # than halve commit cost. (A 100 TB deployment sizes this to cores —
-    # it is pinned at the query's FIRST start by the checkpoint, so pick
-    # it deliberately there.)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        q = writer.start()
+        run_stream(stream_df, _sink, output_mode, no_data_batches)
+        if not os.path.isdir(out_dir):
+            # the source produced zero micro-batches: no sink write ever
+            # ran. An empty frame with the stream's result schema is the
+            # right answer, not an AnalysisException on a missing path.
+            return local_frame(spark, [], stream_df.schema)
+        # localCheckpoint materializes the result into executor block
+        # storage so the tmpfs scratch can be deleted right away —
+        # otherwise every run leaks one result set into /dev/shm (RAM).
+        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        q.awaitTermination()
-    except Exception:
-        # a failed query must not leak its uuid-named scratch (nothing
-        # ever sweeps these by prefix, unlike the sync.py scratch dirs)
-        q.stop()
-        shutil.rmtree(f"{scratch_root}/{name}", ignore_errors=True)
-        raise
-    q.stop()
-    if not os.path.isdir(out_dir):
-        # the source produced zero micro-batches: no sink write ever ran.
-        # An empty frame with the stream's result schema is the right
-        # answer, not an AnalysisException on a missing path.
-        result = local_frame(spark, [], stream_df.schema)
-        shutil.rmtree(f"{scratch_root}/{name}", ignore_errors=True)
-        return result
-    # localCheckpoint materializes the result into executor block storage
-    # so the tmpfs scratch (ckpt + parquet) can be deleted immediately —
-    # otherwise every run leaks one result set into /dev/shm (RAM).
-    result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    shutil.rmtree(f"{scratch_root}/{name}", ignore_errors=True)
-    return result
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @register(
@@ -345,8 +295,8 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable. Uses ``dropDuplicatesWithinWatermark``: the plain
     variant with a non-event-time subset builds NO eviction predicate
     (day is an Alias over date_trunc and carries no event-time metadata),
-    so its state would grow with key-space history despite the watermark
-    (r8 review); the Within variant evicts a key one watermark-delay
+    so its state would grow with key-space history despite the watermark;
+    the Within variant evicts a key one watermark-delay
     after last sight, so the delay must cover the KEY's lifetime — 25
     hours here, a day-grain key's duplicates all arrive while its day
     (plus late-arrival slack) is live. Contrast stream_dedup_delivery:
@@ -380,7 +330,7 @@ def stream_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unbounded source BECAUSE this uses ``dropDuplicatesWithinWatermark``:
     plain ``dropDuplicates`` with a non-event-time subset builds no
     eviction predicate at all (the watermark silently does nothing and
-    state grows with key-space history — r8 review). The Within variant's
+    state grows with key-space history). The Within variant's
     contract matches at-least-once delivery exactly: replays arrive
     within the delivery window, i.e. the watermark delay. At 100 TB the
     dedup state shards across the state store by key exactly like the
@@ -416,37 +366,26 @@ def serve_keyed_stream(
     the Derby URL becomes the warehouse's MERGE-capable store (Delta/
     Iceberg/JDBC) and state scales with ACTIVE windows, not history.
 
-    Returns (serving table read-back, list of StreamingQueryProgress).
+    Returns (serving table read-back, every batch's StreamingQueryProgress).
     """
-    import tempfile  # noqa: PLC0415
-
+    from cpt_database_sync_spark.sources.identifiers import (  # noqa: PLC0415
+        stores_upper_case,
+    )
     from cpt_database_sync_spark.sources.sync import (  # noqa: PLC0415
         jdbc_reader,
         jdbc_sync_table,
         jdbc_upsert_batch,
-        scratch_dir,
+        lowercase_columns,
         sweep_scratch,
     )
 
     spark = stream_df.sparkSession
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    sweep_scratch(prefix, spark)
-    workdir = tempfile.mkdtemp(prefix=prefix, dir=scratch_dir())
-    url = f"jdbc:derby:{workdir}/db;create=true"
+    url = f"jdbc:derby:{sweep_scratch(prefix, spark)}/db;create=true"
     table = "serving"
-    scratch_root = (
-        "/dev/shm/spark-graft-ckpt" if os.path.isdir("/dev/shm") else "/tmp/spark-graft-ckpt"
-    )
-    ckpt_dir = f"{scratch_root}/{os.path.basename(workdir)}/ckpt"
     created = False
-
     # probe the target's identifier folding ONCE for the stream's
     # lifetime — the URL is fixed, so re-reading DatabaseMetaData every
-    # micro-batch was a pure per-batch driver round-trip (r8 review)
-    from cpt_database_sync_spark.sources.identifiers import (  # noqa: PLC0415
-        stores_upper_case,
-    )
-
+    # micro-batch would be a pure per-batch driver round-trip
     fold = stores_upper_case(spark, url)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -463,36 +402,12 @@ def serve_keyed_stream(
             varchar_lengths=varchar_lengths, flavor="ansi", fold=fold,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
-        q = writer.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    try:
-        q.awaitTermination()
-        progresses = list(q.recentProgress)
-    finally:
-        # a failed query must not leak its mkdtemp-named tmpfs checkpoint
-        # (nothing sweeps these by prefix — the run_to_table hardening,
-        # applied to this path too)
-        q.stop()
-        shutil.rmtree(
-            f"{scratch_root}/{os.path.basename(workdir)}", ignore_errors=True
-        )
+    progresses = run_stream(stream_df, write_batch, "update")
     if not created:
         # zero micro-batches: the serving table was never created
-        return local_frame(stream_df.sparkSession, [], stream_df.schema), progresses
-    back = jdbc_reader(spark, url, table)
-    # Derby folded identifiers upper; restore the stream's column names
-    back = back.toDF(*[c.lower() for c in back.columns]).select(*stream_df.columns)
-    return back, progresses
+        return local_frame(spark, [], stream_df.schema), progresses
+    back = lowercase_columns(jdbc_reader(spark, url, table))
+    return back.select(*stream_df.columns), progresses
 
 
 STREAM_TOPN = 3
@@ -668,9 +583,9 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched rows plus unmatched clicks whose window provably closed
     before the final GLOBAL watermark: the min across both inputs'
     watermarks (each side's ms-floored max event time − the 10 min
-    delay). The trailing no-data micro-batch is
-    ENABLED for this query (run_to_table's no_data_batches flag) so the
-    final watermark advance actually flushes the closed windows.
+    delay). The trailing no-data micro-batch is ENABLED for this query
+    (``run_stream``'s no_data_batches flag) so the final watermark
+    advance actually flushes the closed windows.
     """
     ev = events_stream(spark, sf_dir)
     clicks = (

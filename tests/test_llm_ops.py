@@ -349,9 +349,7 @@ def test_stream_minhash_index_multibatch_equivalence(spark, sf_dir, tmp_path):
         minhash_signatures_from_sets,
     )
     from cpt_database_sync_spark.sources.tables import load
-    from cpt_database_sync_spark.streaming.incremental import (
-        incremental_sync_stream,
-    )
+    from cpt_database_sync_spark.streaming.incremental import run_stream
 
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -389,8 +387,7 @@ def test_stream_minhash_index_multibatch_equivalence(spark, sf_dir, tmp_path):
         ).parquet(f"{idx}/bands/b{bid}")
         hs.write.mode("overwrite").parquet(f"{idx}/hs/b{bid}")
 
-    q = incremental_sync_stream(spark, stream, index_batch, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    run_stream(stream, index_batch)
     assert len(batch_ids) >= 3, "corpus must arrive as multiple micro-batches"
 
     streamed = classify_increment(

@@ -146,6 +146,75 @@ def test_run_to_table_empty_source_and_scratch_cleanup(spark, sf_dir):
             assert leaked == set(), f"leaked scratch in {root}: {leaked}"
 
 
+def test_run_stream_restores_confs_and_removes_checkpoint(spark, sf_dir):
+    """A stream run leaves the session as it found it: a sink that raises
+    propagates its error, and neither that run nor a ``run_to_table``
+    with the trailing no-data batch on leaves a new entry under the
+    checkpoint root or any pinned conf changed."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from cpt_database_sync_spark.streaming.incremental import CKPT_ROOT, run_stream
+    from cpt_database_sync_spark.streaming.windows import events_stream, run_to_table
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.numRecentProgressUpdates",
+    )
+    prior = {k: spark.conf.get(k, None) for k in keys}
+    os.makedirs(CKPT_ROOT, exist_ok=True)
+    entries = set(os.listdir(CKPT_ROOT))
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("sink failed on purpose")
+
+    # a prior value distinct from every pin, so a leaked pin shows
+    spark.conf.set(keys[0], "5")
+    spark.conf.unset(keys[1])
+    try:
+        with pytest.raises(Exception, match="sink failed on purpose"):
+            run_stream(events_stream(spark, sf_dir), boom)
+        assert [spark.conf.get(k, None) for k in keys] == ["5", None, prior[keys[2]]]
+        windows = (
+            events_stream(spark, sf_dir)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"))
+            .count()
+        )
+        # append mode emits a window only once the watermark passes it:
+        # the trailing no-data batch is what flushes the closed ones
+        assert run_to_table(windows, "append", no_data_batches=True).count() > 0
+        assert [spark.conf.get(k, None) for k in keys] == ["5", None, prior[keys[2]]]
+        assert set(os.listdir(CKPT_ROOT)) == entries
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_scratch_dir_defaults_beside_the_package(monkeypatch, tmp_path):
+    """With SPARK_GRAFT_SCRATCH unset the scratch root is ``.scratch`` in
+    the package's parent directory, not a fixed path."""
+    import os
+
+    from cpt_database_sync_spark import session
+    from cpt_database_sync_spark.sources import sync
+
+    assert os.path.isfile(
+        os.path.join(session._PACKAGE_PARENT, "cpt_database_sync_spark", "__init__.py")
+    )
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    monkeypatch.setattr(sync, "_PACKAGE_PARENT", str(tmp_path))
+    monkeypatch.setattr(sync, "_scratch_reaped", True)
+    want = os.path.join(str(tmp_path), ".scratch", f"p{os.getpid()}")
+    assert sync.scratch_dir() == want and os.path.isdir(want)
+
+
 def test_merge_into_semantics(spark, sf_dir):
     """Source wins on key match, unmatched source inserts, unmatched
     target survives — and the merged key set is exact."""
@@ -247,19 +316,13 @@ def test_jdbc_merge_null_key_upserts_one_row(spark):
     exactly ONE serving row across repeated upsert batches — plain
     equality never matches NULL, which inserted a fresh duplicate per
     micro-batch."""
-    import os
-
     from cpt_database_sync_spark.sources.sync import (
         jdbc_reader,
         jdbc_sync_table,
         jdbc_upsert_batch,
-        sweep_scratch,
     )
 
-    sweep_scratch("nullkey_", spark)
-    workdir = os.path.join(scratch_dir(), "nullkey_db")
-    shutil.rmtree(workdir, ignore_errors=True)
-    url = f"jdbc:derby:{workdir}/db;create=true"
+    url = _fresh_derby(spark, "nullkey_")
     df1 = spark.createDataFrame(
         [(None, 1.0), (7, 2.0)], "k INT, v DOUBLE"
     )
@@ -284,18 +347,9 @@ def test_jdbc_cdc_null_op_row_inserts(spark):
     apart from the staging write (that write lands NULL strings in Derby
     VARCHAR through jdbc_sync_table's CLOB shadow table, covered end to
     end by test_jdbc_cdc_null_strings_through_shadow)."""
-    import os
+    from cpt_database_sync_spark.sources.sync import jdbc_reader, merge_cdc_statement
 
-    from cpt_database_sync_spark.sources.sync import (
-        jdbc_reader,
-        merge_cdc_statement,
-        sweep_scratch,
-    )
-
-    sweep_scratch("nullop_", spark)
-    workdir = os.path.join(scratch_dir(), "nullop_db")
-    shutil.rmtree(workdir, ignore_errors=True)
-    url = f"jdbc:derby:{workdir}/db;create=true"
+    url = _fresh_derby(spark, "nullop_")
     _execute_jdbc(spark, url, [
         'CREATE TABLE "T" ("K" INT, "V" DOUBLE)',
         'INSERT INTO "T" VALUES (1, 10.0), (3, 30.0)',
@@ -311,14 +365,9 @@ def test_jdbc_cdc_null_op_row_inserts(spark):
 
 def _fresh_derby(spark, prefix: str) -> str:
     """URL of an empty embedded Derby database under the scratch dir."""
-    import os
-
     from cpt_database_sync_spark.sources.sync import sweep_scratch
 
-    sweep_scratch(prefix, spark)
-    workdir = os.path.join(scratch_dir(), f"{prefix}db")
-    shutil.rmtree(workdir, ignore_errors=True)
-    return f"jdbc:derby:{workdir}/db;create=true"
+    return f"jdbc:derby:{sweep_scratch(prefix, spark)}/db;create=true"
 
 
 def _indexes(spark, url: str, table: str) -> dict[str, list[str]]:

@@ -1235,18 +1235,48 @@ def test_clamped_fold_matches_python_reference(spark, sf_dir):
         assert got[uid] == bal, f"user {uid}: {got[uid]} != {bal}"
 
 
+def _chronological_parts(ev):
+    """``ev`` cut at two instants into three time-ordered parts."""
+    from pyspark.sql import functions as F
+
+    c0, c1 = "2024-01-10 00:00:00", "2024-01-20 00:00:00"
+    ts = F.col("ts")
+    return [ev.filter(ts <= c0), ev.filter((ts > c0) & (ts <= c1)), ev.filter(ts > c1)]
+
+
+def _file_stream(spark, parts, prefix):
+    """Write each frame of ``parts`` as one parquet file and stream them
+    one per micro-batch, in list order. The file source orders
+    micro-batches by modification time; equal mtimes (sub-second
+    copies) make the order arbitrary, so the stamps strictly increase."""
+    import glob
+    import shutil
+    import time
+
+    from cpt_database_sync_spark.sources.sync import sweep_scratch
+
+    workdir = sweep_scratch(prefix)
+    os.makedirs(f"{workdir}/landing")
+    now = time.time()
+    for i, part in enumerate(parts):
+        part.coalesce(1).write.parquet(f"{workdir}/b{i}")
+        dst = f"{workdir}/landing/b{i}.parquet"
+        shutil.copy(glob.glob(f"{workdir}/b{i}/part-*.parquet")[0], dst)
+        os.utime(dst, (now + i * 10, now + i * 10))
+    return (
+        spark.readStream.schema(parts[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{workdir}/landing")
+    )
+
+
 def test_stateful_sessionizer_invariant_under_batch_splits(spark, sf_dir):
     """The stream_sessionize_stateful docstring claims output identical
     under ANY chronological micro-batch split. Prove it: split events
     into 3 time-ordered files, stream them with maxFilesPerTrigger=1
     (three micro-batches, state carried across), and compare against the
     single-batch run of the registered query."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from cpt_database_sync_spark.operators.analytics import SESSION_GAP_MIN
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _SESS_OUT_SCHEMA,
@@ -1257,40 +1287,8 @@ def test_stateful_sessionizer_invariant_under_batch_splits(spark, sf_dir):
     from cpt_database_sync_spark.streaming.windows import run_to_table
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    sweep_scratch("sess_split_")
-    workdir = os.path.join(scratch_dir(), "sess_split_src")
     ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-        # one chronological landing file per batch
-    files_dir = os.path.join(scratch_dir(), "sess_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    import glob
-    import shutil
-
-    import time
-
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        # the file source orders micro-batches by modification time; equal
-        # mtimes (sub-second copies) make the order arbitrary and break
-        # the CHRONOLOGICAL premise — pin strictly increasing stamps
-        os.utime(dst, (now + i * 10, now + i * 10))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
-    )
+    stream = _file_stream(spark, _chronological_parts(ev), "sess_split_")
     closed = stream.groupBy("user_id").applyInPandasWithState(
         _session_closer(SESSION_GAP_MIN * 60 * 1_000_000),
         outputStructType=_SESS_OUT_SCHEMA,
@@ -1425,15 +1423,9 @@ def test_stream_time_weighted_invariant_under_batch_splits(spark, sf_dir):
     same serving table as the one-shot run (append mode re-emitted one
     cumulative row per batch — ADVICE r7; the upsert keeps exactly one
     current row per user)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _TWA_OUT_SCHEMA,
@@ -1443,34 +1435,11 @@ def test_stream_time_weighted_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("twa_split_")
-    workdir = os.path.join(scratch_dir(), "twa_split_src")
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts",
         F.col("value").cast("decimal(14,6)").cast("string").alias("value_dec"),
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "twa_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))  # pin batch order
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
-    )
+    stream = _file_stream(spark, _chronological_parts(ev), "twa_split_")
     folded = stream.groupBy("user_id").applyInPandasWithState(
         _user_twa,
         outputStructType=_TWA_OUT_SCHEMA,
@@ -1534,88 +1503,74 @@ def test_ivf_index_readback_schema_and_reuse(spark, sf_dir):
     assert df.count() == df2.count() > 0
 
 
-def test_streaming_soak_state_bounded_over_200_batches(spark):
-    """Continuous-trigger soak (VERDICT r7 #6): 200+ micro-batches of a
-    deterministic rate-micro-batch source through a watermarked windowed
-    aggregation, observing the state store the WHOLE run — converts the
-    one-shot bounded-state gate into a steady-state observation. Event
-    time advances 5 min per batch, so the 1-hour windows close steadily
-    under the 10-min watermark: state must oscillate around
-    (active windows × keys), never grow with batch count."""
-    import os
-    import shutil
+def _soak_state(spark, tmp_path, rows, step_ms, agg_of):
+    """Stream 200 parquet files, one per micro-batch, through
+    ``agg_of(stream)`` in update mode and return each batch's
+    (numRowsTotal, numRowsRemoved) from the first state operator. The
+    files mimic the ``rate-micro-batch`` source: file ``b`` holds values
+    ``b*rows .. b*rows+rows-1``, all stamped ``b * step_ms``. Increasing
+    mtimes make the file source take them in order, so the run has
+    exactly 200 batches whatever the host's speed, and every batch's
+    progress is kept."""
     import time
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cpt_database_sync_spark.streaming.incremental import run_stream
+
+    t0 = time.time() - 1000
+    for b in range(200):
+        path = tmp_path / f"b{b:03d}.parquet"
+        pq.write_table(pa.table({
+            "timestamp": pa.array([b * step_ms] * rows, pa.timestamp("ms", tz="UTC")),
+            "value": pa.array(range(b * rows, (b + 1) * rows), pa.int64()),
+        }), path)
+        os.utime(path, (t0 + b, t0 + b))
+    stream = (
+        spark.readStream.schema("timestamp timestamp, value bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path))
+    )
+    progress = run_stream(agg_of(stream), lambda df, bid: df.count(), "update")
+    assert [p.numInputRows for p in progress] == [rows] * 200
+    return [
+        (p.stateOperators[0].numRowsTotal, p.stateOperators[0].numRowsRemoved)
+        for p in progress
+    ]
+
+
+def test_streaming_soak_state_bounded_over_200_batches(spark, tmp_path):
+    """Soak: 200 micro-batches through a watermarked windowed
+    aggregation, observing the state store after every batch — the
+    one-shot bounded-state gate turned into a steady-state observation.
+    Event time advances 5 min per batch, so the 1-hour windows close
+    steadily under the 10-min watermark: state must oscillate around
+    (active windows × keys), never grow with batch count."""
     from pyspark.sql import functions as F
 
-    import tempfile
-
-    # per-run mkdtemp (ADVICE r10): a fixed path would let two concurrent
-    # pytest runs share one structured-streaming checkpoint and corrupt
-    # each other; /dev/shm preferred for RAM-speed state-store commits
-    ckpt = tempfile.mkdtemp(
-        prefix="soak-test-ckpt-",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
     n_keys = 50
-    stream = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", 200)
-        .option("numPartitions", 2)
-        .option("advanceMillisPerBatch", 300000)  # 5 min event time / batch
-        .load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % n_keys).alias("user_id"),
+
+    def agg_of(stream):
+        return (
+            stream.select(
+                F.col("timestamp").alias("ts"),
+                (F.col("value") % n_keys).alias("user_id"),
+            )
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: df.count())
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    seen: dict[int, tuple] = {}
-    t0 = time.time()
-    try:
-        while time.time() - t0 < 240:
-            p = q.lastProgress
-            if p and p["stateOperators"]:
-                so = p["stateOperators"][0]
-                seen[p["batchId"]] = (so["numRowsTotal"], so["numRowsRemoved"])
-            if p and p["batchId"] >= 200:
-                break
-            time.sleep(0.05)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    bids = sorted(seen)
-    # 200 batches normally takes ~60 s. The state-lifecycle claim holds
-    # over any prefix spanning several window closures (~14 batches per
-    # 1 h + 10 min-watermark window at 5 min/batch); the batch count
-    # reached in the time budget is a property of the HOST. Require a
-    # >=42-batch (~3 closures) sample; on a slower host skip rather
-    # than fail — a short sample is absence of evidence, not a leak
-    # (the cusum soak failed a green operator at batch 67 under an
-    # end-of-round steal burst with the old hard >=120 bar).
-    reached = bids[-1] if bids else 0
-    if reached < 42:
-        pytest.skip(f"soak host too slow: reached batch {reached} in budget")
-    totals = [seen[b][0] for b in bids]
+
+    seen = _soak_state(spark, tmp_path, 200, 300_000, agg_of)
+    totals = [total for total, _ in seen]
     # bound: at most 3 windows can be un-evicted at once (1 h span +
     # 10 min watermark, advancing 5 min/batch) × n_keys, with headroom
     assert max(totals) <= 3 * n_keys, f"state grew past bound: max={max(totals)}"
     # steady state, not monotone growth: the late tail obeys the same bound
-    late = [seen[b][0] for b in bids if b >= bids[-1] // 2]
-    assert late and max(late) <= 3 * n_keys
+    assert max(totals[100:]) <= 3 * n_keys
     # and the watermark genuinely evicts throughout the run
-    assert sum(seen[b][1] for b in bids) > 0, "no state eviction observed"
+    assert sum(removed for _, removed in seen) > 0, "no state eviction observed"
 
 
 class TestJpegGifStdlibDecode:
@@ -1768,15 +1723,9 @@ def test_stream_stateful_invariant_under_batch_splits(spark, sf_dir):
     keyed MERGE sink (same hazard class as the TWA stream): a 3-batch
     chronological split must produce the same serving table as the
     one-shot run."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _OUT_SCHEMA,
@@ -1786,34 +1735,11 @@ def test_stream_stateful_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("rollup_split_")
-    workdir = os.path.join(scratch_dir(), "rollup_split_src")
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts",
         F.col("value").cast("decimal(14,6)").cast("string").alias("value_dec"),
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "rollup_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
-    )
+    stream = _file_stream(spark, _chronological_parts(ev), "rollup_split_")
     rolled = stream.groupBy("user_id").applyInPandasWithState(
         _user_rollup,
         outputStructType=_OUT_SCHEMA,
@@ -1836,21 +1762,13 @@ def test_rocksdb_state_store_provider_agrees_with_default(spark):
     HDFS-backed in-memory map) must produce byte-identical aggregation
     results to the default provider on the same deterministic source,
     and its progress must prove RocksDB actually carried the state."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    def run(provider: str | None, tag: str):
-        ckpt = f"/tmp/rocks-agree-{tag}"
-        shutil.rmtree(ckpt, ignore_errors=True)
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
+    from cpt_database_sync_spark.streaming.incremental import _pinned, run_stream
+
+    def run(provider: str | None):
+        key = "spark.sql.streaming.stateStore.providerClass"
+        with _pinned(spark, {key: provider} if provider else {}):
             stream = (
                 spark.readStream.format("rate-micro-batch")
                 .option("rowsPerBatch", 100)
@@ -1875,35 +1793,14 @@ def test_rocksdb_state_store_provider_agrees_with_default(spark):
                 for r in df.collect():
                     state[(r.w, r.k)] = (r.n, r.sv)
 
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-            progress = q.lastProgress
-            q.stop()
-            return state, progress
-        finally:
-            if provider:
-                if prev is None:
-                    spark.conf.unset(
-                        "spark.sql.streaming.stateStore.providerClass"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass", prev
-                    )
-            shutil.rmtree(ckpt, ignore_errors=True)
+            return state, run_stream(agg, sink, "update")[-1]
 
     rocks_cls = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    default_state, _ = run(None, "default")
-    rocks_state, rocks_progress = run(rocks_cls, "rocksdb")
+    default_state, _ = run(None)
+    rocks_state, rocks_progress = run(rocks_cls)
     assert default_state and rocks_state == default_state
     metrics = rocks_progress["stateOperators"][0].get("customMetrics", {})
     assert any("rocksdb" in k.lower() for k in metrics), (
@@ -2567,78 +2464,28 @@ def test_catalog_persist_round_trip(spark, sf_dir):
     ), "demonstration database leaked past the round-trip"
 
 
-def test_stream_cusum_soak_state_bounded_over_200_batches(spark):
-    """Second soak target (VERDICT r8 next #6): stream_cusum's day-window
-    eviction — the freshest state-lifecycle claim — observed over 200+
-    micro-batches instead of the 3-batch gate. Event time advances 4 h
-    per batch, so a day window closes every ~6 batches under the 10-min
-    watermark; across ~33 simulated days the state store must hold only
-    the OPEN day windows (at most 2 per event_type at any instant, plus
-    the store's per-key row factor), never the whole calendar, and must
-    evict continuously."""
-    import os
-    import shutil
-    import time
-
+def test_stream_cusum_soak_state_bounded_over_200_batches(spark, tmp_path):
+    """Second soak target: stream_cusum's day-window eviction observed
+    over 200 micro-batches instead of the 3-batch gate. Event time
+    advances 4 h per batch, so a day window closes every ~6 batches
+    under the 10-min watermark; across ~33 simulated days the state
+    store must hold only the OPEN day windows (at most 2 per event_type
+    at any instant, plus the store's per-key row factor), never the
+    whole calendar, and must evict continuously."""
     from pyspark.sql import functions as F
 
     from cpt_database_sync_spark.streaming.windows import cusum_daily_stream
 
-    import tempfile
-
-    # per-run mkdtemp (ADVICE r10): isolate concurrent pytest runs
-    ckpt = tempfile.mkdtemp(
-        prefix="cusum-soak-ckpt-",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
     n_types = 5
-    stream = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", 100)
-        .option("numPartitions", 2)
-        .option("advanceMillisPerBatch", 14_400_000)  # 4 h event time / batch
-        .load()
-        .select(
+
+    def agg_of(stream):
+        return cusum_daily_stream(stream.select(
             F.col("timestamp").alias("ts"),
             F.concat(F.lit("t"), (F.col("value") % n_types)).alias("event_type"),
-        )
-    )
-    q = (
-        cusum_daily_stream(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: df.count())
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    seen: dict[int, tuple] = {}
-    t0 = time.time()
-    try:
-        while time.time() - t0 < 240:
-            p = q.lastProgress
-            if p and p["stateOperators"]:
-                so = p["stateOperators"][0]
-                seen[p["batchId"]] = (so["numRowsTotal"], so["numRowsRemoved"])
-            if p and p["batchId"] >= 200:
-                break
-            time.sleep(0.05)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    bids = sorted(seen)
-    # The CLAIM under soak is the state lifecycle (bounded totals +
-    # continuous eviction), which holds over any prefix long enough to
-    # close several day windows (~6 batches/day). The batch count
-    # reached in the 240 s budget is a property of the HOST, not the
-    # operator: an end-of-round run under steal bursts reached batch 67
-    # of the original >=120 bar and failed a green operator. Require a
-    # >=36-batch (~6 simulated days) sample; on a slower host skip
-    # rather than fail — a short sample is absence of evidence, not a
-    # state leak.
-    reached = bids[-1] if bids else 0
-    if reached < 36:
-        pytest.skip(f"soak host too slow: reached batch {reached} in 240 s")
-    totals = [seen[b][0] for b in bids]
+        ))
+
+    seen = _soak_state(spark, tmp_path, 100, 14_400_000, agg_of)
+    totals = [total for total, _ in seen]
     # ≤ 2 open day windows per type (current day + the just-closed day
     # inside its 10-min watermark grace) with headroom for the store's
     # per-key row factor
@@ -2646,9 +2493,8 @@ def test_stream_cusum_soak_state_bounded_over_200_batches(spark):
     assert max(totals) <= bound, (
         f"state grew past open-days×types bound: max={max(totals)} > {bound}"
     )
-    late = [seen[b][0] for b in bids if b >= bids[-1] // 2]
-    assert late and max(late) <= bound, "late-run state exceeded steady-state bound"
-    assert sum(seen[b][1] for b in bids) > 0, "no day-window eviction observed"
+    assert max(totals[100:]) <= bound, "late-run state exceeded steady-state bound"
+    assert sum(removed for _, removed in seen) > 0, "no day-window eviction observed"
 
 
 class _FakeGroupState:
@@ -2678,21 +2524,42 @@ class _FakeGroupState:
         self._val = tuple(v)
 
 
+def test_watermark_us_is_zero_only_without_a_watermark():
+    """``_watermark_us`` reads 0 when the stream has no watermark — by
+    the ``_watermark_present`` flag or by ``getCurrentWatermarkMs``
+    raising ``PySparkRuntimeError`` — and lets any other error through."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from cpt_database_sync_spark.streaming.stateful import _watermark_us
+
+    state = _FakeGroupState()
+    state.wm_ms = 1234
+    assert _watermark_us(state) == 1_234_000
+    state._watermark_present = False
+    assert _watermark_us(state) == 0
+
+    def raising(exc):
+        def get():
+            raise exc
+
+        st = _FakeGroupState()
+        st.getCurrentWatermarkMs = get
+        return st
+
+    assert _watermark_us(raising(PySparkRuntimeError(message="no watermark"))) == 0
+    with pytest.raises(ValueError):
+        _watermark_us(raising(ValueError("not a missing watermark")))
+
+
 def test_stream_holt_invariant_under_batch_splits(spark, sf_dir):
     """stream_holt serves CUMULATIVE per-type forecast rows through the
     keyed MERGE sink; a multi-batch chronological split must produce a
     serving table BIT-EQUAL to the batch holt_linear_forecast (the
     batch≡stream discipline — oracle is the batch oracle verbatim)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from cpt_database_sync_spark.operators.timeseries import holt_linear_forecast
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _HOLT_OUT_SCHEMA,
@@ -2702,34 +2569,13 @@ def test_stream_holt_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("holt_split_")
-    workdir = os.path.join(scratch_dir(), "holt_split_src")
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "ts")
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "holt_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))  # pin batch order
-
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(spark, _chronological_parts(ev), "holt_split_")
         .withWatermark("ts", HOLT_MAX_DISORDER)
         .withColumn(
             "dn",
@@ -2989,11 +2835,6 @@ def test_stream_interval_coverage_invariant_under_batch_splits(spark, sf_dir):
     through the keyed MERGE sink; a multi-batch chronological split must
     produce a serving table BIT-EQUAL to the batch interval_coverage
     (the batch≡stream discipline — oracle is the batch oracle)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -3001,7 +2842,6 @@ def test_stream_interval_coverage_invariant_under_batch_splits(spark, sf_dir):
         IC_MOD_MIN,
         interval_coverage,
     )
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _IC_OUT_SCHEMA,
@@ -3011,34 +2851,13 @@ def test_stream_interval_coverage_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("ic_split_")
-    workdir = os.path.join(scratch_dir(), "ic_split_src")
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
         .select("user_id", "event_id", "ts")
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "ic_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(spark, _chronological_parts(ev), "ic_split_")
         .withWatermark("ts", IC_MAX_DISORDER)
         .select(
             "user_id",
@@ -3073,11 +2892,6 @@ def test_stream_concurrency_invariant_under_batch_splits(spark, sf_dir):
     the keyed MERGE sink; a multi-batch chronological split must produce
     a serving table BIT-EQUAL to the batch concurrency_peak (the
     batch≡stream discipline — oracle is the batch oracle)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -3085,7 +2899,6 @@ def test_stream_concurrency_invariant_under_batch_splits(spark, sf_dir):
         IC_MOD_MIN,
         concurrency_peak,
     )
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _CONC_OUT_SCHEMA,
@@ -3095,8 +2908,6 @@ def test_stream_concurrency_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("conc_split_")
-    workdir = os.path.join(scratch_dir(), "conc_split_src")
     ev = (
         load(spark, sf_dir, "events")
         .filter(
@@ -3106,27 +2917,8 @@ def test_stream_concurrency_invariant_under_batch_splits(spark, sf_dir):
         )
         .select("event_type", "event_id", "ts")
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "conc_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(spark, _chronological_parts(ev), "conc_split_")
         .withWatermark("ts", IC_MAX_DISORDER)
         .select(
             "event_type",
@@ -3245,16 +3037,10 @@ def test_stream_page_hinkley_invariant_under_batch_splits(spark, sf_dir):
     MERGE sink; a multi-batch chronological split must produce a serving
     table BIT-EQUAL to the batch page_hinkley (batch≡stream — the oracle
     is the batch oracle verbatim)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from cpt_database_sync_spark.operators.timeseries import page_hinkley
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.stateful import (
         _PH_OUT_SCHEMA,
@@ -3264,34 +3050,13 @@ def test_stream_page_hinkley_invariant_under_batch_splits(spark, sf_dir):
     )
     from cpt_database_sync_spark.streaming.windows import serve_keyed_stream
 
-    sweep_scratch("ph_split_")
-    workdir = os.path.join(scratch_dir(), "ph_split_src")
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .select("event_type", "ts")
     )
-    cuts = ["2024-01-10 00:00:00", "2024-01-20 00:00:00"]
-    parts = [
-        ev.filter(F.col("ts") <= cuts[0]),
-        ev.filter((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        ev.filter(F.col("ts") > cuts[1]),
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "ph_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))  # pin batch order
-
     stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(spark, _chronological_parts(ev), "ph_split_")
         .withWatermark("ts", HOLT_MAX_DISORDER)
         .withColumn(
             "dn",
@@ -3401,43 +3166,20 @@ def test_stream_benford_invariant_under_batch_splits(spark, sf_dir):
     multi-batch split of the order feed must produce an audit table
     BIT-EQUAL to the batch benford_check (batch≡stream — the oracle is
     the batch oracle verbatim, and counts are order-insensitive)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
 
     from cpt_database_sync_spark.operators.stats import (
         benford_check,
         benford_complete,
     )
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.windows import run_to_table
 
-    sweep_scratch("benford_split_")
-    workdir = os.path.join(scratch_dir(), "benford_split_src")
     orders = load(spark, sf_dir, "orders")
-    parts = [
-        orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)
-    ]
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "benford_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
+    parts = [orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)]
     digit = F.regexp_extract(F.col("o_totalprice").cast("string"), "[1-9]", 0)
     obs = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(spark, parts, "benford_split_")
         .filter(F.col("o_totalprice").isNotNull() & (digit != ""))
         .groupBy(
             F.col("o_orderpriority").alias("grp"),
@@ -3828,42 +3570,20 @@ def test_stream_kl_invariant_under_batch_splits(spark, sf_dir):
     so a multi-batch split of the event feed must finalize BIT-EQUAL
     to the batch kl_divergence (batch≡stream — the oracle is the batch
     _KL_SQL verbatim and kl_finalize is shared expression text)."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
 
     from cpt_database_sync_spark.operators.stats import (
         kl_divergence,
         kl_finalize,
     )
-    from cpt_database_sync_spark.sources.sync import scratch_dir, sweep_scratch
     from cpt_database_sync_spark.sources.tables import load
     from cpt_database_sync_spark.streaming.windows import run_to_table
 
-    sweep_scratch("kl_split_")
-    workdir = os.path.join(scratch_dir(), "kl_split_src")
     ev = load(spark, sf_dir, "events")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{workdir}/b{i}")
-    files_dir = os.path.join(scratch_dir(), "kl_split_landing")
-    os.makedirs(files_dir, exist_ok=True)
-    now = time.time()
-    for i in range(3):
-        src = glob.glob(f"{workdir}/b{i}/part-*.parquet")[0]
-        dst = f"{files_dir}/b{i}.parquet"
-        shutil.copy(src, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-
-    schema = spark.read.parquet(f"{workdir}/b0").schema
     counts = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files_dir)
+        _file_stream(
+            spark, [ev.filter(F.col("event_id") % 3 == i) for i in range(3)], "kl_split_"
+        )
         .filter(F.col("event_type").isNotNull() & F.col("user_id").isNotNull())
         .groupBy("event_type")
         .agg(
@@ -4204,6 +3924,48 @@ def test_package_builds_frames_only_through_local_frame():
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
+
+
+def test_package_runs_streams_only_through_run_stream():
+    """``.writeStream`` appears in one place, ``incremental_sync_stream``,
+    and the confs a query captures at start (shuffle partitions, the
+    trailing no-data batch) are set only by ``run_stream``, which
+    restores them: a stray set would leak into every later stream."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "cpt_database_sync_spark"
+    pinned = ("spark.sql.shuffle.partitions", "noDataMicroBatches")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        inside = {"incremental_sync_stream": set(), "run_stream": set()}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name in inside:
+                inside[node.name] |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(pkg)}:{getattr(node, 'lineno', 0)}"
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "writeStream"
+                and id(node) not in inside["incremental_sync_stream"]
+            ):
+                offenders.append(f"writeStream at {where}")
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", getattr(node.func, "id", None))
+                in ("set", "_pinned")
+                and id(node) not in inside["run_stream"]
+                and any(
+                    isinstance(c, ast.Constant)
+                    and isinstance(c.value, str)
+                    and any(k in c.value for k in pinned)
+                    for arg in node.args
+                    for c in ast.walk(arg)
+                )
+            ):
+                offenders.append(f"pinned conf set at {where}")
+    assert offenders == [], offenders
 
 
 # How each case's subprocess builds its session and finds the key.
